@@ -474,13 +474,10 @@ def main() -> None:
     # write it. A SPARK_GRAFT_BENCH_ONLY/PREFIX smoke run overwriting
     # it once clobbered a round's committed closing record (r13), and a
     # driver cpus=8 scaling run did the same in r14 (VERDICT_r14 #7) —
-    # so a non-default core count also skips the archive write (the
-    # run's own stdout JSON still carries its numbers + cpus).
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
-    default_cpus = cpus_env in (None, "", "*") or cpus_env == str(
-        os.cpu_count()
-    )
-    if not prefix and not only and default_cpus:
+    # so a run whose parallelism is not the host's core count also
+    # skips the archive write (its stdout JSON still carries cpus).
+    all_cores = spark.sparkContext.defaultParallelism == os.cpu_count()
+    if not prefix and not only and all_cores:
         try:
             full_path = os.path.join(
                 os.path.dirname(os.path.abspath(__file__)),

@@ -226,6 +226,23 @@ def test_clipmaps_equals_frames_and_brute_force(spark):
     assert via_clipmaps == want
 
 
+def test_clipmaps_clip_missing_probe_frame_raises(spark):
+    """A clip without the probe frame would be absent from the banded
+    candidates; hamming_pairs_clipmaps must fail loudly instead of
+    returning a result that silently lacks its pairs."""
+    from vsphere_event_streaming_spark.functions.dedup import (
+        hamming_pairs_clipmaps,
+    )
+
+    # clips 1 and 2 are identical on frames 1-2; clip 2 lacks frame 0
+    cdf = spark.createDataFrame(
+        [(1, [0, 1, 2], [5, 6, 7]), (2, [1, 2], [6, 7])],
+        "id long, fs array<int>, hs array<bigint>",
+    )
+    with pytest.raises(Exception, match="clip 2 has no hash for probe"):
+        hamming_pairs_clipmaps(cdf, "id", "fs", "hs", 1).collect()
+
+
 def test_avi_clip_synth_matches_frame_synth(spark):
     """synth_cell_avi_clip_hashes exploded == the per-frame
     synth_cell_avi_frame_hashes rows (they share _avi_clip_hash_walk;

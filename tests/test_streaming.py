@@ -894,6 +894,58 @@ def test_purge_segments_is_directory_drop(spark, tmp_path):
         svc.replay(10)
 
 
+def test_start_store_epoch_ids_resume_and_prefix(spark, tmp_path):
+    """start_store's epoch contract: one ``<prefix><epoch>`` id per
+    file at ``max_files_per_trigger=1``; a rerun on the same checkpoint
+    sees only the new file, and a fresh checkpoint with a fresh
+    ``batch_prefix`` restarts at epoch 0 in its own namespace."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        start_store,
+    )
+
+    tmp = str(tmp_path)
+    in_dir = f"{tmp}/in"
+    calls = []
+
+    def add(batch_df, batch_id):
+        calls.append((batch_id, sorted(r["k"] for r in batch_df.collect())))
+
+    t0 = time.time()
+
+    def put(k):
+        # one single-row file per epoch, written without a Spark job;
+        # distinct mtimes fix the file source's (mtime-ordered) epochs
+        os.makedirs(in_dir, exist_ok=True)
+        path = f"{in_dir}/part-{k}.parquet"
+        pq.write_table(pa.table({"k": pa.array([k], pa.int64())}), path)
+        os.utime(path, (t0 + k, t0 + k))
+
+    def run(ckpt, **kw):
+        q = start_store(
+            spark, add, in_dir, f"{tmp}/{ckpt}", "k long",
+            max_files_per_trigger=1, **kw,
+        )
+        assert q.awaitTermination(60)
+        got = list(calls)
+        calls.clear()
+        return got
+
+    put(0)
+    put(1)
+    assert run("ckpt") == [("b0", [0]), ("b1", [1])]
+    put(2)
+    assert run("ckpt") == [("b2", [2])]
+    assert run("ckpt") == []
+    assert run("ckpt2", batch_prefix="r2-") == [
+        ("r2-0", [0]), ("r2-1", [1]), ("r2-2", [2]),
+    ]
+
+
 def test_incremental_dedup_stream_across_batches(spark, tmp_path):
     """Streaming LshIndex: batch 2 dedups against batch 1's bands via
     the persisted index, and pair emission is per-epoch idempotent."""

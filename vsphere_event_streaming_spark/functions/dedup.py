@@ -113,19 +113,6 @@ def exact_dedup_keepers(
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingle strings of a document."""
-    ws = words(text)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(ws) - (n - 1), F.lit(0)))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(ws, (i + j).cast("int")) for j in range(n)]
-        ),
-    )
-    return F.array_distinct(grams)
-
-
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -1308,13 +1295,15 @@ def hamming_pairs_clipmaps(
        by all clips — is within the distance and its pigeonhole
        bands must collide: banding ONLY that frame is complete, and
        cuts probe rows by the frame count (×50 here) versus banding
-       every frame. A clip missing ``probe_frame`` is (loudly not:
-       silently) absent from candidates — hence the precondition.
+       every frame. A clip missing ``probe_frame`` (or with a NULL
+       hash there) raises inside the probe stage instead of silently
+       dropping out of the candidates.
 
     Versus the per-frame-table form: no groupBy exchange (rows arrive
     pre-grouped), the banded join probes one fingerprint per clip
     instead of every frame's, and the all-frames verify is two
-    broadcast-sized map-lookup joins instead of a per-frame fan-out
+    one-row-per-clip map-lookup joins (the planner picks their
+    strategy; no broadcast is forced) instead of a per-frame fan-out
     join pair + re-aggregate. The inline ``bit_count`` kill inside
     the banded join's stage is kept (the measured-critical ordering —
     see :func:`hamming_pairs_frames`)."""
@@ -1324,12 +1313,22 @@ def hamming_pairs_clipmaps(
     base = clips.select(F.col(id_col).alias("__id"), fm.alias("__fm"))
 
     def probe_rows(side: str) -> DataFrame:
+        fp = F.element_at("__fm", F.lit(probe_frame))
         fr = base.select(
             F.col("__id").alias(f"id_{side}"),
-            F.element_at("__fm", F.lit(probe_frame)).alias(
-                f"__fp_{side}"
-            ),
-        ).filter(F.col(f"__fp_{side}").isNotNull())
+            F.when(
+                fp.isNull(),
+                F.raise_error(
+                    F.concat(
+                        F.lit("hamming_pairs_clipmaps: clip "),
+                        F.col("__id").cast("string"),
+                        F.lit(f" has no hash for probe_frame {probe_frame}"),
+                    )
+                ),
+            )
+            .otherwise(fp)
+            .alias(f"__fp_{side}"),
+        )
         bands = _band_structs(f"__fp_{side}", max_hamming, n_bits)
         return fr.select(
             f"id_{side}",

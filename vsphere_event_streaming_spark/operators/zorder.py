@@ -21,19 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def interleave_bits(a: Column, b: Column, bits: int = 16) -> Column:
-    """Morton value of two non-negative ints already in [0, 2^bits):
-    bit j of ``a`` lands at position 2j+1, of ``b`` at 2j."""
-    z = F.lit(0).cast("long")
-    for j in range(bits):
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(a, j).bitwiseAND(F.lit(1)), 2 * j + 1)
-        ).bitwiseOR(
-            F.shiftleft(F.shiftright(b, j).bitwiseAND(F.lit(1)), 2 * j)
-        )
-    return z
-
-
 def z_value(
     df: DataFrame, col_a: str, col_b: str, bits: int = 12
 ) -> DataFrame:

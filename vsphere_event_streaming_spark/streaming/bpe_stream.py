@@ -1,14 +1,11 @@
 """Streaming incremental BPE vocabulary: BpeVocab driven by Structured
 Streaming (SURVEY §2.11 L12''', streaming form).
 
-Same topology as ``dedup_stream``: ``foreachBatch`` bridges the
-streaming engine's offset/checkpoint handling to the batch-idempotent
-store — a replayed epoch re-runs with the SAME batch_id and the
-per-epoch count write overwrites its own ``batch_id=`` partition, so
-an epoch retry cannot double-count words. Word counts are additive, so
-a retrain over the streamed store is bit-identical to a from-scratch
-train over everything ingested (``BpeVocab.train``; parity asserted in
-``tests/test_streaming.py``).
+Runs through :func:`~.store_stream.start_store`, whose epoch contract
+means an epoch retry cannot double-count words. Word counts are
+additive, so a retrain over the streamed store is bit-identical to a
+from-scratch train over everything ingested (``BpeVocab.train``;
+parity asserted in ``tests/test_streaming.py``).
 
 At 100 TB this is the tokenizer-refresh topology: crawl batches stream
 in, each epoch appends its vocabulary-bounded count table at constant
@@ -18,11 +15,12 @@ not per micro-batch) while the frozen merges keep tokenizing new data.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.bpe import BpeVocab
 from .dedup_stream import DOC_STREAM_SCHEMA
+from .store_stream import start_store
 
 
 def start_incremental_bpe_vocab(
@@ -30,21 +28,17 @@ def start_incremental_bpe_vocab(
     input_dir: str,
     vocab_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
     word_re: str | None = None,
 ) -> StreamingQuery:
     """Stream ``(doc_id, text)`` parquet batches into a BpeVocab.
 
-    CONTRACT (same as the dedup streams): ``checkpoint_dir`` and
-    ``vocab_dir`` are one unit — epoch ids are stable only per
-    checkpoint; to feed an existing store from a fresh checkpoint,
-    pass a fresh ``batch_prefix`` so new epochs land in their own
-    partition namespace. ``word_re`` pins the store's training
-    alphabet (default :data:`~..functions.bpe.WORD_RE`); a resumed
-    stream against a store built under a different alphabet fails at
-    construction (the BpeVocab marker check), not after mixed counts.
+    Epoch contract: :func:`~.store_stream.start_store`. ``word_re``
+    pins the store's training alphabet (default
+    :data:`~..functions.bpe.WORD_RE`); a resumed stream against a
+    store built under a different alphabet fails at construction (the
+    BpeVocab marker check), not after mixed counts.
     """
     store = (
         BpeVocab(spark, vocab_dir)
@@ -52,16 +46,7 @@ def start_incremental_bpe_vocab(
         else BpeVocab(spark, vocab_dir, word_re=word_re)
     )
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,12 +3,9 @@ Streaming (SURVEY §2.11 L12, streaming form).
 
 The batch-incremental ``LshIndex`` already gives exactly-once-shaped
 semantics (candidates computed before the write; per-batch partition
-overwrite makes retries idempotent). ``foreachBatch`` is the idiomatic
-Spark bridge: the streaming engine handles source offsets/checkpoints
-and replays a failed epoch with the SAME batch_id, which the index and
-the pairs sink both absorb by overwriting their own ``batch_id=``
-partition — so an epoch retry cannot double-ingest bands or duplicate
-candidate pairs.
+overwrite makes retries idempotent). Every starter here runs through
+:func:`~.store_stream.start_store`, whose epoch contract makes an epoch
+retry unable to double-ingest bands or duplicate candidate pairs.
 
 At 100 TB this is the crawl-ingest topology: a file/queue stream of
 document batches, each micro-batch banding against the full history at
@@ -22,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.dedup import LshIndex
+from .store_stream import start_store
 
 #: Schema the document stream must carry (the driver's documents
 #: parquet layout, minus derived columns).
@@ -35,7 +33,6 @@ def start_incremental_dedup(
     pairs_dir: str,
     checkpoint_dir: str,
     band_size: int = 2,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -45,25 +42,15 @@ def start_incremental_dedup(
     micro-batch, emits candidate pairs (new↔history ∪ new↔new) to
     ``pairs_dir/batch_id=<prefix><epoch>`` and ingests the batch's
     bands into the index. Both writes overwrite their own epoch
-    partition, so a replayed epoch (crash between the two writes, or a
-    restarted query re-running its last uncommitted epoch) converges
-    instead of duplicating.
-
-    CONTRACT: ``checkpoint_dir``, ``index_dir``, and ``pairs_dir`` are
-    one unit — epoch ids are stable only per checkpoint. Deleting or
-    swapping the checkpoint while keeping the index restarts epochs at
-    0, and the idempotent overwrite would then silently REPLACE
-    historical batches' partitions. To rebuild a stream against an
-    existing index, pass a fresh ``batch_prefix`` (e.g. ``"r2-"``) so
-    the new query's epochs land in their own partition namespace.
+    partition; ``index_dir`` and ``pairs_dir`` both belong to the
+    checkpoint unit of :func:`~.store_stream.start_store`'s CONTRACT.
     """
     index = LshIndex(spark, index_dir, band_size=band_size)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: str) -> None:
         # add_batch materializes candidates (localCheckpoint) and
         # releases its own persists, so nothing here leaks across
         # epochs and nothing re-reads the index after the band write
-        batch_id = f"{batch_prefix}{epoch_id}"
         pairs = index.add_batch(batch_df, batch_id=batch_id)
         # the batch_id column comes back at read time via partition
         # discovery on the directory name — storing it in the files
@@ -72,18 +59,10 @@ def start_incremental_dedup(
             f"{pairs_dir}/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        # one epoch per input file — the throughput bench uses this to
-        # force the per-batch index-growth path instead of one big epoch
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, process, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_candidate_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
@@ -104,7 +83,6 @@ def start_incremental_semantic_dedup(
     checkpoint_dir: str,
     threshold: float | None = None,
     n_bits: int = 6,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -116,9 +94,8 @@ def start_incremental_semantic_dedup(
     each micro-batch gets keep/drop decisions against everything seen
     so far (sign-LSH bucket join + exact cosine re-score, min-id
     dominance) written to ``decisions_dir/batch_id=<prefix><epoch>``,
-    then joins the index. Same epoch-partition idempotence contract
-    as the text form: a replayed epoch overwrites its own partitions
-    and converges.
+    then joins the index. Epoch contract:
+    :func:`~.store_stream.start_store`.
     """
     from ..functions.vectors import SEMANTIC_THRESHOLD, VectorLshIndex
 
@@ -129,23 +106,16 @@ def start_incremental_semantic_dedup(
         n_bits=n_bits,
     )
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_id = f"{batch_prefix}{epoch_id}"
+    def process(batch_df: DataFrame, batch_id: str) -> None:
         decisions = index.add_batch(batch_df, batch_id=batch_id)
         decisions.write.mode("overwrite").parquet(
             f"{decisions_dir}/batch_id={batch_id}"
         )
 
-    reader = spark.readStream.schema(VEC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, process, input_dir, checkpoint_dir, VEC_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_semantic_decisions(
@@ -160,39 +130,31 @@ def start_incremental_shingle_df(
     input_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream ``(doc_id, text)`` batches into a
     :class:`~..functions.dedup.ShingleDfStore` — the L41 novelty
     tier's monitoring topology (r9): each epoch collapses to additive
-    ``(sh, df)`` cells under its own idempotent ``batch_id=``
-    partition; the per-doc novelty of everything ingested reads off
-    the merged df table at any time (``store.novelty(union)``),
-    bit-identical to the batch q_ngram_novelty machinery (cell
-    additivity across doc-disjoint batches; parity asserted in
-    ``tests/test_streaming.py``). Same checkpoint/prefix contract as
-    :func:`start_incremental_dedup`."""
+    ``(sh, df)`` cells; the per-doc novelty of everything ingested
+    reads off the merged df table at any time
+    (``store.novelty(union)``), bit-identical to the batch
+    q_ngram_novelty machinery (cell additivity across doc-disjoint
+    batches; parity asserted in ``tests/test_streaming.py``). Epoch
+    contract: :func:`~.store_stream.start_store`."""
     from ..functions.dedup import ShingleDfStore, release_cached
 
     store = ShingleDfStore(spark, store_dir)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
+    def process(batch_df: DataFrame, batch_id: str) -> None:
+        store.add_batch(batch_df, batch_id=batch_id)
         # shingle_hash_arrays persists per batch; release across epochs
         release_cached()
 
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, process, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_term_stats(
@@ -200,37 +162,26 @@ def start_incremental_term_stats(
     input_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream ``(doc_id, text)`` batches into a
     :class:`~..functions.text.TermStatsStore` — the hybrid-retrieval
     serve topology (r10, VERDICT_r9 #7): each epoch collapses to the
-    additive BM25 corpus cells ``(term df) + (n_docs, token_sum)``
-    under its own idempotent ``batch_id=`` partition; BM25 over the
-    ingested corpus reads off the merged cells at any time
-    (``store.bm25(union)``), bit-identical to the batch
+    additive BM25 corpus cells ``(term df) + (n_docs, token_sum)``;
+    BM25 over the ingested corpus reads off the merged cells at any
+    time (``store.bm25(union)``), bit-identical to the batch
     ``bm25_scores`` (cell additivity across doc-disjoint batches;
-    parity asserted in ``tests/test_streaming.py``). Same
-    checkpoint/prefix contract as :func:`start_incremental_dedup`."""
+    parity asserted in ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.text import TermStatsStore
 
     store = TermStatsStore(spark, store_dir)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_exact_keepers(
@@ -238,37 +189,26 @@ def start_incremental_exact_keepers(
     input_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream ``(doc_id, text)`` batches into an
     :class:`~..functions.dedup.ExactDedupStore` — L1's ingest
     topology (r10): each epoch collapses to (min, sum)-mergeable
-    ``(nh, keeper_id, copies)`` cells under its own idempotent
-    ``batch_id=`` partition; the exact-dedup keeper table of
-    everything ingested reads off the merged cells at any time
+    ``(nh, keeper_id, copies)`` cells; the exact-dedup keeper table
+    of everything ingested reads off the merged cells at any time
     (``store.keepers()``), bit-identical to the batch
     ``exact_dedup_keepers`` (parity asserted in
-    ``tests/test_streaming.py``). Same checkpoint/prefix contract as
-    :func:`start_incremental_dedup`."""
+    ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.dedup import ExactDedupStore
 
     store = ExactDedupStore(spark, store_dir)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_bloom(
@@ -276,7 +216,6 @@ def start_incremental_bloom(
     input_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -284,13 +223,11 @@ def start_incremental_bloom(
     :class:`~..functions.sketches.BloomStore` keyed by the batch's
     distinct shingle hashes — the growing-benchmark decontamination
     topology (r11): each new eval suite lands as one epoch, collapses
-    to its distinct Bloom set-bit positions under an idempotent
-    ``batch_id=`` partition, and the merged ≤ m-row filter serves
-    membership probes at any time. SET-UNION merge: unlike the
-    count-additive stores, overlapping ingest is harmless (re-setting
-    a bit is a no-op), so suite revisions can simply re-ingest.
-    Same checkpoint/prefix contract as
-    :func:`start_incremental_dedup`."""
+    to its distinct Bloom set-bit positions, and the merged ≤ m-row
+    filter serves membership probes at any time. SET-UNION merge:
+    unlike the count-additive stores, overlapping ingest is harmless
+    (re-setting a bit is a no-op), so suite revisions can simply
+    re-ingest. Epoch contract: :func:`~.store_stream.start_store`."""
     from pyspark.sql import functions as F
 
     from ..functions.dedup import release_cached, shingle_hash_arrays
@@ -298,25 +235,19 @@ def start_incremental_bloom(
 
     store = BloomStore(spark, store_dir)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: str) -> None:
         sh = (
             shingle_hash_arrays(batch_df)
             .select(F.explode("sh_arr").alias("sh"))
             .distinct()
         )
-        store.add_batch(sh, batch_id=f"{batch_prefix}{epoch_id}", key_col="sh")
+        store.add_batch(sh, batch_id=batch_id, key_col="sh")
         release_cached()
 
-    reader = spark.readStream.schema(DOC_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, process, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 #: Schema a verified-pair stream must carry (the `lsh_verified_pairs`
@@ -329,7 +260,6 @@ def start_incremental_groups(
     input_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -340,27 +270,17 @@ def start_incremental_groups(
     history and emits candidates, the caller's
     :func:`~..functions.dedup.verify_candidate_pairs` re-scores them
     exactly, and each epoch of surviving pairs lands here — merged
-    into the stored connected-component labels under an idempotent
-    ``batch_id=`` partition, so ``store.labels()`` is the
-    keep-one-per-group table of everything ingested at any time,
-    bit-identical to batch ``dedup_groups`` over the union (pytest).
-    MIN-LATTICE merge: overlapping or replayed pair batches converge
-    (re-unioning merged pairs is a no-op). Same checkpoint/prefix
-    contract as :func:`start_incremental_dedup`."""
+    into the stored connected-component labels, so
+    ``store.labels()`` is the keep-one-per-group table of everything
+    ingested at any time, bit-identical to batch ``dedup_groups``
+    over the union (pytest). MIN-LATTICE merge: overlapping or
+    replayed pair batches converge (re-unioning merged pairs is a
+    no-op). Epoch contract: :func:`~.store_stream.start_store`."""
     from ..functions.dedup import GroupStore
 
     store = GroupStore(spark, store_dir)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(PAIR_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, PAIR_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

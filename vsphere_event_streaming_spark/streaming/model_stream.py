@@ -8,18 +8,16 @@ Two topologies, matching how real pipelines split train and serve:
 - **Serve path** (:func:`streaming_scores`): the trained micro-unit
   weights are frozen literals, and scoring is a PURE PROJECTION —
   `logreg_score` / `kmeans_assign` are stateless per-row folds, so
-  they compose with `readStream` directly (no foreachBatch, no state
-  store, watermark-free). Batch/stream score parity is exact by
+  they compose with `readStream` directly (no per-epoch callback, no
+  state store, watermark-free). Batch/stream score parity is exact by
   construction (same expression tree); asserted in
   ``tests/test_streaming.py``.
 - **Train path** (:func:`start_incremental_gram`): the quantized Gram
   cells are ADDITIVE BIGINTs, so the PCA store ingests per-epoch cell
-  batches through the same idempotent ``batch_id=`` partition
-  contract as every other index family (``bpe_stream`` /
-  ``dedup_stream``): a replayed epoch overwrites its own partition
-  and cannot double-count. Retraining over the streamed store is
-  bit-identical to from-scratch over everything ingested
-  (``GramStore.train``).
+  batches through :func:`~.store_stream.start_store`, like every
+  other store family, and cannot double-count. Retraining over the
+  streamed store is bit-identical to from-scratch over everything
+  ingested (``GramStore.train``).
 
 At 100 TB: the serve path is the quality-filter stage of an ingest
 topology (score-and-gate each crawl batch as it lands); the train
@@ -34,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.classifier import GramStore, logreg_score
+from .store_stream import start_store
 
 #: Schema of streamed embedding batches (the driver corpus's layout).
 EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>, label int"
@@ -60,23 +59,21 @@ def start_streaming_scoring(
     checkpoint_dir: str,
     query_name: str = "model_scores",
     threshold: float = 0.5,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Stream embedding parquet batches through the trained
     classifier into a memory sink (test/demo harness; production
     would writeStream to parquet/Kafka — the projection is
     sink-agnostic)."""
     stream = spark.readStream.schema(EMB_STREAM_SCHEMA).parquet(input_dir)
-    writer = (
+    return (
         streaming_scores(stream, w_micro, threshold=threshold)
         .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_gram(
@@ -84,29 +81,18 @@ def start_incremental_gram(
     input_dir: str,
     gram_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream ``(vec_id, embedding, label)`` parquet batches into a
-    :class:`GramStore` — same foreachBatch/epoch-idempotence contract
-    as ``bpe_stream.start_incremental_bpe_vocab`` (checkpoint_dir and
-    gram_dir are one unit; fresh checkpoint ⇒ fresh batch_prefix)."""
+    :class:`GramStore` (additive cells). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     store = GramStore(spark, gram_dir)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(EMB_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_pca_projection(
@@ -206,7 +192,6 @@ def start_incremental_quantile_cells(
     schema: str,
     value_col: str = "value",
     group_col: str = "event_type",
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -214,31 +199,22 @@ def start_incremental_quantile_cells(
     :class:`~..functions.sketches.QuantileCellStore` — the L39
     monitoring topology, the quantile twin of
     :func:`start_incremental_auc_cells`: each epoch collapses to
-    ≤QB_BUCKETS additive (group, bucket, count) cells appended under
-    its own idempotent ``batch_id=`` partition; the running per-group
-    quantiles read off the merged cells at any time
+    ≤QB_BUCKETS additive (group, bucket, count) cells; the running
+    per-group quantiles read off the merged cells at any time
     (``store.quantiles()``), bit-identical to the batch
     q_percentile_binned over everything ingested (cell additivity;
-    parity asserted in ``tests/test_streaming.py``)."""
+    parity asserted in ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.sketches import QuantileCellStore
 
     store = QuantileCellStore(
         spark, cells_dir, value_col=value_col, group_col=group_col
     )
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, schema,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_rate_cells(
@@ -249,7 +225,6 @@ def start_incremental_rate_cells(
     schema: str,
     type_col: str = "event_type",
     ts_col: str = "ts",
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -257,31 +232,22 @@ def start_incremental_rate_cells(
     :class:`~..functions.sketches.RateCellStore` — the T6d monitoring
     topology, the rate twin of
     :func:`start_incremental_quantile_cells`: each epoch collapses to
-    one additive BIGINT per (type, tumbling bucket) touched, appended
-    under its own idempotent ``batch_id=`` partition; the running
-    anomaly table reads off the merged cells at any time
+    one additive BIGINT per (type, tumbling bucket) touched; the
+    running anomaly table reads off the merged cells at any time
     (``store.anomalies()``), bit-identical to the batch
     q_events_anomaly over everything ingested (cell additivity;
-    parity asserted in ``tests/test_streaming.py``)."""
+    parity asserted in ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.sketches import RateCellStore
 
     store = RateCellStore(
         spark, cells_dir, type_col=type_col, ts_col=ts_col
     )
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, schema,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_cms_cells(
@@ -293,36 +259,26 @@ def start_incremental_cms_cells(
     key_col: str,
     depth: int = 4,
     width: int = 1024,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream keyed batches into a
     :class:`~..functions.sketches.CmsStore` — the L27 monitoring
     topology: each epoch collapses to ≤d×w additive (row, bucket, c)
-    cells appended under its own idempotent ``batch_id=`` partition;
-    the running sketch and point estimates read off the merged cells
-    at any time (``store.sketch()`` / ``store.estimate()``),
+    cells; the running sketch and point estimates read off the merged
+    cells at any time (``store.sketch()`` / ``store.estimate()``),
     bit-identical to a from-scratch cms_build over everything
     ingested (the textbook CMS cell-wise-sum merge; parity asserted
-    in ``tests/test_streaming.py``)."""
+    in ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.sketches import CmsStore
 
     store = CmsStore(spark, cells_dir, key_col, depth, width)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, schema,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_activity(
@@ -333,36 +289,26 @@ def start_incremental_activity(
     schema: str,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream event batches into an
     :class:`~..functions.sketches.ActivityStore` — the T6f retention
     topology, the first SET-UNION member of the store tier: each
-    epoch collapses to its distinct (user, day) rows under an
-    idempotent ``batch_id=`` partition; the running cohort-retention
-    table reads off the merged distinct rows at any time
-    (``store.retention()``), bit-identical to the batch
+    epoch collapses to its distinct (user, day) rows; the running
+    cohort-retention table reads off the merged distinct rows at any
+    time (``store.retention()``), bit-identical to the batch
     q_events_retention over everything ingested (parity asserted in
-    ``tests/test_streaming.py``)."""
+    ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.sketches import ActivityStore
 
     store = ActivityStore(spark, rows_dir, user_col=user_col, ts_col=ts_col)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        store.add_batch(batch_df, batch_id=f"{batch_prefix}{epoch_id}")
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir, schema,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_auc_cells(
@@ -373,25 +319,24 @@ def start_incremental_auc_cells(
     w_micro: list[int],
     positive_label: int = 0,
     n_buckets: int = 128,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Stream embedding batches through the frozen classifier into an
     :class:`~..functions.classifier.AucCellStore` — the L34-b
     monitoring topology: each epoch is scored by the stateless
-    projection, collapsed to ≤n_buckets additive (bin, cpos, cneg)
-    cells, and appended under its own idempotent ``batch_id=``
-    partition; the running corpus AUC reads off the merged cells at
-    any time (``store.auc()``), bit-identical to the batch
+    projection and collapsed to ≤n_buckets additive (bin, cpos, cneg)
+    cells; the running corpus AUC reads off the merged cells at any
+    time (``store.auc()``), bit-identical to the batch
     q_classifier_auc_binned over everything ingested (cell
-    additivity — the same contract as GramStore/BpeVocab; parity
-    asserted in ``tests/test_streaming.py``)."""
+    additivity, as for GramStore/BpeVocab; parity asserted in
+    ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.classifier import AucCellStore
 
     store = AucCellStore(spark, cells_dir, n_buckets=n_buckets)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: str) -> None:
         scored = batch_df.select(
             F.when(
                 F.col("label") == positive_label, F.lit(1.0)
@@ -400,18 +345,12 @@ def start_incremental_auc_cells(
             .alias("y"),
             logreg_score(F.col("embedding"), w_micro).alias("p"),
         )
-        store.add_batch(scored, batch_id=f"{batch_prefix}{epoch_id}")
+        store.add_batch(scored, batch_id=batch_id)
 
-    reader = spark.readStream.schema(EMB_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, process, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_ivfpq(
@@ -422,7 +361,6 @@ def start_incremental_ivfpq(
     centroids: DataFrame,
     books: list[list[list[float]]],
     d: int,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -430,31 +368,25 @@ def start_incremental_ivfpq(
     :class:`~..functions.vectors.IvfPqStore` — the serve-path ingest
     for the flagship ANN layout (VERDICT_r10 #3): under FROZEN coarse
     cells + FROZEN codebooks each epoch is assigned (one broadcast
-    join) and PQ-encoded (one Arrow pass) into its own idempotent
-    ``batch_id=`` partition, so the growing serving index never
-    re-reads history and a replayed epoch overwrites instead of
-    doubling. Probe ≡ rebuilt-index probe on doc-disjoint ingest
-    (asserted in ``tests/test_streaming.py``)."""
+    join) and PQ-encoded (one Arrow pass) into its own partition, so
+    the growing serving index never re-reads history. Probe ≡
+    rebuilt-index probe on doc-disjoint ingest (asserted in
+    ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`."""
     from ..functions.vectors import IvfPqStore
 
     store = IvfPqStore(spark, index_dir, centroids, books, d)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: str) -> None:
         store.add_batch(
             batch_df.select("vec_id", "embedding"),
-            batch_id=f"{batch_prefix}{epoch_id}",
+            batch_id=batch_id,
         )
 
-    reader = spark.readStream.schema(EMB_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, process, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_incremental_mrl(
@@ -463,7 +395,6 @@ def start_incremental_mrl(
     index_dir: str,
     checkpoint_dir: str,
     prefix_len: int,
-    available_now: bool = True,
     batch_prefix: str = "b",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
@@ -472,28 +403,23 @@ def start_incremental_mrl(
     for the Matryoshka prefix-column layout (the 16th store family,
     VERDICT_r11 #4). The prefix projection is a pure per-row
     function, so each epoch is one codegen ``slice`` over the batch
-    appended as its own idempotent ``batch_id=`` partition: no
-    trained state, no history read, no shuffle. Probe ≡ rebuilt
-    ``write_mrl_index`` probe on doc-disjoint ingest and the stage-1
-    scan stays prefix-only (asserted in ``tests/test_streaming.py``).
+    appended as its own partition: no trained state, no history read,
+    no shuffle. Probe ≡ rebuilt ``write_mrl_index`` probe on
+    doc-disjoint ingest and the stage-1 scan stays prefix-only
+    (asserted in ``tests/test_streaming.py``). Epoch contract:
+    :func:`~.store_stream.start_store`.
     """
     from ..functions.vectors import MrlStore
 
     store = MrlStore(spark, index_dir, prefix_len)
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
+    def process(batch_df: DataFrame, batch_id: str) -> None:
         store.add_batch(
             batch_df.select("vec_id", "embedding"),
-            batch_id=f"{batch_prefix}{epoch_id}",
+            batch_id=batch_id,
         )
 
-    reader = spark.readStream.schema(EMB_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    writer = stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_store(
+        spark, process, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,
+        batch_prefix, max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -61,12 +61,6 @@ def watch(
     return stream.filter(F.col("offset") >= F.lit(int(start_offset)))
 
 
-def watch_ndjson(stream: DataFrame) -> DataFrame:
-    """Project the stream to the NDJSON wire shape (one JSON text per
-    record, server.go:177-181) — the stored value verbatim."""
-    return stream.select(F.col("value"))
-
-
 def consume_ndjson(lines: DataFrame, value_col: str = "value") -> DataFrame:
     """The reference CLI client's decode loop (cmd/client/main.go:79-86,
     S5): NDJSON lines → typed CloudEvent envelopes.
