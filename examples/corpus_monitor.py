@@ -85,9 +85,9 @@ from vsphere_event_streaming_spark.functions.dedup import (  # noqa: E402
     GroupStore,
     LshIndex,
     ShingleDfStore,
-    release_cached,
     verify_candidate_pairs,
 )
+from vsphere_event_streaming_spark.state import release_cached  # noqa: E402
 from vsphere_event_streaming_spark.functions.classifier import (  # noqa: E402
     AucCellStore,
     train_logreg,

@@ -65,8 +65,8 @@ from vsphere_event_streaming_spark.functions.dedup import (  # noqa: E402
     contamination_report,
     exact_dedup_keepers,
     novelty_per_doc,
-    release_cached,
 )
+from vsphere_event_streaming_spark.state import release_cached  # noqa: E402
 from vsphere_event_streaming_spark.functions.sketches import (  # noqa: E402
     percentile_threshold_cell,
     quantile_bucket,

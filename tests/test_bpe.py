@@ -429,12 +429,17 @@ def test_bpe_vocab_refuses_markerless_partitions(spark, tmp_path):
     assert not os.path.isfile(os.path.join(path, BpeVocab.ALPHABET_FILE))
 
 
-def test_bpe_merge_table_trains_once_per_corpus_and_alphabet(spark):
+def test_bpe_merge_table_trains_once_per_corpus_and_alphabet(
+    spark, monkeypatch
+):
     """VERDICT_r8 #3: the four BPE queries share ONE trained merge
     table per (corpus fingerprint, alphabet) — running them all,
     twice, must train exactly twice total (default alphabet + full
     alphabet), not once per call; and the memoized merges must be
     the same object the direct training produces."""
+    from collections import OrderedDict
+
+    from vsphere_event_streaming_spark import state
     from vsphere_event_streaming_spark.queries import pipeline_queries as pq
     from vsphere_event_streaming_spark.functions.bpe import (
         WORD_RE_FULL,
@@ -442,52 +447,28 @@ def test_bpe_merge_table_trains_once_per_corpus_and_alphabet(spark):
         word_vocab,
     )
 
-    pq._BPE_MEMO.clear()
-    before = pq._BPE_TRAINING_TOTAL
+    monkeypatch.setattr(state, "_TRAINED", OrderedDict())
+    before = state.BUILDS["bpe"]
     for _ in range(2):
         pq.q_bpe_tokens(spark, SF_DIR).collect()
         pq.q_bpe_tokens_full(spark, SF_DIR).collect()
         pq.q_pack_bpe(spark, SF_DIR).collect()
         pq.q_pack_chunked(spark, SF_DIR).collect()
         pq.q_bpe_fertility(spark, SF_DIR).collect()
-    trained = pq._BPE_TRAINING_TOTAL - before
+    trained = state.BUILDS["bpe"] - before
     assert trained == 2, (
         f"expected exactly 2 trainings (one per alphabet), got {trained}"
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    keys = list(pq._BPE_MEMO)
+    keys = [k for kind, k in state._TRAINED if kind == "bpe"]
     assert len(keys) == 2
     default_key = next(k for k in keys if k[-2] is None)
     full_key = next(k for k in keys if k[-2] == WORD_RE_FULL)
-    assert pq._BPE_MEMO[default_key] == learn_bpe(word_vocab(docs))
-    assert pq._BPE_MEMO[full_key] == learn_bpe(
+    assert state._TRAINED["bpe", default_key] == learn_bpe(word_vocab(docs))
+    assert state._TRAINED["bpe", full_key] == learn_bpe(
         word_vocab(docs, word_re=WORD_RE_FULL)
     )
-
-
-def test_corpus_key_degraded_census_never_hits_the_memo(tmp_path):
-    """ADVICE r8: an OSError mid-census must yield a nonce-fresh
-    sentinel key — never a plausible partial key that could collide
-    with another degraded state and serve a stale model."""
-    from vsphere_event_streaming_spark.queries.model_queries import (
-        _corpus_key,
-    )
-
-    missing = str(tmp_path / "nope")
-    k1 = _corpus_key(missing)
-    k2 = _corpus_key(missing)
-    assert k1 != k2, "degraded keys must never be equal (memo-proof)"
-    assert k1[2][0][0] == "__unreadable__"
-    # a healthy census stays stable and table-disambiguated
-    d = tmp_path / "sf"
-    d.mkdir()
-    (d / "embeddings.parquet").write_bytes(b"x")
-    (d / "documents.parquet").write_bytes(b"x")
-    ke = _corpus_key(str(d))
-    kd = _corpus_key(str(d), table="documents.parquet")
-    assert ke == _corpus_key(str(d))
-    assert ke != kd
 
 
 def test_bpe_vocab_marker_only_dir_gets_typed_error(spark, tmp_path):

@@ -602,16 +602,16 @@ def test_model_memo_refreshes_on_in_place_corpus_rewrite(spark, tmp_path):
     FINGERPRINT, not the bare path — a corpus rewritten in place under
     the same sf_dir must train a fresh model, not serve the stale one."""
     from vsphere_event_streaming_spark.queries.model_queries import (
-        _corpus_key,
         q_kmeans_cluster,
     )
+    from vsphere_event_streaming_spark.state import corpus_key
 
     d = str(tmp_path)
     rows1 = [(i, [float(i % 5), float(i % 3)], i % 2) for i in range(40)]
     spark.createDataFrame(
         rows1, "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    k1 = _corpus_key(d)
+    k1 = corpus_key(d)
     a1 = {
         r["vec_id"]: r["cid"]
         for r in q_kmeans_cluster(spark, d).collect()
@@ -621,7 +621,7 @@ def test_model_memo_refreshes_on_in_place_corpus_rewrite(spark, tmp_path):
     spark.createDataFrame(
         rows2, "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    k2 = _corpus_key(d)
+    k2 = corpus_key(d)
     assert k1 != k2, "fingerprint failed to see the in-place rewrite"
     a2 = {
         r["vec_id"]: r["cid"]
@@ -820,19 +820,23 @@ def test_pca_ordered_rank_exhausted_lambdas_sort_last():
 
 def test_scree_reuses_gram_after_whiten_populates_memo(spark, monkeypatch):
     """ADVICE r9: q_embed_pca_scree's docstring promises ZERO extra
-    corpus passes, but a _WHITEN_MEMO hit with an empty _TRACE_MEMO
-    fell back to a full gram_micro recompute. Every _WHITEN_MEMO
-    populator now records the Gram-diagonal trace too — so running
+    corpus passes, but a whiten-memo hit without a memoized trace
+    fell back to a full gram_micro recompute. The one whiten model
+    entry carries the Gram-diagonal trace — so running
     q_embed_whiten FIRST and then the scree must never call
     gram_micro again."""
+    from collections import OrderedDict
+
+    from vsphere_event_streaming_spark import state
     from vsphere_event_streaming_spark.queries import model_queries as mq
 
-    mq._WHITEN_MEMO.clear()
-    mq._TRACE_MEMO.clear()
+    monkeypatch.setattr(state, "_TRAINED", OrderedDict())
     mq.q_embed_whiten(spark, SF_DIR).collect()
-    ck = mq._corpus_key(SF_DIR)
-    assert ck in mq._WHITEN_MEMO
-    assert ck in mq._TRACE_MEMO, "whiten populated the memo without the trace"
+    ck = ("whiten", state.corpus_key(SF_DIR))
+    assert ck in state._TRAINED
+    assert state._TRAINED[ck][3] is not None, (
+        "whiten populated the memo without the trace"
+    )
 
     def _boom(_emb):
         raise AssertionError(

@@ -800,20 +800,21 @@ def test_udtf_props_json_value_fidelity(spark):
 
 
 def test_release_cached_unpersists_dedup_intermediates(spark):
+    from vsphere_event_streaming_spark import state
     from vsphere_event_streaming_spark.functions import dedup
 
-    dedup.release_cached()  # start clean (dedup-module persists only)
+    state.release_cached()  # start clean (registered persists only)
     jvm_sc = spark.sparkContext._jsc.sc()
     before = jvm_sc.getPersistentRDDs().size()
     pairs = dedup.lsh_verified_pairs(_docs(spark), threshold=0.5)
     pairs.collect()
     assert jvm_sc.getPersistentRDDs().size() > before
-    released = dedup.release_cached()
+    released = state.release_cached()
     assert released >= 2  # shingle arrays + signatures at minimum
     # back to the pre-call footprint: other tests' caches untouched
     assert jvm_sc.getPersistentRDDs().size() == before
     # idempotent and safe to call with nothing cached
-    assert dedup.release_cached() == 0
+    assert state.release_cached() == 0
 
 
 def test_pii_scrub_counts_and_redaction(spark):
@@ -868,6 +869,7 @@ def test_repetition_profile_degenerate_vs_normal(spark):
 
 
 def test_contamination_flags_holdout_overlap(spark):
+    from vsphere_event_streaming_spark import state
     from vsphere_event_streaming_spark.functions import dedup
 
     docs = spark.createDataFrame(
@@ -884,7 +886,7 @@ def test_contamination_flags_holdout_overlap(spark):
         r["id"]: r
         for r in dedup.contamination_report(docs, bench, 0.5).collect()
     }
-    dedup.release_cached()
+    state.release_cached()
     assert out[1]["overlap"] == 1.0 and out[1]["contaminated"] == 1
     assert out[3]["n_hits"] == 0 and out[3]["contaminated"] == 0
     # doc 2 shares exactly the 'alpha beta gamma' shingle of its 4
@@ -1537,9 +1539,9 @@ def test_verify_candidate_pairs_rescoring(spark):
     from vsphere_event_streaming_spark.functions.dedup import (
         LshIndex,
         jaccard_pairs,
-        release_cached,
         verify_candidate_pairs,
     )
+    from vsphere_event_streaming_spark.state import release_cached
 
     docs = _docs(spark)
     import tempfile
@@ -1777,8 +1779,8 @@ def test_corpus_monitor_example_end_to_end(spark, tmp_path):
     # banding ∪ = batch banding, verified at the same threshold)
     from vsphere_event_streaming_spark.functions.dedup import (
         lsh_verified_pairs,
-        release_cached,
     )
+    from vsphere_event_streaming_spark.state import release_cached
     from vsphere_event_streaming_spark.operators.graph import dedup_groups
 
     docs = load(spark, sf, "documents")

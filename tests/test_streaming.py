@@ -1841,15 +1841,15 @@ def test_incremental_shingle_df_stream(spark, tmp_path):
     # shingle frames in the module cache registry (ADVICE r9: only
     # the streaming wrapper released per epoch; add_batch now
     # unpersists exactly the frames it registered)
-    from vsphere_event_streaming_spark.functions import dedup as _dedup
+    from vsphere_event_streaming_spark import state
 
-    cached_before = len(_dedup._CACHED)
+    state.release_cached()  # the novelty reads above are consumed
     man = ShingleDfStore(spark, f"{tmp_path}/sdf_manual")
     for b in range(3):
         man.add_batch(docs.filter(F.col("doc_id") % 3 == b), f"x{b}")
     man.add_batch(docs.filter(F.col("doc_id") % 3 == 1), "x1")  # replay
-    assert len(_dedup._CACHED) == cached_before, (
-        "ShingleDfStore.add_batch leaked persisted frames into _CACHED"
+    assert state.release_cached() == 0, (
+        "ShingleDfStore.add_batch leaked persisted frames into the registry"
     )
     assert {
         r["sh"]: r["df"] for r in man.df_table().collect()
@@ -2186,9 +2186,9 @@ def test_incremental_bloom_store_and_stream(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from vsphere_event_streaming_spark.functions.dedup import (
-        release_cached,
         shingle_hash_arrays,
     )
+    from vsphere_event_streaming_spark.state import release_cached
     from vsphere_event_streaming_spark.functions.sketches import (
         BloomStore,
         bloom_bits,
@@ -2525,8 +2525,8 @@ def test_incremental_group_store_and_stream(spark, tmp_path):
     from vsphere_event_streaming_spark.functions.dedup import (
         GroupStore,
         jaccard_pairs,
-        release_cached,
     )
+    from vsphere_event_streaming_spark.state import release_cached
     from vsphere_event_streaming_spark.operators.graph import dedup_groups
     from vsphere_event_streaming_spark.streaming.dedup_stream import (
         start_incremental_groups,
@@ -2654,10 +2654,10 @@ def test_text_store_ingest_survives_null_empty_cjk(spark, tmp_path):
         ExactDedupStore,
         ShingleDfStore,
         exact_dedup_keepers,
-        release_cached,
         shingle_df_cells,
         shingle_hash_arrays,
     )
+    from vsphere_event_streaming_spark.state import release_cached
     from vsphere_event_streaming_spark.functions.bpe import word_vocab
     from vsphere_event_streaming_spark.functions.sketches import BloomStore
     from vsphere_event_streaming_spark.functions.text import TermStatsStore

@@ -33,8 +33,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from vsphere_event_streaming_spark.functions.dedup import (  # noqa: E402
     lsh_candidate_pairs,
-    release_cached,
 )
+from vsphere_event_streaming_spark.state import release_cached  # noqa: E402
 from vsphere_event_streaming_spark.session import get_spark  # noqa: E402
 from vsphere_event_streaming_spark.streaming.dedup_stream import (  # noqa: E402
     read_candidate_pairs,

@@ -18,10 +18,8 @@ from pyspark.sql import functions as F
 
 from vsphere_event_streaming_spark.session import get_spark
 from vsphere_event_streaming_spark.tables import load
-from vsphere_event_streaming_spark.functions.dedup import (
-    _pruned_shingle_table,
-    release_cached,
-)
+from vsphere_event_streaming_spark.functions.dedup import _pruned_shingle_table
+from vsphere_event_streaming_spark.state import release_cached
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CAP = 5

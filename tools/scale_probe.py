@@ -33,6 +33,9 @@ from vsphere_event_streaming_spark.functions.dedup import (  # noqa: E402
     jaccard_pairs_pruned,
     lsh_candidate_pairs,
     lsh_verified_pairs,
+)
+from vsphere_event_streaming_spark.state import (  # noqa: E402
+    persist,
     release_cached,
 )
 from vsphere_event_streaming_spark.functions.sketches import (  # noqa: E402
@@ -265,7 +268,6 @@ def _cms_shape(docs):
     frame (the query callable takes (spark, sf_dir)): vocabulary-bound
     sketch build + exact top-20 probe from one persisted word-count
     table."""
-    from vsphere_event_streaming_spark.functions.dedup import _persist
     from vsphere_event_streaming_spark.functions.sketches import _bucket
 
     CMS_D, CMS_W = 4, 1024
@@ -277,7 +279,7 @@ def _cms_shape(docs):
             )
         ).alias("token")
     )
-    wc = _persist(
+    wc = persist(
         tok.groupBy("token").agg(F.count(F.lit(1)).alias("n_exact"))
     )
     cms = (
@@ -386,18 +388,14 @@ def _tpch_q1_shape(li):
 def _media_pairs_shape(docs):
     """q_dedup_media's exact shape: real PNG roundtrip dHash into the
     56-bit (MEDIA_HASH_BITS) Hamming-banded pairing (persisted hash
-    table, released by
-    the caller's release_cached)."""
-    from vsphere_event_streaming_spark.functions.dedup import (
-        _persist,
-        hamming_pairs,
-    )
+    table, released by the caller's release_cached)."""
+    from vsphere_event_streaming_spark.functions.dedup import hamming_pairs
     from vsphere_event_streaming_spark.queries.pipeline_queries import (
         MEDIA_HASH_BITS,
         MEDIA_MAX_HAMMING,
     )
 
-    ph = _persist(
+    ph = persist(
         phash_images(synth_cell_png_payloads(docs, "doc_id", "text"))
     )
     return hamming_pairs(
@@ -408,10 +406,7 @@ def _media_pairs_shape(docs):
 def _audio_pairs_shape(docs):
     """q_dedup_audio's exact shape: WAV roundtrip fingerprint into the
     56-bit banded pairing."""
-    from vsphere_event_streaming_spark.functions.dedup import (
-        _persist,
-        hamming_pairs,
-    )
+    from vsphere_event_streaming_spark.functions.dedup import hamming_pairs
     from vsphere_event_streaming_spark.functions.multimodal import (
         audio_fingerprints,
         synth_wav_payloads,
@@ -421,7 +416,7 @@ def _audio_pairs_shape(docs):
         AUDIO_MAX_HAMMING,
     )
 
-    fp = _persist(
+    fp = persist(
         audio_fingerprints(synth_wav_payloads(docs, "doc_id", "text"))
     )
     return hamming_pairs(
@@ -433,7 +428,6 @@ def _video_pairs_shape(docs):
     """q_dedup_video's exact shape: AVI walk + per-frame JPEG decode
     into frame-aligned banding + all-frames verify."""
     from vsphere_event_streaming_spark.functions.dedup import (
-        _persist,
         hamming_pairs_frames,
     )
     from vsphere_event_streaming_spark.queries.pipeline_queries import (
@@ -442,7 +436,7 @@ def _video_pairs_shape(docs):
         VIDEO_SAMPLE_MS,
     )
 
-    fh = _persist(
+    fh = persist(
         video_frame_hashes(
             synth_cell_avi_payloads(docs, "doc_id", "text"),
             every_ms=VIDEO_SAMPLE_MS,
@@ -650,7 +644,6 @@ def _semantic_cells_shape(emb):
     vector must share a cell, but the replicated corpus also has 10x
     the rows, so 10x the cells keep average cell size flat (the
     recipe's knob working as published)."""
-    from vsphere_event_streaming_spark.functions.dedup import _persist
     from vsphere_event_streaming_spark.functions.kmeans import (
         kmeans_assign,
         train_kmeans,
@@ -666,7 +659,7 @@ def _semantic_cells_shape(emb):
     # spread before the argmin, mirroring the declared query: the 1x
     # input is a single-partition persisted frame and the k-literal
     # interpreted argmin must not serialize on one thread
-    s = _persist(
+    s = persist(
         spread(emb).select(
             "vec_id",
             "embedding",
@@ -714,7 +707,6 @@ def _semantic_white_shape(emb):
         pca_topm_ordered,
         whiten_columns,
     )
-    from vsphere_event_streaming_spark.functions.dedup import _persist
     from vsphere_event_streaming_spark.functions.kmeans import (
         kmeans_assign,
         train_kmeans,
@@ -735,7 +727,7 @@ def _semantic_white_shape(emb):
     g = gram_micro(emb)
     d = 1 + max(i for i, _ in g)
     comps, lams = pca_topm_ordered(g, d, iters=PCA_ITERS, m=PCA_TOPM)
-    s = _persist(
+    s = persist(
         spread(emb).select(
             "vec_id",
             kmeans_assign(F.col("embedding"), cm).alias("cid"),
@@ -783,7 +775,6 @@ def _knn_classify_shape(emb):
     # table; this shape mirrors its plan on the replicated frame)
     from pyspark.sql import Window
 
-    from vsphere_event_streaming_spark.functions.dedup import _persist
     from vsphere_event_streaming_spark.functions.vectors import (
         cosine,
         dot,
@@ -794,7 +785,7 @@ def _knn_classify_shape(emb):
     )
     from vsphere_event_streaming_spark.tables import spread
 
-    s = _persist(
+    s = persist(
         spread(emb).select(
             "vec_id",
             (F.col("vec_id") % 4).cast("long").alias("label"),

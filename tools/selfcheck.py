@@ -24,6 +24,7 @@ sys.path.insert(0, ".")
 
 from vsphere_event_streaming_spark.registry import load_all  # noqa: E402
 from vsphere_event_streaming_spark.session import get_spark  # noqa: E402
+from vsphere_event_streaming_spark.state import release_cached  # noqa: E402
 from vsphere_event_streaming_spark.tables import TABLES  # noqa: E402
 
 
@@ -245,6 +246,7 @@ def main():
             ]
             spark_pdf = df.toPandas()
             df.unpersist()
+            release_cached()
             if qd.oracle is None:
                 guard = driver_guard(spark_pdf, None)
                 if guard:

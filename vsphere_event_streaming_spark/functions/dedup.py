@@ -26,40 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..state import persist, scoped
 from .text import HASH_MOD, md5_hash, words, ws_strip
-
-#: Corpus-sized intermediates this module persists (shingle arrays,
-#: minhash signatures, simhash tables). Persisting is deliberate —
-#: higher-order-function chains are interpreted and must not be
-#: re-evaluated per consumer — but library callers need a release
-#: path that does not nuke the whole Spark cache the way
-#: ``spark.catalog.clearCache()`` does. Strong references on purpose:
-#: the persisted frames are locals inside the operator functions, so
-#: anything weaker is collected the moment they return while the
-#: executor-side cache lives on — exactly the leak this list exists
-#: to free.
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    """persist() + register with :func:`release_cached`."""
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
-
-def release_cached() -> int:
-    """Unpersist every intermediate this module has persisted.
-
-    Call after the consuming action (pairs collected / written) to
-    return executor memory without touching other tables the
-    application may have cached. Returns the number released.
-    """
-    released = 0
-    while _CACHED:
-        _CACHED.pop().unpersist()
-        released += 1
-    return released
 
 #: (a, b) parameters for the minhash family h_i(x) = (a_i*x + b_i) mod p.
 #: Fixed, public constants — determinism across engines and runs.
@@ -226,7 +194,7 @@ def char_shingle_hash_arrays(
         F.sequence(F.lit(1), F.length(t) - (n - 1)),
         lambda i: md5_hash(t.substr(i.cast("int"), F.lit(n))),
     )
-    return _persist(
+    return persist(
         docs.select(
             F.col(id_col).alias("id"), F.array_distinct(sh).alias("sh_arr")
         ).withColumn("n_sh", F.size("sh_arr"))
@@ -365,7 +333,7 @@ def _pruned_shingle_table(
     broadcast + array_except — the jaccard_pairs_pruned plan notes) —
     shared by the symmetric (jaccard) and asymmetric (containment)
     pruned scorers so the pruned universe can never drift between
-    them. Caller releases via :func:`release_cached`."""
+    them. Caller releases via ``state.release_cached()``."""
     arrs = shingle_hash_arrays(docs, text_col, id_col, n)
     sh = arrs.select("id", F.explode("sh_arr").alias("sh"))
     freq_row = (
@@ -382,7 +350,7 @@ def _pruned_shingle_table(
         .withColumn("n_sh2", F.size("arr2"))
         .filter(F.col("n_sh2") > 0)
     )
-    return _persist(kept)
+    return persist(kept)
 
 
 def containment_pairs_pruned(
@@ -492,7 +460,7 @@ def shingle_hash_arrays(
         )
         % HASH_MOD,
     )
-    return _persist(
+    return persist(
         wh.select("id", F.array_distinct(sh).alias("sh_arr")).withColumn(
             "n_sh", F.size("sh_arr")
         )
@@ -576,7 +544,7 @@ def lsh_candidate_pairs(
     """L2 approximate: MinHash-LSH candidate pairs (a<b)."""
     # both join sides read sig: persist so the signature aggregation
     # (and everything under it) runs once, not once per side
-    sig = _persist(minhash_signatures(docs, text_col, id_col, n))
+    sig = persist(minhash_signatures(docs, text_col, id_col, n))
     return _band_collision_pairs(sig, band_size)
 
 
@@ -606,7 +574,7 @@ def lsh_verified_pairs(
     """
     arrs = shingle_hash_arrays(docs, text_col, id_col, n)
     sh = arrs.select("id", F.explode("sh_arr").alias("sh"))
-    sig = _persist(_signatures_from(sh))
+    sig = persist(_signatures_from(sh))
     cands = _band_collision_pairs(sig, band_size)
     return _rescore_pairs(cands, arrs, threshold)
 
@@ -712,7 +680,7 @@ def simhash_pairs(
     are the candidates; at web scale the same join is done per
     hamming-ball probe (fingerprint with one band dropped).
     """
-    st = _persist(simhash_table(docs, text_col, id_col))
+    st = persist(simhash_table(docs, text_col, id_col))
     a = st.select(F.col("id").alias("id_a"), "simhash")
     b = st.select(F.col("id").alias("id_b"), "simhash")
     return (
@@ -742,7 +710,7 @@ def simhash_pairs_hamming(
     """
     if not 0 <= max_hamming < 16:
         raise ValueError(f"max_hamming must be in [0, 16): {max_hamming}")
-    st = _persist(simhash_table(docs, text_col, id_col))
+    st = persist(simhash_table(docs, text_col, id_col))
     return hamming_pairs(st, "id", "simhash", max_hamming, n_bits=16)
 
 
@@ -1138,10 +1106,7 @@ def hamming_pairs_robust(
     # table twice): the over-cap frame is Zipf-head-tiny, so persist()
     # costs nothing and both the banded tier's anti-join and the star
     # tier's broadcast read the same cached rows.
-    # _persist, not a bare .persist() (ADVICE r8): the registry is
-    # what release_cached() frees — an unregistered cache lives until
-    # the DataFrame is GC'd, the exact leak _CACHED exists to prevent
-    deg = _persist(
+    deg = persist(
         table.groupBy(F.col(hash_col).alias("__fp"))
         .agg(
             F.count(F.lit(1)).alias("__c"),
@@ -1523,8 +1488,8 @@ def novelty_per_doc(
     drift.
 
     The returned plan reads a persisted shingle frame — the caller
-    must :func:`release_cached` after the consuming action, the same
-    contract as this module's pair functions. Short docs (< 3 words)
+    must call ``state.release_cached()`` after the consuming action,
+    the same contract as this module's pair functions. Short docs (< 3 words)
     report 0 shingles and novelty 0 via the greatest(1, n)-guarded
     division — never NaN."""
     sha = shingle_hash_arrays(docs)
@@ -1590,21 +1555,15 @@ class ShingleDfStore:
         """Collapse the batch to (sh, df) cells and persist them as
         an idempotent partition directory. Returns cells written."""
         part_dir = batch_partition_dir(batch_id)  # validates token
-        # shingle_hash_arrays registers a persisted frame in _CACHED;
-        # the eager localCheckpoint below is its LAST consumer, so
-        # release it here instead of leaking one cached frame per
-        # ingested batch for the life of the process (ADVICE r9 —
-        # only the streaming wrapper called release_cached per
-        # epoch; direct multi-batch ingestion never did). Unpersist
-        # exactly the frames THIS call registered: a blanket
-        # release_cached() would clobber cached intermediates a
-        # concurrent dedup pipeline in the same process still needs.
-        mark = len(_CACHED)
-        cells = shingle_df_cells(docs).localCheckpoint(eager=True)
+        # the eager localCheckpoint is the LAST consumer of the
+        # shingle frame shingle_hash_arrays persists, so release it
+        # here instead of leaking one cached frame per ingested batch;
+        # scoped, because a blanket release_cached() would clobber
+        # intermediates a concurrent dedup pipeline still needs
+        with scoped():
+            cells = shingle_df_cells(docs).localCheckpoint(eager=True)
         n = cells.count()
         cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        while len(_CACHED) > mark:
-            _CACHED.pop().unpersist()
         return n
 
     def df_table(self) -> DataFrame:
@@ -1632,8 +1591,8 @@ class ShingleDfStore:
         the exact q_ngram_novelty output columns and semantics.
 
         The returned plan reads a persisted shingle frame: the caller
-        must :func:`release_cached` after the consuming action, the
-        same contract as this module's pair functions."""
+        must call ``state.release_cached()`` after the consuming
+        action, the same contract as this module's pair functions."""
         return novelty_per_doc(docs, self.df_table())
 
 

@@ -368,12 +368,11 @@ def semantic_dedup(
     """
     # The sig projection (n_bits interpreted-lambda dot products per
     # vector) feeds three consumers (both join sides + the output);
-    # persist it once — tracked in the dedup tier's registry so
-    # release_cached() frees it. A/B at sf0.1: 1.52 s recomputed vs
-    # 0.87 s persisted.
-    from .dedup import _persist
+    # persist it once, registered so state.release_cached() frees
+    # it. A/B at sf0.1: 1.52 s recomputed vs 0.87 s persisted.
+    from ..state import persist
 
-    s = _persist(
+    s = persist(
         emb.select(
             id_col,
             vec_col,
@@ -1049,10 +1048,11 @@ class VectorLshIndex:
         returns without re-reading an index that now contains the
         batch itself.
         """
-        from .dedup import _persist, batch_partition_dir
+        from ..state import persist
+        from .dedup import batch_partition_dir
 
         part_dir = batch_partition_dir(batch_id)  # validates token
-        new = _persist(
+        new = persist(
             batch.select(
                 F.col(id_col).cast("long").alias("vec_id"),
                 hyperplane_sig(F.col(vec_col), self.n_bits).alias("sig"),

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..session import tune
+from ..state import persist
 from ..tables import load
 
 
@@ -1242,9 +1243,7 @@ def q_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fans out over |vocab| rows, not the token stream, and the same
     # persisted table feeds the exact top-k — at 100 TB vocabulary is
     # orders of magnitude smaller than tokens
-    from ..functions.dedup import _persist
-
-    wc = _persist(
+    wc = persist(
         tok.groupBy("token").agg(F.count(F.lit(1)).alias("n_exact"))
     )
     cms = (
@@ -2315,10 +2314,10 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,6)"
     )
-    revenue = (
-        li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(vol).cast("double").alias("total_revenue"))
-        .persist()
+    revenue = persist(
+        li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
+            F.sum(vol).cast("double").alias("total_revenue")
+        )
     )
     best_row = revenue.agg(F.max("total_revenue")).first()
     supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -2599,7 +2598,7 @@ def bm25_scores(
     ).filter(F.col("term").isin(terms if terms is not None else _SEARCH_TERMS))
     tf = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     if persist_tf and dfreq is None:
-        tf = tf.persist()
+        tf = persist(tf)
     if dfreq is None:
         # df = the number of (doc, term) groups per term, which is
         # exactly tf's group count (r14): deriving it from tf drops

@@ -14,12 +14,12 @@ left-fold dot order) are documented in ``functions/classifier.py``.
 
 Scale: training is K single-aggregate corpus passes with O(K·d) /
 O(d²) driver state; application is one codegen fold per row — no
-shuffle, no Python (plan-audited).
+shuffle, no Python (plan-audited). Every trained model is built once
+per corpus fingerprint through ``state.trained`` — the memo policy
+lives in ``state.py``'s module docstring.
 """
 
 from __future__ import annotations
-
-import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +44,7 @@ from ..functions.kmeans import (
 )
 from ..registry import query
 from ..session import tune
+from ..state import corpus_key, persist, trained
 from ..tables import load
 
 #: Fixed training hyperparameters — pinned so the oracle text and the
@@ -71,66 +72,20 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load(spark, sf_dir, name)
 
 
-#: Trained-model memos keyed by CORPUS FINGERPRINT (weights/components
-#: are plain Python numbers — session-independent): sf_dir plus the
-#: embeddings parquet's (path, mtime_ns, size) census, so a corpus
-#: rewritten IN PLACE under the same path trains fresh instead of
-#: serving a stale model (ADVICE r7 — the plain-sf_dir key was an
-#: unguarded documented hazard). Gives every query in the tier the
-#: train-once/apply-many shape real pipelines have (bench times the
-#: application path; training cost is probed in SCALE.md).
-_WEIGHTS_MEMO: dict[tuple, list[int]] = {}
-_PCA_MEMO: dict[tuple, tuple[list[float], list[float]]] = {}
-
-
-def _corpus_key(sf_dir: str, table: str = "embeddings.parquet") -> tuple:
-    """Memo key: the named table's file census. A parquet dataset is
-    a file or a directory of part files; stat'ing every part (name,
-    mtime_ns, size) fingerprints an in-place rewrite in either
-    layout. O(#files) stat calls — trivial next to training.
-
-    An OSError anywhere in the census (unreadable dir, a part file
-    deleted mid-listdir) yields a SENTINEL key, never a partial one:
-    a census truncated at an arbitrary stat could collide with
-    another degraded state and serve a stale model after a partially
-    observed rewrite (ADVICE r8). The sentinel carries a fresh nonce
-    so degraded keys never hit the memo at all — the subsequent read
-    raises the real error with context."""
-    import os
-
-    path = os.path.join(sf_dir, table)
-    entries: list[tuple] = []
-    try:
-        if os.path.isdir(path):
-            for name in sorted(os.listdir(path)):
-                st = os.stat(os.path.join(path, name))
-                entries.append((name, st.st_mtime_ns, st.st_size))
-        else:
-            st = os.stat(path)
-            entries.append(("", st.st_mtime_ns, st.st_size))
-    except OSError:
-        entries = [("__unreadable__", next(_CORPUS_KEY_NONCE))]
-    return (sf_dir, table, tuple(entries))
-
-
-#: Monotonic nonce for degraded census keys — see :func:`_corpus_key`.
-_CORPUS_KEY_NONCE = itertools.count()
-
-
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    w = _WEIGHTS_MEMO.get(ck)
-    if w is None:
-        w = train_logreg(
+    w = trained(
+        "logreg",
+        corpus_key(sf_dir),
+        lambda: train_logreg(
             emb,
             positive_label=POSITIVE_LABEL,
             iters=LOGREG_ITERS,
             lr_num=LOGREG_LR[0],
             lr_den=LOGREG_LR[1],
             pos_weight=POS_WEIGHT,
-        )
-        _WEIGHTS_MEMO[ck] = w
+        ),
+    )
     return emb.select(
         F.col("vec_id"),
         F.col("label"),
@@ -523,18 +478,14 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     both iterations + deflation + re-orthogonalization +
     projections, all exactly."""
     emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    vs = _PCA_MEMO.get(ck)
-    if vs is None:
+
+    def build():
         g = gram_micro(emb)
         d = 1 + max((i for i, _ in g), default=-1)
         v1 = power_iteration(g, d, iters=PCA_ITERS)
-        vs = (
-            v1,
-            deflated_second_component(g, d, iters=PCA_ITERS, v1=v1),
-        )
-        _PCA_MEMO[ck] = vs
-    v1, v2 = vs
+        return v1, deflated_second_component(g, d, iters=PCA_ITERS, v1=v1)
+
+    v1, v2 = trained("pca2", corpus_key(sf_dir), build)
     return emb.select(
         "vec_id",
         "label",
@@ -547,8 +498,23 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: whitening / 2-D-plus visualization stage actually consumes.
 PCA_TOPM = 4
 
-#: Top-m components memo, same fingerprint-keyed contract as _PCA_MEMO.
-_PCA_TOPM_MEMO: dict[tuple, list[list[float]]] = {}
+
+def _whiten_model(spark: SparkSession, sf_dir: str):
+    """``emb, (comps, lams, n, trace)``: the top-PCA_TOPM
+    eigenvalue-ordered components of the trained integer Gram, their
+    Rayleigh quotients, the row count and the Gram-diagonal trace —
+    ONE Gram pass per corpus fingerprint (``state.trained``), shared
+    by every query built on the top-m components."""
+    emb = _t(spark, sf_dir, "embeddings")
+
+    def build():
+        g = gram_micro(emb)
+        d = 1 + max((i for i, _ in g), default=-1)
+        comps, lams = pca_topm_ordered(g, d, iters=PCA_ITERS, m=PCA_TOPM)
+        trace = sum(v for (i, j), v in g.items() if i == j)
+        return comps, lams, emb.count(), trace
+
+    return emb, trained("whiten", corpus_key(sf_dir), build)
 
 
 # ======================================================================
@@ -593,14 +559,7 @@ def q_embed_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration, Gram–Schmidt projection, the rank-exhaustion zero
     cutoff AND the ordering (``ORDER BY lam DESC, c`` over
     bit-identical λs) exactly."""
-    emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    comps = _PCA_TOPM_MEMO.get(ck)
-    if comps is None:
-        g = gram_micro(emb)
-        d = 1 + max((i for i, _ in g), default=-1)
-        comps, _ = pca_topm_ordered(g, d, iters=PCA_ITERS, m=PCA_TOPM)
-        _PCA_TOPM_MEMO[ck] = comps
+    emb, (comps, _, _, _) = _whiten_model(spark, sf_dir)
     return emb.select(
         "vec_id",
         "label",
@@ -611,10 +570,6 @@ def q_embed_pca_topm(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c in range(PCA_TOPM)
         ],
     )
-
-
-#: Trained-centroids memo, same fingerprint-keyed contract as _WEIGHTS_MEMO.
-_KMEANS_MEMO: dict[tuple, list[list[int]]] = {}
 
 
 def _pca_scree_oracle() -> str:
@@ -657,24 +612,7 @@ def q_embed_pca_scree(spark: SparkSession, sf_dir: str) -> DataFrame:
     diagonal trace exactly. Output is model-dimension-bounded (m
     rows) — the scree is a property of the trained artifact, not of
     any corpus row."""
-    emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    entry = _WHITEN_MEMO.get(ck)
-    if entry is None:
-        g = gram_micro(emb)
-        d = 1 + max((i for i, _ in g), default=-1)
-        comps, lams = pca_topm_ordered(
-            g, d, iters=PCA_ITERS, m=PCA_TOPM
-        )
-        entry = (comps, lams, emb.count())
-        _WHITEN_MEMO[ck] = entry
-        _TRACE_MEMO[ck] = sum(v for (i, j), v in g.items() if i == j)
-    trace = _TRACE_MEMO.get(ck)
-    if trace is None:
-        g = gram_micro(emb)
-        trace = sum(v for (i, j), v in g.items() if i == j)
-        _TRACE_MEMO[ck] = trace
-    _, lams, _ = entry
+    _, (_, lams, _, trace) = _whiten_model(spark, sf_dir)
     rows = [
         (
             r + 1,
@@ -693,10 +631,6 @@ def q_embed_pca_scree(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("lam", 6).alias("lam"),
         F.round("var_ratio", 6).alias("var_ratio"),
     )
-
-
-#: Gram-trace memo riding the same corpus fingerprint as _WHITEN_MEMO.
-_TRACE_MEMO: dict[tuple, int] = {}
 
 
 # ======================================================================
@@ -732,11 +666,11 @@ def q_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmeans_model(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    cm = _KMEANS_MEMO.get(ck)
-    if cm is None:
-        cm = train_kmeans(emb, k=K_CLUSTERS, iters=KMEANS_ITERS)
-        _KMEANS_MEMO[ck] = cm
+    cm = trained(
+        "kmeans",
+        corpus_key(sf_dir),
+        lambda: train_kmeans(emb, k=K_CLUSTERS, iters=KMEANS_ITERS),
+    )
     return emb, cm
 
 
@@ -803,12 +737,6 @@ WHERE ((('0x' || substr(md5('cbal:' || CAST(e.vec_id AS VARCHAR)), 1, 15))::BIGI
     )
 
 
-#: Per-cluster keep rates (SAMPLE_MOD micro-units), memoized with the
-#: model: rates derive from the k-row size aggregate collected ONCE at
-#: build time — not a per-call count job, and never a data-sized join.
-_CBAL_MEMO: dict[tuple, dict[int, int]] = {}
-
-
 @query("q_cluster_balanced", oracle=_cbal_oracle())
 def q_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-balanced downsampling over the trained k-means model:
@@ -840,9 +768,11 @@ def q_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sampling import SAMPLE_MOD, keep_bucket
 
     emb, cm = _kmeans_model(spark, sf_dir)
-    ck = _corpus_key(sf_dir)
-    rates = _CBAL_MEMO.get(ck)
-    if rates is None:
+
+    # per-cluster keep rates (SAMPLE_MOD micro-units), memoized with
+    # the model: they derive from the k-row size aggregate collected
+    # ONCE at build time — never a per-call job or a data-sized join
+    def build():
         sizes = {
             r["cid"]: r["n"]
             for r in emb.select(
@@ -854,11 +784,12 @@ def q_cluster_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
         n_total = sum(sizes.values())
         cap = (n_total + K_CLUSTERS - 1) // K_CLUSTERS
-        rates = {
+        return {
             cid: min(SAMPLE_MOD, cap * SAMPLE_MOD // n)
             for cid, n in sizes.items()
         }
-        _CBAL_MEMO[ck] = rates
+
+    rates = trained("cbal", corpus_key(sf_dir), build)
     rate_arr = F.array(
         *[F.lit(rates.get(c, 0)) for c in range(K_CLUSTERS)]
     )
@@ -994,8 +925,18 @@ def _sem_k(n: int) -> int:
     :data:`_SEM_K_SQL`."""
     return max(1, (n + SEM_CELL_TARGET - 1) // SEM_CELL_TARGET)
 
-#: Cell-model memo, same fingerprint-keyed contract as _KMEANS_MEMO.
-_SEM_KMEANS_MEMO: dict[tuple, list[list[int]]] = {}
+
+def _sem_kmeans_model(spark: SparkSession, sf_dir: str):
+    """``emb, cm``: the corpus-scaled SemDeDup cell model."""
+    emb = _t(spark, sf_dir, "embeddings")
+    cm = trained(
+        "sem_kmeans",
+        corpus_key(sf_dir),
+        lambda: train_kmeans(
+            emb, k=_sem_k(emb.count()), iters=SEM_KMEANS_ITERS
+        ),
+    )
+    return emb, cm
 
 
 def _sem_dedup_oracle() -> str:
@@ -1052,18 +993,10 @@ def q_dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     internally); a zero vector yields NaN cosine, which fails the
     >= threshold gate identically in both engines (fuzz-covered — the
     embeddings family auto-discovers this oracle)."""
-    from ..functions.dedup import _persist
     from ..functions.vectors import SEMANTIC_THRESHOLD, cosine
     from ..tables import spread
 
-    emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    cm = _SEM_KMEANS_MEMO.get(ck)
-    if cm is None:
-        cm = train_kmeans(
-            emb, k=_sem_k(emb.count()), iters=SEM_KMEANS_ITERS
-        )
-        _SEM_KMEANS_MEMO[ck] = cm
+    emb, cm = _sem_kmeans_model(spark, sf_dir)
     # spread BEFORE the argmin: the test tables are single-row-group
     # parquet (one scan partition), and the corpus-scaled-k
     # (_sem_k = ceil(N/SEM_CELL_TARGET)) interpreted-HOF argmin is
@@ -1071,7 +1004,7 @@ def q_dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thread vs ~0.2 s spread across the cores under the old fixed
     # k=64 (the q_dedup_semantic precedent; verify-skill gotcha);
     # the ratio shrinks with the scaled k but the spread still wins
-    s = _persist(
+    s = persist(
         spread(emb).select(
             "vec_id",
             "embedding",
@@ -1109,11 +1042,6 @@ def q_dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ======================================================================
 # L35''': whitening projection (unit-second-moment components)
 # ======================================================================
-#: Whitened-components memo, same fingerprint-keyed contract as
-#: _PCA_MEMO: (components, lambdas, n_rows).
-_WHITEN_MEMO: dict[tuple, tuple[list[list[float]], list[float], int]] = {}
-
-
 def _whiten_oracle() -> str:
     from ..functions.classifier import pca_topm_ordered_oracle
 
@@ -1162,26 +1090,9 @@ def q_embed_whiten(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bit-identical to the oracle's lam{c}/lamF CTEs — proven in
     pytest), N is one count, and application is PCA_TOPM codegen
     folds per row scaled by literals — no shuffle, no Python."""
-    from ..functions.classifier import pca_topm_ordered
-
-    emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    entry = _WHITEN_MEMO.get(ck)
-    if entry is None:
-        g = gram_micro(emb)
-        d = 1 + max((i for i, _ in g), default=-1)
-        comps, lams = pca_topm_ordered(
-            g, d, iters=PCA_ITERS, m=PCA_TOPM
-        )
-        entry = (comps, lams, emb.count())
-        _WHITEN_MEMO[ck] = entry
-        # ADVICE r9: every _WHITEN_MEMO populator also records the
-        # Gram-diagonal trace — q_embed_pca_scree's `trace is None`
-        # fallback otherwise re-runs gram_micro (a full corpus pass)
-        # whenever the whiten memo was filled HERE first
-        _TRACE_MEMO[ck] = sum(v for (i, j), v in g.items() if i == j)
-    comps, lams, n = entry
     from ..functions.classifier import whiten_columns
+
+    emb, (comps, lams, n, _) = _whiten_model(spark, sf_dir)
 
     return emb.select(
         "vec_id",
@@ -1295,32 +1206,14 @@ def q_dedup_semantic_white(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate all-zero whitened vector yields NaN cosine and fails
     the gate identically in both engines."""
     from ..functions.classifier import whiten_columns
-    from ..functions.dedup import _persist
     from ..functions.vectors import cosine
     from ..tables import spread
 
-    emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    cm = _SEM_KMEANS_MEMO.get(ck)
-    if cm is None:
-        cm = train_kmeans(
-            emb, k=_sem_k(emb.count()), iters=SEM_KMEANS_ITERS
-        )
-        _SEM_KMEANS_MEMO[ck] = cm
-    entry = _WHITEN_MEMO.get(ck)
-    if entry is None:
-        g = gram_micro(emb)
-        d = 1 + max((i for i, _ in g), default=-1)
-        comps, lams = pca_topm_ordered(
-            g, d, iters=PCA_ITERS, m=PCA_TOPM
-        )
-        entry = (comps, lams, emb.count())
-        _WHITEN_MEMO[ck] = entry
-        _TRACE_MEMO[ck] = sum(v for (i, j), v in g.items() if i == j)
-    comps, lams, n = entry
+    emb, cm = _sem_kmeans_model(spark, sf_dir)
+    _, (comps, lams, n, _) = _whiten_model(spark, sf_dir)
     # spread before the argmin (the q_dedup_semantic_cells lesson),
     # whitened coords computed in the SAME persisted projection
-    s = _persist(
+    s = persist(
         spread(emb).select(
             "vec_id",
             kmeans_assign(F.col("embedding"), cm).alias("cid"),
@@ -1393,7 +1286,7 @@ def q_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     reported for the OUTLIER_TOPK highest-residual vectors (rounded
     tie-break on vec_id, the registry top-k rule).
 
-    Shares the _WHITEN_MEMO trained artifact — ZERO extra training
+    Shares the _whiten_model trained artifact — ZERO extra training
     passes when any L35 query ran first; the scoring pass itself is
     PCA_TOPM+1 codegen folds per row feeding a
     TakeOrderedAndProject top-k (no global sort, no shuffle beyond
@@ -1406,19 +1299,7 @@ def q_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-assoc subtraction chain."""
     from ..functions.classifier import outlier_residual
 
-    emb = _t(spark, sf_dir, "embeddings")
-    ck = _corpus_key(sf_dir)
-    entry = _WHITEN_MEMO.get(ck)
-    if entry is None:
-        g = gram_micro(emb)
-        d = 1 + max((i for i, _ in g), default=-1)
-        comps, lams = pca_topm_ordered(
-            g, d, iters=PCA_ITERS, m=PCA_TOPM
-        )
-        entry = (comps, lams, emb.count())
-        _WHITEN_MEMO[ck] = entry
-        _TRACE_MEMO[ck] = sum(v for (i, j), v in g.items() if i == j)
-    comps, _, _ = entry
+    emb, (comps, _, _, _) = _whiten_model(spark, sf_dir)
     return (
         emb.select(
             "vec_id",

@@ -142,17 +142,11 @@ def start_incremental_shingle_df(
     q_ngram_novelty machinery (cell additivity across doc-disjoint
     batches; parity asserted in ``tests/test_streaming.py``). Epoch
     contract: :func:`~.store_stream.start_store`."""
-    from ..functions.dedup import ShingleDfStore, release_cached
+    from ..functions.dedup import ShingleDfStore
 
     store = ShingleDfStore(spark, store_dir)
-
-    def process(batch_df: DataFrame, batch_id: str) -> None:
-        store.add_batch(batch_df, batch_id=batch_id)
-        # shingle_hash_arrays persists per batch; release across epochs
-        release_cached()
-
     return start_store(
-        spark, process, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
+        spark, store.add_batch, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
         batch_prefix, max_files_per_trigger,
     )
 
@@ -230,19 +224,20 @@ def start_incremental_bloom(
     re-ingest. Epoch contract: :func:`~.store_stream.start_store`."""
     from pyspark.sql import functions as F
 
-    from ..functions.dedup import release_cached, shingle_hash_arrays
+    from ..functions.dedup import shingle_hash_arrays
     from ..functions.sketches import BloomStore
+    from ..state import scoped
 
     store = BloomStore(spark, store_dir)
 
     def process(batch_df: DataFrame, batch_id: str) -> None:
-        sh = (
-            shingle_hash_arrays(batch_df)
-            .select(F.explode("sh_arr").alias("sh"))
-            .distinct()
-        )
-        store.add_batch(sh, batch_id=batch_id, key_col="sh")
-        release_cached()
+        with scoped():
+            sh = (
+                shingle_hash_arrays(batch_df)
+                .select(F.explode("sh_arr").alias("sh"))
+                .distinct()
+            )
+            store.add_batch(sh, batch_id=batch_id, key_col="sh")
 
     return start_store(
         spark, process, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
