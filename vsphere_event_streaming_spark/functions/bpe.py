@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..store import BatchStore
+
 #: Token-boundary marker. Every character token is prefixed with it,
 #: so the merge pattern "·e ·l" cannot match inside "·xe ·l". Any
 #: character outside the training alphabet works; U+00B7 is visible in
@@ -429,7 +431,7 @@ per_doc AS MATERIALIZED (
     return ",".join(blocks)
 
 
-class BpeVocab:
+class BpeVocab(BatchStore):
     """Persistent incremental word-frequency store for BPE training —
     the trained-tokenizer family's incremental form, completing the
     story every trained artifact in this engine tells (text LSH
@@ -445,78 +447,28 @@ class BpeVocab:
     ``tests/test_bpe.py``). A production pipeline retrains on a cadence
     (per crawl epoch) rather than per batch; between retrains the
     frozen merge table keeps tokenizing new data (``apply_bpe`` is
-    stateless given the merges).
-
-    Same crash contract as the other indexes: a batch write OVERWRITES
-    its own ``batch_id=`` partition directory, so a replayed batch
-    converges instead of double-counting.
+    stateless given the merges). Storage contract: ``store.py``.
 
     The training ALPHABET (``word_re``) is part of the store's
     identity (ADVICE r7): counts taken under different alphabets are
     not additive (a ``[a-z]+`` batch silently drops the digits and
     apostrophes a ``WORD_RE_FULL`` batch counts), so the constructor
-    pins it, the first ``add_batch`` persists it as an ``_ALPHABET``
-    marker beside the partitions, and every later open of the same
-    path validates against the marker — mixing alphabets raises
-    instead of merging garbage.
+    pins it as the store's ``_ALPHABET`` identity marker
+    (``store.py``) — mixing alphabets raises instead of merging
+    garbage.
     """
 
     #: Alphabet marker filename, written once beside the batch dirs.
-    ALPHABET_FILE = "_ALPHABET"
+    ALPHABET_FILE = MARKER_FILE = "_ALPHABET"
+    MARKER_WHAT = "alphabet"
+    MARKER_REMNANT = (
+        "the training alphabet is ambiguous (crash remnant between"
+        " partition write and marker write)"
+    )
 
     def __init__(self, spark, path: str, word_re: str = WORD_RE) -> None:
-        self.spark = spark
-        self.path = path
-        self.word_re = word_re
-        self._check_alphabet(create=False)
-
-    def _check_alphabet(self, create: bool) -> None:
-        """Validate this handle's alphabet against the store marker;
-        with ``create=True``, write the marker if absent (first
-        ingest)."""
-        import os
-
-        marker = os.path.join(self.path, self.ALPHABET_FILE)
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                stored = fh.read().strip()
-            if stored != self.word_re:
-                raise ValueError(
-                    f"BpeVocab store {self.path!r} was built with"
-                    f" alphabet {stored!r}; refusing to mix with"
-                    f" {self.word_re!r} — counts under different"
-                    " alphabets are not additive"
-                )
-        elif create:
-            os.makedirs(self.path, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write(self.word_re)
-        elif self._has_batches():
-            # ADVICE r9: partitions without a marker are an
-            # ambiguous-alphabet store (a crash between the parquet
-            # write and the marker write leaves exactly this shape).
-            # Without this branch a later handle opened with a
-            # DIFFERENT word_re would validate nothing and its next
-            # add_batch would stamp the NEW alphabet's marker —
-            # silently merging non-additive counts, the exact
-            # garbage-merge the marker guards against. Mirror of
-            # GramStore._check_format's crash-remnant branch.
-            raise ValueError(
-                f"BpeVocab store {self.path!r} has batch_id="
-                f" partitions but no {self.ALPHABET_FILE} marker —"
-                " the training alphabet is ambiguous (crash remnant"
-                " between partition write and marker write);"
-                " refusing to open. Re-ingest the batches."
-            )
-
-    def _has_batches(self) -> bool:
-        import os
-
-        if not os.path.isdir(self.path):
-            return False
-        return any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        )
+        self.word_re = self.marker = word_re
+        super().__init__(spark, path)
 
     def add_batch(
         self, docs: DataFrame, batch_id: str, text_col: str = "text"
@@ -524,48 +476,16 @@ class BpeVocab:
         """Count the batch's words under the store's pinned alphabet
         and persist them as an idempotent partition directory.
         Returns distinct words written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        # validate BEFORE the write, create the marker only AFTER the
-        # first successful write (ADVICE r8): a failure between
-        # mkdir+marker and the parquet write would otherwise leave a
-        # marker-only directory that passes the isdir check and dies
-        # in vocab() with an opaque AnalysisException
-        self._check_alphabet(create=False)
-        counts = word_vocab(
-            docs, text_col, self.word_re
-        ).localCheckpoint(eager=True)
-        n = counts.count()
-        counts.write.mode("overwrite").parquet(
-            f"{self.path}/{part_dir}"
-        )
-        self._check_alphabet(create=True)
-        return n
+        return self._write(word_vocab(docs, text_col, self.word_re), batch_id)
 
     def vocab(self) -> DataFrame:
         """The merged word-frequency table over every ingested batch —
         exactly the full-corpus ``word_vocab`` by count additivity.
 
-        Raises a typed error on a store with no ingested batches —
-        checked against actual ``batch_id=`` PARTITIONS, not bare
-        directory existence (ADVICE r8: a crash-remnant directory
-        holding only markers must get this typed error, not the
-        opaque AnalysisException a bare ``read.parquet`` produces)."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"BpeVocab store has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
-        self._check_alphabet(create=False)
+        Raises a typed error on a store with no ingested batches,
+        including a marker-only crash remnant (ADVICE r8)."""
         return (
-            # the leading-underscore _ALPHABET marker is invisible to
-            # the parquet reader (Spark's hidden-file convention)
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy("word")
             .agg(F.sum("cnt").alias("cnt"))
         )

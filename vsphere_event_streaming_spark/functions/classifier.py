@@ -53,6 +53,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..store import BatchStore
 from .vectors import dot
 
 #: Fixed-point scale for weights and quantized gradients (micro-units).
@@ -421,7 +422,7 @@ def gram_micro(
     )
 
 
-class GramStore:
+class GramStore(BatchStore):
     """Persistent incremental Gram store — the PCA family's
     incremental form, completing the story every trained artifact in
     this engine tells (text LSH ``dedup.LshIndex``, vector LSH
@@ -435,103 +436,42 @@ class GramStore:
     store's Gram is bit-identical to the from-scratch Gram over the
     batches' union, and a retrain over it yields the bit-identical
     component (asserted in ``tests/test_classifier.py``). Per-batch
-    state is d² integers regardless of batch size.
-
-    Same crash contract as the other stores: a batch write OVERWRITES
-    its own ``batch_id=`` partition directory (idempotent replay).
+    state is d² integers regardless of batch size. Storage contract:
+    ``store.py``.
 
     The on-disk CELL FORMAT is part of the store's identity (ADVICE
     r8 — the BpeVocab ``_ALPHABET`` hazard class): r8 changed batches
     from full-matrix to upper-triangle-only cells, and a store mixing
     the two merges into an asymmetric Gram with no error (the mirror
     pass leaves (i,j) holding a stale lower-only sum while (j,i)
-    holds the merged value). A ``_FORMAT`` marker (``ut1``) is
-    written beside the partitions AFTER the first successful batch
-    write and validated on every open/merge, so a pre-r8 store — or
-    any foreign directory — raises instead of merging garbage.
+    holds the merged value). A ``_FORMAT`` marker (``ut1``) is the
+    store's identity marker (``store.py``), so a pre-r8 store — or any
+    foreign directory — raises instead of merging garbage.
     """
 
     #: Format marker filename + the current cell format tag.
-    FORMAT_FILE = "_FORMAT"
-    FORMAT = "ut1"  # upper-triangle micro-unit BIGINT cells, v1
-
-    def __init__(self, spark, path: str) -> None:
-        self.spark = spark
-        self.path = path
-        self._check_format(create=False)
-
-    def _check_format(self, create: bool) -> None:
-        """Validate the store's on-disk cell format marker; with
-        ``create=True``, write it if absent (first ingest). A store
-        directory holding batch partitions but NO marker is a pre-ut1
-        (full-matrix) store and is refused."""
-        import os
-
-        marker = os.path.join(self.path, self.FORMAT_FILE)
-        if os.path.isfile(marker):
-            with open(marker) as fh:
-                stored = fh.read().strip()
-            if stored != self.FORMAT:
-                raise ValueError(
-                    f"GramStore {self.path!r} holds cell format"
-                    f" {stored!r}; this engine reads {self.FORMAT!r}"
-                    " — refusing to merge incompatible cells"
-                )
-        elif create:
-            # called right after a successful batch write by THIS
-            # engine — the partitions present are ut1 by construction
-            os.makedirs(self.path, exist_ok=True)
-            with open(marker, "w") as fh:
-                fh.write(self.FORMAT)
-        elif self._has_batches():
-            raise ValueError(
-                f"GramStore {self.path!r} has batch partitions but no"
-                f" {self.FORMAT_FILE} marker — a pre-{self.FORMAT}"
-                " (full-matrix) store; refusing to merge: mixed"
-                " formats produce an asymmetric Gram. Re-ingest the"
-                " batches with this engine."
-            )
-
-    def _has_batches(self) -> bool:
-        import os
-
-        if not os.path.isdir(self.path):
-            return False
-        return any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        )
+    FORMAT_FILE = MARKER_FILE = "_FORMAT"
+    FORMAT = marker = "ut1"  # upper-triangle micro-unit BIGINT cells, v1
+    MARKER_WHAT = "cell format"
+    MARKER_REMNANT = (
+        f"a pre-{FORMAT} (full-matrix) store; mixed formats produce an"
+        " asymmetric Gram"
+    )
 
     def add_batch(
         self, emb: DataFrame, batch_id: str, vec_col: str = "embedding"
     ) -> int:
         """Aggregate the batch's Gram cells and persist them as an
-        idempotent partition directory. Returns cells written (≤ d²).
-        The format marker is written AFTER the first successful batch
-        write (never before — a marker-only directory must not exist,
-        the BpeVocab ADVICE-r8 ordering)."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        self._check_format(create=False)
-        cells = gram_cells(emb, vec_col).localCheckpoint(eager=True)
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        self._check_format(create=True)
-        return n
+        idempotent partition directory. Returns cells written (≤ d²)."""
+        return self._write(gram_cells(emb, vec_col), batch_id)
 
     def gram(self) -> dict[tuple[int, int], int]:
         """The merged Gram over every ingested batch — exactly the
         full-corpus :func:`gram_micro` by cell additivity (batches
         hold upper-triangle cells; the mirror happens here, after the
         merge)."""
-        if not self._has_batches():
-            raise ValueError(
-                f"GramStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
-        self._check_format(create=False)
         out = (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy("i", "j")
             .agg(F.sum("g").alias("g"))
             .collect()
@@ -1171,7 +1111,7 @@ def auc_from_cells(cells: DataFrame) -> DataFrame:
     )
 
 
-class AucCellStore:
+class AucCellStore(BatchStore):
     """Persistent incremental binned-AUC store — the EVALUATION
     tier's incremental form, completing the story every trained
     artifact in this engine tells (GramStore, BpeVocab, the LSH/IVF
@@ -1180,42 +1120,23 @@ class AucCellStore:
     contract, pytest-proven), so a monitor ingests each scored crawl
     batch as cells and reads the running corpus AUC from the merged
     table with per-batch state ≤ n_buckets integers, never per-row
-    state.
-
-    Same crash contract as the other stores: a batch write OVERWRITES
-    its own ``batch_id=`` partition directory (idempotent replay).
+    state. Storage contract: ``store.py``.
     """
 
     def __init__(self, spark, path: str, n_buckets: int = 128) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.n_buckets = n_buckets
 
     def add_batch(self, scored: DataFrame, batch_id: str) -> int:
         """Collapse the scored batch to cells and persist them as an
         idempotent partition directory. Returns cells written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        cells = auc_cells(scored, self.n_buckets).localCheckpoint(
-            eager=True
-        )
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(auc_cells(scored, self.n_buckets), batch_id)
 
     def cells(self) -> DataFrame:
         """The merged cells over every ingested batch — exactly the
         full-corpus :func:`auc_cells` by additivity."""
-        import os
-
-        if not os.path.isdir(self.path):
-            raise ValueError(
-                f"AucCellStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy("bin")
             .agg(
                 F.sum("cpos").alias("cpos"),

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..state import persist, scoped
+from ..store import BatchStore, batch_partition_dir
 from .text import HASH_MOD, md5_hash, words, ws_strip
 
 #: (a, b) parameters for the minhash family h_i(x) = (a_i*x + b_i) mod p.
@@ -809,31 +810,16 @@ def _band_table(sig: DataFrame, band_size: int) -> DataFrame:
     return sig.select("id", F.explode(band_keys).alias("band_key"))
 
 
-def batch_partition_dir(batch_id: str) -> str:
-    """``batch_id=<token>`` partition-directory name shared by every
-    incremental store in the engine (:class:`LshIndex`,
-    ``vectors.VectorLshIndex``/``IvfIndex``, ``bpe.BpeVocab``) —
-    validates the id is a filesystem-safe token so a hostile/garbled
-    batch id can't escape the store's directory."""
-    import re
-
-    if not re.fullmatch(r"[A-Za-z0-9._-]{1,128}", batch_id):
-        raise ValueError(
-            f"batch_id must be a filesystem-safe token: {batch_id!r}"
-        )
-    return f"batch_id={batch_id}"
-
-
-class LshIndex:
+class LshIndex(BatchStore):
     """Persistent MinHash-LSH index for INCREMENTAL near-dup.
 
     The pattern a growing 100 TB corpus actually runs: each crawl
     increment dedups against everything ingested so far WITHOUT
     recomputing the corpus — the index stores one (id, band_key) row
-    per doc per band (constant bytes/doc) as parquet, one
-    ``batch_id=<id>`` partition directory per ingested batch (the band
-    join shuffles on band_key either way; the batch partitioning is
-    what makes re-ingest idempotent, not a join-locality claim).
+    per doc per band (constant bytes/doc) as parquet, one partition
+    per ingested batch (the band join shuffles on band_key either way;
+    the batch partitioning is what makes re-ingest idempotent, not a
+    join-locality claim).
 
     ``add_batch`` returns the new batch's candidate pairs
     (new↔existing ∪ new↔new, canonicalized id_a < id_b) and writes the
@@ -842,33 +828,15 @@ class LshIndex:
     needs the text of both sides; at scale that is a point-join
     against the corpus store).
 
-    Crash consistency + idempotency: candidates are computed BEFORE
-    the write, so a retried batch never collides with its own
-    half-written bands; the write OVERWRITES the batch's own partition
-    directory, so retrying a batch (same ``batch_id``) leaves the
-    index row count unchanged instead of appending duplicate band rows
-    that would inflate every later band join.
+    Storage, crash and replay contract: ``store.py``. Retrying a
+    batch (same ``batch_id``) leaves the index row count unchanged
+    instead of appending duplicate band rows that would inflate every
+    later band join.
     """
 
     def __init__(self, spark, path: str, band_size: int = 2) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.band_size = band_size
-
-    def _existing(self) -> DataFrame | None:
-        import os
-
-        # explicit existence check — a corrupt/unreadable index must
-        # raise loudly, never silently degrade to batch-local dedup
-        if not os.path.isdir(self.path):
-            return None  # first batch: no index yet
-        return self.spark.read.schema(
-            "id long, band_key string"
-        ).parquet(self.path)
-
-    # thin alias kept for callers/tests addressing it through the
-    # class; the shared definition is module-level batch_partition_dir
-    _partition_dir = staticmethod(batch_partition_dir)
 
     def add_batch(
         self,
@@ -891,11 +859,17 @@ class LshIndex:
 
         if batch_id is None:
             batch_id = uuid.uuid4().hex
-        part_dir = f"{self.path}/{self._partition_dir(batch_id)}"
+        part = batch_partition_dir(self.path, batch_id)
         sig = minhash_signatures(docs, text_col, id_col, n).persist()
         new_bands = _band_table(sig, self.band_size).persist()
         try:
-            old = self._existing()
+            # an unreadable index raises here, never silently degrades
+            # to batch-local dedup; an empty one has no history yet
+            old = (
+                self._merged("id long, band_key string")
+                if self._batches()
+                else None
+            )
             x = new_bands.select(F.col("id").alias("id_a"), "band_key")
             within = (
                 x.join(
@@ -924,14 +898,12 @@ class LshIndex:
                 cands = within.unionByName(cross)
             else:
                 cands = within
-            # materialize candidates BEFORE mutating the index (see
-            # class docstring); localCheckpoint cuts the lineage so the
-            # result neither re-reads the index after the write nor
-            # holds the about-to-be-released persists
+            # materialize candidates BEFORE mutating the index;
+            # localCheckpoint cuts the lineage so the result neither
+            # re-reads the index after the write nor holds the
+            # about-to-be-released persists
             out = cands.distinct().localCheckpoint(eager=True)
-            # idempotent: a retry of this batch replaces its own
-            # partition; other batches' partitions are untouched
-            new_bands.write.mode("overwrite").parquet(part_dir)
+            self._overwrite(new_bands, part)
         finally:
             new_bands.unpersist()
             sig.unpersist()
@@ -1529,58 +1501,39 @@ def novelty_per_doc(
     )
 
 
-class ShingleDfStore:
+class ShingleDfStore(BatchStore):
     """Persistent incremental shingle-DF store — the NOVELTY tier's
-    (L41) incremental form, the eighth index/store family: each
-    ingested doc batch collapses to additive ``(sh, df)`` BIGINT
-    cells under its own idempotent ``batch_id=`` partition, and the
+    (L41) incremental form: each ingested doc batch collapses to
+    additive ``(sh, df)`` BIGINT cells in its own batch partition
+    (storage contract: ``store.py``), and the
     per-document novelty of the ingested corpus reads off the merged
     table at any time, bit-identical to the batch q_ngram_novelty
     machinery over the union (pytest). Per-batch state is one row per
     DISTINCT shingle in the batch — corpus-vocabulary-bounded, never
     per-occurrence.
 
-    Same crash contract as every other store: a batch write
-    OVERWRITES its own ``batch_id=`` partition directory (idempotent
-    replay). Scoring docs NOT yet ingested against the store is the
-    caller's contamination-style join; :meth:`novelty` scores the
-    ingested corpus itself, so the docs frame passed in must be the
-    union of the ingested batches."""
-
-    def __init__(self, spark, path: str) -> None:
-        self.spark = spark
-        self.path = path
+    Scoring docs NOT yet ingested against the store is the caller's
+    contamination-style join; :meth:`novelty` scores the ingested
+    corpus itself, so the docs frame passed in must be the union of
+    the ingested batches."""
 
     def add_batch(self, docs: DataFrame, batch_id: str) -> int:
         """Collapse the batch to (sh, df) cells and persist them as
         an idempotent partition directory. Returns cells written."""
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        # the eager localCheckpoint is the LAST consumer of the
-        # shingle frame shingle_hash_arrays persists, so release it
-        # here instead of leaking one cached frame per ingested batch;
-        # scoped, because a blanket release_cached() would clobber
-        # intermediates a concurrent dedup pipeline still needs
+        # the write's eager localCheckpoint is the LAST consumer of
+        # the shingle frame shingle_hash_arrays persists, so release
+        # it here instead of leaking one cached frame per ingested
+        # batch; scoped, because a blanket release_cached() would
+        # clobber intermediates a concurrent dedup pipeline still needs
         with scoped():
-            cells = shingle_df_cells(docs).localCheckpoint(eager=True)
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+            return self._write(shingle_df_cells(docs), batch_id)
 
     def df_table(self) -> DataFrame:
         """The merged (sh, df) table over every ingested batch —
         exactly the full-corpus :func:`shingle_df_cells` by
         additivity."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"ShingleDfStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy("sh")
             .agg(F.sum("df").alias("df"))
         )
@@ -1596,25 +1549,19 @@ class ShingleDfStore:
         return novelty_per_doc(docs, self.df_table())
 
 
-class ExactDedupStore:
-    """Persistent incremental exact-dedup keeper store — the TENTH
-    index/store family (r10): L1's keeper table is MERGEABLE cells
-    under (min, sum) — per normalized-text hash, ``keeper_id`` merges
+class ExactDedupStore(BatchStore):
+    """Persistent incremental exact-dedup keeper store (r10): L1's
+    keeper table is MERGEABLE cells under (min, sum) — per
+    normalized-text hash, ``keeper_id`` merges
     by MIN across doc-disjoint batches and ``copies`` is additive —
     so exact dedup over a growing corpus gets the same batch-by-batch
     treatment as every other tier. Each ingested batch collapses to
     one ``(nh, keeper_id, copies)`` cell per distinct normalized
-    text under its own idempotent ``batch_id=`` partition;
+    text in its own batch partition (storage contract: ``store.py``);
     :meth:`keepers` reads the merged table at any time, bit-identical
     to the batch :func:`exact_dedup_keepers` over the union (pytest).
     Per-batch state is one row per DISTINCT text — dedup's own
-    output size, never per-occurrence. Same crash contract as every
-    store: a batch write OVERWRITES its own partition directory
-    (idempotent replay)."""
-
-    def __init__(self, spark, path: str) -> None:
-        self.spark = spark
-        self.path = path
+    output size, never per-occurrence."""
 
     def add_batch(
         self, docs: DataFrame, batch_id: str, text_col: str = "text",
@@ -1623,32 +1570,15 @@ class ExactDedupStore:
         """Collapse the batch to per-hash keeper cells and persist
         them as an idempotent partition directory. Returns distinct
         texts written."""
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        cells = (
+        return self._write(
             docs.groupBy(
                 F.md5(normalize_text(F.col(text_col))).alias("nh")
-            )
-            .agg(
+            ).agg(
                 F.min(id_col).alias("keeper_id"),
                 F.count(F.lit(1)).alias("copies"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            batch_id,
         )
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
-
-    def _merged(self) -> DataFrame:
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"ExactDedupStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
-        return self.spark.read.parquet(self.path)
 
     def keepers(self) -> DataFrame:
         """The merged ``(keeper_id, copies)`` table over every
@@ -1665,14 +1595,14 @@ class ExactDedupStore:
         )
 
 
-class GroupStore:
-    """Persistent incremental dedup-GROUP label store — the 17th
-    index/store family (r13, VERDICT_r12 #3): connected-component
-    labels over the verified near-dup pair graph, maintained
-    batch-by-batch instead of recomputed per corpus version. Closes
-    the last batch-only step in the canonical incremental dedup
-    pipeline (LshIndex finds the pairs incrementally; this store
-    turns them into keep-one-per-group labels incrementally).
+class GroupStore(BatchStore):
+    """Persistent incremental dedup-GROUP label store (r13,
+    VERDICT_r12 #3): connected-component labels over the verified
+    near-dup pair graph, maintained batch-by-batch instead of
+    recomputed per corpus version. Closes the last batch-only step
+    in the canonical incremental dedup pipeline (LshIndex finds the
+    pairs incrementally; this store turns them into keep-one-per-group
+    labels incrementally).
 
     What makes CC labels incrementally mergeable: a component's label
     table is a CONTRACTION of its edge history — the star graph
@@ -1684,11 +1614,12 @@ class GroupStore:
     vertex with the new pairs — everything else provably cannot
     change), re-runs the distributed CC (``operators/graph.py``; the
     star inputs keep the diameter ≈2, so it converges in ~3 rounds)
-    and writes the affected labels under an idempotent ``batch_id=``
-    partition. The CC COMPUTE per batch is proportional to the
-    touched components; each ingest does also read the merged label
-    table once to find them — one columnar scan + min-aggregate over
-    an EDGES-sized (never corpus-sized) store.
+    and writes the affected labels to the batch's own partition
+    (storage contract: ``store.py``). The CC COMPUTE per batch is
+    proportional to the touched components; each ingest does also
+    read the merged label
+    table once to find them — one columnar scan + min-aggregate
+    over an EDGES-sized (never corpus-sized) store.
 
     Readout is a MIN-LATTICE merge: labels only ever decrease
     (components merge, never split; a merge adopts the smaller min),
@@ -1709,17 +1640,6 @@ class GroupStore:
     state — the foreachBatch topology is sequential by construction).
     """
 
-    def __init__(self, spark, path: str) -> None:
-        self.spark = spark
-        self.path = path
-
-    def _has_batches(self) -> bool:
-        import os
-
-        return os.path.isdir(self.path) and any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        )
-
     def add_batch(
         self,
         pairs: DataFrame,
@@ -1734,12 +1654,13 @@ class GroupStore:
         written."""
         from ..operators.graph import connected_components
 
-        part_dir = batch_partition_dir(batch_id)  # validates token
+        # reject a bad token before the CC rounds run their jobs
+        batch_partition_dir(self.path, batch_id)
         new_edges = pairs.select(
             F.col(id_a).alias("src"), F.col(id_b).alias("dst")
         )
         cc_in = new_edges
-        if self._has_batches():
+        if self._batches():
             cur = self.labels()
             nv = new_edges.select(
                 F.explode(F.array("src", "dst")).alias("doc_id")
@@ -1761,17 +1682,11 @@ class GroupStore:
                 )
             )
             cc_in = new_edges.unionByName(sub)
-        affected = (
-            connected_components(cc_in, "src", "dst")
-            .select(
-                F.col("vertex").alias("doc_id"),
-                F.col("component").alias("group_id"),
-            )
-            .localCheckpoint(eager=True)
+        affected = connected_components(cc_in, "src", "dst").select(
+            F.col("vertex").alias("doc_id"),
+            F.col("component").alias("group_id"),
         )
-        n = affected.count()
-        affected.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(affected, batch_id)
 
     def labels(self) -> DataFrame:
         """The merged ``(doc_id, group_id)`` label table over every
@@ -1779,13 +1694,8 @@ class GroupStore:
         dedup_groups` over the union of all ingested pairs, by the
         min-lattice argument in the class docstring. Raises a typed
         error on a store with no ingested batches."""
-        if not self._has_batches():
-            raise ValueError(
-                f"GroupStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy("doc_id")
             .agg(F.min("group_id").alias("group_id"))
         )

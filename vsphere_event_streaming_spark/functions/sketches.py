@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..store import BatchStore
+
 
 def _bucket(key: Column, row: int, width: int) -> Column:
     salted = F.concat_ws("#", key, F.lit(str(row)))
@@ -190,17 +192,14 @@ def quantiles_from_cells(
     return cum.groupBy(group_col).agg(F.max("n").alias("n"), *ests)
 
 
-class QuantileCellStore:
+class QuantileCellStore(BatchStore):
     """Persistent incremental binned-quantile store — L39's
     incremental form, the quantile twin of the AUC tier's
     ``classifier.AucCellStore``: per-batch state is ≤ QB_BUCKETS
     integers per group regardless of batch size, the merged store's
     cells equal the full-corpus :func:`quantile_cells` by additivity,
     and the running quantiles read off the merged table at any time.
-
-    Same crash contract as every other store: a batch write
-    OVERWRITES its own ``batch_id=`` partition directory (idempotent
-    replay)."""
+    Storage contract: ``store.py``."""
 
     def __init__(
         self,
@@ -211,8 +210,7 @@ class QuantileCellStore:
         width: float = QB_WIDTH,
         n_buckets: int = QB_BUCKETS,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.value_col = value_col
         self.group_col = group_col
         self.width = width
@@ -221,30 +219,19 @@ class QuantileCellStore:
     def add_batch(self, df: DataFrame, batch_id: str) -> int:
         """Collapse the batch to cells and persist them as an
         idempotent partition directory. Returns cells written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        cells = quantile_cells(
-            df, self.value_col, self.group_col, self.width, self.n_buckets
-        ).localCheckpoint(eager=True)
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(
+            quantile_cells(
+                df, self.value_col, self.group_col, self.width,
+                self.n_buckets,
+            ),
+            batch_id,
+        )
 
     def cells(self) -> DataFrame:
         """The merged cells over every ingested batch — exactly the
         full-corpus :func:`quantile_cells` by additivity."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"QuantileCellStore has no ingested batches:"
-                f" {self.path!r} — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy(self.group_col, "qb")
             .agg(F.sum("cnt").alias("cnt"))
         )
@@ -359,18 +346,14 @@ def anomalies_from_cells(
     )
 
 
-class RateCellStore:
+class RateCellStore(BatchStore):
     """Persistent incremental event-rate store — T6d's incremental
-    form, the ELEVENTH index/store family: per-batch state is one
-    BIGINT per (type, bucket) touched by the batch regardless of
-    batch size, the merged store's cells equal the full-corpus
-    :func:`rate_cells` by additivity, and the running anomaly table
-    reads off the merged cells at any time (``anomalies()`` ≡ the
-    batch q_events_anomaly over everything ingested).
-
-    Same crash contract as every other store: a batch write
-    OVERWRITES its own ``batch_id=`` partition directory (idempotent
-    replay)."""
+    form: per-batch state is one BIGINT per (type, bucket) touched
+    by the batch regardless of batch size, the merged store's cells
+    equal the full-corpus :func:`rate_cells` by additivity, and the
+    running anomaly table reads off the merged cells at any time
+    (``anomalies()`` ≡ the batch q_events_anomaly over everything
+    ingested). Storage contract: ``store.py``."""
 
     def __init__(
         self,
@@ -380,8 +363,7 @@ class RateCellStore:
         ts_col: str = "ts",
         window: str = RATE_WINDOW,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.type_col = type_col
         self.ts_col = ts_col
         self.window = window
@@ -389,30 +371,16 @@ class RateCellStore:
     def add_batch(self, df: DataFrame, batch_id: str) -> int:
         """Collapse the batch to rate cells and persist them as an
         idempotent partition directory. Returns cells written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        cells = rate_cells(
-            df, self.type_col, self.ts_col, self.window
-        ).localCheckpoint(eager=True)
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(
+            rate_cells(df, self.type_col, self.ts_col, self.window),
+            batch_id,
+        )
 
     def cells(self) -> DataFrame:
         """The merged cells over every ingested batch — exactly the
         full-corpus :func:`rate_cells` by additivity."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"RateCellStore has no ingested batches:"
-                f" {self.path!r} — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy(self.type_col, "window_start_us")
             .agg(F.sum("cnt").alias("cnt"))
         )
@@ -424,18 +392,15 @@ class RateCellStore:
         return anomalies_from_cells(self.cells(), self.type_col)
 
 
-class CmsStore:
+class CmsStore(BatchStore):
     """Persistent incremental Count-Min sketch — L27's incremental
-    form, the TWELFTH index/store family: per-batch state is ≤ d×w
-    integers regardless of batch size, the merged store's cells equal
+    form: per-batch state is ≤ d×w integers regardless of batch
+    size, the merged store's cells equal
     the full-corpus :func:`cms_cells` by additivity (the textbook CMS
     merge: cell-wise sum), and the running sketch / point estimates
     read off the merged table at any time, bit-identical to a
-    from-scratch :func:`cms_build` over everything ingested.
-
-    Same crash contract as every other store: a batch write
-    OVERWRITES its own ``batch_id=`` partition directory (idempotent
-    replay)."""
+    from-scratch :func:`cms_build` over everything ingested. Storage
+    contract: ``store.py``."""
 
     def __init__(
         self,
@@ -445,8 +410,7 @@ class CmsStore:
         depth: int = 4,
         width: int = 1024,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.key_col = key_col
         self.depth = depth
         self.width = width
@@ -454,30 +418,15 @@ class CmsStore:
     def add_batch(self, df: DataFrame, batch_id: str) -> int:
         """Collapse the batch to CMS cells and persist them as an
         idempotent partition directory. Returns cells written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        cells = cms_cells(
-            df, self.key_col, self.depth, self.width
-        ).localCheckpoint(eager=True)
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(
+            cms_cells(df, self.key_col, self.depth, self.width), batch_id
+        )
 
     def cells(self) -> DataFrame:
         """The merged cells over every ingested batch — exactly the
         full-corpus :func:`cms_cells` by additivity."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"CmsStore has no ingested batches:"
-                f" {self.path!r} — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy("row", "bucket")
             .agg(F.sum("c").alias("c"))
         )
@@ -572,20 +521,17 @@ def stickiness_from_days(
     )
 
 
-class ActivityStore:
+class ActivityStore(BatchStore):
     """Persistent incremental user-activity store — the retention
-    tier's incremental form, the THIRTEENTH index/store family and
-    the first with SET-UNION merge semantics: per-batch state is the
-    batch's distinct ``(user, day)`` rows, the merged store is the
+    tier's incremental form and the first store with SET-UNION merge
+    semantics: per-batch state is the batch's distinct
+    ``(user, day)`` rows, the merged store is the
     DISTINCT over every ingested batch (idempotent under replay AND
     under overlapping batches — re-observing an active (user, day)
     changes nothing, which is what makes activity a set, not a
     counter), and the running retention table reads off the merged
     rows at any time, bit-identical to the batch q_events_retention
-    over everything ingested.
-
-    Same crash contract as every other store: a batch write
-    OVERWRITES its own ``batch_id=`` partition directory."""
+    over everything ingested. Storage contract: ``store.py``."""
 
     def __init__(
         self,
@@ -594,8 +540,7 @@ class ActivityStore:
         user_col: str = "user_id",
         ts_col: str = "ts",
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.user_col = user_col
         self.ts_col = ts_col
 
@@ -603,31 +548,16 @@ class ActivityStore:
         """Collapse the batch to distinct activity rows and persist
         them as an idempotent partition directory. Returns rows
         written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        rows = activity_days(
-            df, self.user_col, self.ts_col
-        ).localCheckpoint(eager=True)
-        n = rows.count()
-        rows.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(
+            activity_days(df, self.user_col, self.ts_col), batch_id
+        )
 
     def days(self) -> DataFrame:
         """The merged distinct activity rows over every ingested
         batch — exactly the full-corpus :func:`activity_days` by the
         set-union law."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"ActivityStore has no ingested batches:"
-                f" {self.path!r} — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .select(self.user_col, "d")
             .distinct()
         )
@@ -742,19 +672,17 @@ def bloom_membership(
     )
 
 
-class BloomStore:
-    """Persistent incremental Bloom filter — the FIFTEENTH index/store
-    family and the second with SET-UNION merge semantics (after
-    ActivityStore): per-batch state is the batch's distinct set-bit
-    positions, the merged filter is the DISTINCT over every ingested
-    batch — bit-OR is set union, so the store is idempotent under
-    replay AND under overlapping batches (re-inserting a key sets the
-    same bits). The growing-benchmark decontamination shape: each new
-    eval suite ingests as a batch, and the merged ≤ m-row filter
-    broadcasts to probe any corpus with zero shuffle.
-
-    Same crash contract as every store: a batch write OVERWRITES its
-    own ``batch_id=`` partition directory."""
+class BloomStore(BatchStore):
+    """Persistent incremental Bloom filter — the second store with
+    SET-UNION merge semantics (after ActivityStore): per-batch state
+    is the batch's distinct set-bit positions, the merged filter is
+    the DISTINCT over every ingested batch — bit-OR is set union, so
+    the store is idempotent under replay AND under overlapping
+    batches (re-inserting a key sets the same bits). The
+    growing-benchmark decontamination shape: each new eval suite
+    ingests as a batch, and the merged ≤ m-row filter broadcasts to
+    probe any corpus with zero shuffle. Storage contract:
+    ``store.py``."""
 
     def __init__(
         self,
@@ -763,8 +691,7 @@ class BloomStore:
         m: int = BLOOM_M,
         h: int = BLOOM_H,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.m = m
         self.h = h
 
@@ -774,29 +701,12 @@ class BloomStore:
         """Collapse the batch to its distinct set-bit positions and
         persist them as an idempotent partition directory. Returns
         cells written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        cells = bloom_bits(df, key_col, self.m, self.h).localCheckpoint(
-            eager=True
-        )
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(bloom_bits(df, key_col, self.m, self.h), batch_id)
 
     def bits(self) -> DataFrame:
         """The merged filter over every ingested batch — exactly the
         full-corpus :func:`bloom_bits` by set union."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"BloomStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
-        return self.spark.read.parquet(self.path).select("pos").distinct()
+        return self._merged().select("pos").distinct()
 
     def membership(self, probes: DataFrame, key_col: str = "key"):
         """``probes`` + ``bloom_hit`` against the merged filter."""
@@ -911,21 +821,18 @@ def hll_estimates(
     )
 
 
-class HllStore:
-    """Persistent incremental HyperLogLog store — the 18th
-    index/store family (r13) and the max-lattice member of the
-    lattice-merge group (ActivityStore/BloomStore: set-union;
+class HllStore(BatchStore):
+    """Persistent incremental HyperLogLog store (r13) — the
+    max-lattice member of the lattice-merge group
+    (ActivityStore/BloomStore: set-union;
     GroupStore: min-label): per-batch state is the batch's ≤ m
     register cells per group, the merged sketch is the per-register
     MAX over every ingested batch — so replayed AND overlapping
     ingest both converge (re-hashing a key can never lower a
     register). The monitoring shape: distinct users / distinct URLs
     per key over a growing log at fixed memory, read at any time
-    without touching history.
-
-    Same crash contract as every store: a batch write OVERWRITES its
-    own ``batch_id=`` partition directory (idempotent replay);
-    per-batch state is ≤ m rows per group, never per-row."""
+    without touching history. Per-batch state is ≤ m rows per group,
+    never per-row. Storage contract: ``store.py``."""
 
     def __init__(
         self,
@@ -934,40 +841,24 @@ class HllStore:
         key_col: str,
         group_cols: list[str] | None = None,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.key_col = key_col
         self.group_cols = list(group_cols or [])
 
     def add_batch(self, df: DataFrame, batch_id: str) -> int:
         """Collapse the batch to register cells and persist them as
         an idempotent partition directory. Returns cells written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        cells = hll_cells(df, self.key_col, self.group_cols).localCheckpoint(
-            eager=True
+        return self._write(
+            hll_cells(df, self.key_col, self.group_cols), batch_id
         )
-        n = cells.count()
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
 
     def cells(self) -> DataFrame:
         """The merged register table over every ingested batch —
         exactly the full-corpus :func:`hll_cells` by MAX
         mergeability. Raises the store-family typed error on a store
         with no ingested batches."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"HllStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
         return (
-            self.spark.read.parquet(self.path)
+            self._merged()
             .groupBy(*self.group_cols, "bucket")
             .agg(F.max("r").alias("r"))
         )

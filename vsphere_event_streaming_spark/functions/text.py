@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..store import BatchStore
+
 HASH_MOD = 1_000_000_007
 HASH_MULT = 131
 
@@ -598,14 +600,14 @@ def url_domains(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 # ----------------------------------------------------------------------
 # Incremental BM25 corpus-stats store (the hybrid-retrieval serve path)
 # ----------------------------------------------------------------------
-class TermStatsStore:
-    """Persistent incremental BM25 corpus-stats store — the NINTH
-    index/store family (r10, VERDICT_r9 #7): hybrid retrieval's
+class TermStatsStore(BatchStore):
+    """Persistent incremental BM25 corpus-stats store (r10,
+    VERDICT_r9 #7): hybrid retrieval's
     corpus statistics ``(n_docs, avgdl, per-term df)`` are all
     additive integer cells across doc-disjoint batches, so they grow
     batch-by-batch like every other trained artifact in this engine.
-    Each ingested doc batch collapses to one parquet partition of
-    cells under its own idempotent ``batch_id=`` directory:
+    Each ingested doc batch collapses to one batch partition of cells
+    (storage contract: ``store.py``):
 
     - one row per DISTINCT term in the batch: ``(term, df, NULL,
       NULL)`` — df is the batch's distinct-doc count for the term
@@ -619,14 +621,9 @@ class TermStatsStore:
     ``bm25_scores`` in-plan aggregates EXACTLY; :meth:`bm25` feeds
     them through the same scoring expressions (the stats/dfreq
     overrides on ``advanced_queries.bm25_scores``), making serve ≡
-    batch bit-for-bit (pytest). Same crash contract as every store:
-    a batch write OVERWRITES its own partition directory (idempotent
-    replay); per-batch state is corpus-vocabulary-bounded (one row
-    per distinct term), never per-occurrence."""
-
-    def __init__(self, spark, path: str) -> None:
-        self.spark = spark
-        self.path = path
+    batch bit-for-bit (pytest). Per-batch state is
+    corpus-vocabulary-bounded (one row per distinct term), never
+    per-occurrence."""
 
     def add_batch(
         self, docs, batch_id: str, text_col: str = "text"
@@ -634,9 +631,6 @@ class TermStatsStore:
         """Collapse the batch to additive term/corpus cells and
         persist them as an idempotent partition directory. Returns
         distinct terms written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
         toks = F.split(F.lower(F.col(text_col)), "[^a-z]+")
         lens = docs.select(
             F.col("doc_id"), F.size(toks).alias("dl")
@@ -665,24 +659,8 @@ class TermStatsStore:
                 F.col("token_sum"), F.lit(0).cast("long")
             ).alias("token_sum"),
         )
-        cells = term_cells.unionByName(corpus_cell).localCheckpoint(
-            eager=True
-        )
-        n = cells.count() - 1
-        cells.write.mode("overwrite").parquet(f"{self.path}/{part_dir}")
-        return n
-
-    def _merged(self):
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"TermStatsStore has no ingested batches: {self.path!r}"
-                " — call add_batch() first"
-            )
-        return self.spark.read.parquet(self.path)
+        # minus the one corpus row
+        return self._write(term_cells.unionByName(corpus_cell), batch_id) - 1
 
     def df_table(self):
         """Merged ``(term, df)`` over every ingested batch — exactly

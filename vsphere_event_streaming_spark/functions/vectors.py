@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from ..store import BatchStore, batch_partition_dir
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢbᵢ in double precision, deterministic left-to-right fold."""
@@ -986,7 +988,7 @@ def ivfpq_topk(
     return knn_topk(cand, query, k=k, id_col=id_col, vec_col=vec_col)
 
 
-class VectorLshIndex:
+class VectorLshIndex(BatchStore):
     """Persistent sign-LSH vector index for INCREMENTAL semantic dedup
     — the embedding twin of the text tier's ``dedup.LshIndex`` (L12).
 
@@ -994,7 +996,7 @@ class VectorLshIndex:
     vector semantically redundant against everything seen so far?"
     without recomputing history. The index stores one
     ``(vec_id, sig, embedding)`` row per vector as parquet, one
-    ``batch_id=<id>`` partition per ingested batch; each new batch
+    partition per ingested batch; each new batch
     joins ONLY its sign-LSH buckets (never all-pairs) against history
     + itself and re-scores candidates with exact cosine.
 
@@ -1009,8 +1011,8 @@ class VectorLshIndex:
     revoke the earlier keep.
 
     Crash consistency mirrors LshIndex: decisions are computed before
-    the write and the write overwrites the batch's own partition, so a
-    retried batch converges instead of double-ingesting.
+    the write (storage contract: ``store.py``), so a retried batch
+    converges instead of double-ingesting.
     """
 
     SCHEMA = "vec_id long, sig int, embedding array<double>"
@@ -1022,17 +1024,9 @@ class VectorLshIndex:
         threshold: float = SEMANTIC_THRESHOLD,
         n_bits: int = 6,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.threshold = threshold
         self.n_bits = n_bits
-
-    def _existing(self) -> DataFrame | None:
-        import os
-
-        if not os.path.isdir(self.path):
-            return None  # first batch: no index yet
-        return self.spark.read.schema(self.SCHEMA).parquet(self.path)
 
     def add_batch(
         self,
@@ -1049,9 +1043,8 @@ class VectorLshIndex:
         batch itself.
         """
         from ..state import persist
-        from .dedup import batch_partition_dir
 
-        part_dir = batch_partition_dir(batch_id)  # validates token
+        part = batch_partition_dir(self.path, batch_id)
         new = persist(
             batch.select(
                 F.col(id_col).cast("long").alias("vec_id"),
@@ -1066,8 +1059,8 @@ class VectorLshIndex:
                 F.col("embedding").alias("__va"),
             )
         ]
-        hist = self._existing()
-        if hist is not None:
+        if self._batches():
+            hist = self._merged(self.SCHEMA)
             sides.append(
                 hist.select(
                     F.col("vec_id").alias("__ida"),
@@ -1105,14 +1098,12 @@ class VectorLshIndex:
             )
             .localCheckpoint(eager=True)
         )
-        new.select("vec_id", "sig", "embedding").write.mode(
-            "overwrite"
-        ).parquet(f"{self.path}/{part_dir}")
+        self._overwrite(new.select("vec_id", "sig", "embedding"), part)
         new.unpersist()
         return decisions
 
 
-class IvfIndex:
+class IvfIndex(BatchStore):
     """Persistent incremental IVF index — the TRAINED ANN family's
     incremental form, completing the story the hash family's
     ``VectorLshIndex`` and the text tier's ``dedup.LshIndex`` tell:
@@ -1122,22 +1113,17 @@ class IvfIndex:
     Centroids are trained once (``kmeans_fit``) and then FIXED — the
     production pattern: assignment of each new crawl batch is a
     broadcast join against the frozen centroid table, and the batch's
-    vectors land under ``batch_id=<id>/centroid_id=<cell>`` partition
-    directories. Search prunes on ``centroid_id`` exactly like
+    vectors land in ``centroid_id=<cell>`` directories inside the
+    batch's partition. Search prunes on ``centroid_id`` exactly like
     ``ivf_topk_indexed`` (partition pruning applies to any level of
     the directory layout), so probing still reads only nprobe cells
     of EVERY batch. Retrain-and-rebuild when drift accumulates is a
-    new index directory, not an in-place surgery.
-
-    Same crash contract as the other indexes: a batch write OVERWRITES
-    its own ``batch_id=`` directory, so a replayed batch converges.
+    new index directory, not an in-place surgery. Storage contract:
+    ``store.py``.
     """
 
-    SCHEMA = "vec_id long, embedding array<double>"
-
     def __init__(self, spark, path: str, centroids: DataFrame) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.centroids = centroids
 
     def add_batch(
@@ -1149,9 +1135,6 @@ class IvfIndex:
     ) -> int:
         """Assign a batch to the frozen centroids and append it as its
         own idempotent partition directory. Returns rows written."""
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
         assigned = assign_centroids(
             batch.select(
                 F.col(id_col).cast("long").alias("vec_id"),
@@ -1161,12 +1144,7 @@ class IvfIndex:
             "vec_id",
             "embedding",
         ).select("vec_id", "embedding", "centroid_id")
-        assigned = assigned.localCheckpoint(eager=True)
-        n = assigned.count()
-        assigned.write.partitionBy("centroid_id").mode(
-            "overwrite"
-        ).parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(assigned, batch_id, partition_by="centroid_id")
 
     def search(
         self, query: DataFrame, k: int = 10, nprobe: int = 3
@@ -1174,6 +1152,7 @@ class IvfIndex:
         """Top-k over every ingested batch, reading only the nprobe
         probed cells (PartitionFilters on centroid_id across all
         batch directories)."""
+        stored = self._merged()
         probed = (
             self.centroids.join(F.broadcast(query))
             .select(
@@ -1185,24 +1164,22 @@ class IvfIndex:
             .collect()
         )
         cells = [r["centroid_id"] for r in probed]
-        candidates = self.spark.read.parquet(self.path).filter(
-            F.col("centroid_id").isin(cells)
-        )
+        candidates = stored.filter(F.col("centroid_id").isin(cells))
         return knn_topk(candidates, query, k, "vec_id", "embedding")
 
 
-class IvfPqStore:
+class IvfPqStore(BatchStore):
     """Persistent incremental IVF-PQ serving index — the store-family
     treatment for the flagship ANN layout (VERDICT_r10 #3), closing
     the train-once/serve-growing story: ``write_ivfpq_index`` rebuilds
     the whole table per corpus fingerprint, while this store encodes
     each NEW batch under FROZEN coarse cells + FROZEN codebooks and
-    appends it as an idempotent ``batch_id=`` partition directory —
-    ingest is embarrassingly parallel (one broadcast assignment + one
+    appends it as its own idempotent batch partition — ingest is
+    embarrassingly parallel (one broadcast assignment + one
     Arrow-batched ``pq_encode_udf`` pass over the batch, no history
     read, no shuffle beyond the batch itself).
 
-    Layout per batch: ``batch_id=<id>/centroid_id=<cell>/...`` with
+    Layout per batch: ``centroid_id=<cell>`` directories with
     columns ``(vec_id, embedding, pq_codes)`` — the same row shape as
     the rebuilt index, so :meth:`search` is plan-for-plan the
     ``ivfpq_topk`` IVFADC probe over the union of all batches:
@@ -1215,13 +1192,11 @@ class IvfPqStore:
     tests) because assignment and encoding are per-row pure functions
     of the frozen model.
 
-    Crash/replay contract (the 14th store family): a batch OVERWRITES
-    its own ``batch_id=`` directory, so a replayed epoch converges.
-    Batches must be doc-disjoint (vec_id is the serving identity; an
-    overlapping re-ingest under a NEW batch_id duplicates rows — the
-    count-additive store contract, see SCALE.md). Retrain-and-rebuild
-    when codebook drift accumulates is a new index directory, never
-    in-place surgery.
+    Storage, replay and overlap contract: ``store.py``. Batches must
+    be doc-disjoint (vec_id is the serving identity; an overlapping
+    re-ingest under a NEW batch_id duplicates rows). Retrain-and-
+    rebuild when codebook drift accumulates is a new index directory,
+    never in-place surgery.
     """
 
     def __init__(
@@ -1232,8 +1207,7 @@ class IvfPqStore:
         books: list[list[list[float]]],
         d: int,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.centroids = centroids
         self.books = books
         self.d = d
@@ -1250,46 +1224,17 @@ class IvfPqStore:
         append it as its own idempotent partition directory. Returns
         rows written.
 
-        ``assert_disjoint=True`` is the batch-overlap debug knob
-        (SCALE.md store-family contract): before writing, semi-join
-        the incoming vec_ids against every PRIOR batch directory and
-        raise if any id was already ingested under a different
-        batch_id — an overlapping re-ingest would duplicate index
-        rows. Off by default: the check scans history, which the
-        upstream manifest contract makes redundant."""
-        import os
-
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        if assert_disjoint and os.path.isdir(self.path):
-            prior = [
-                e
-                for e in os.listdir(self.path)
-                if e.startswith("batch_id=") and e != part_dir
-            ]
-            if prior:
-                history_ids = (
-                    self.spark.read.option("basePath", self.path)
-                    .parquet(*[f"{self.path}/{e}" for e in prior])
-                    .select("vec_id")
-                )
-                dupes = (
-                    batch.select(
-                        F.col(id_col).cast("long").alias("vec_id")
-                    )
-                    .join(history_ids, "vec_id", "left_semi")
-                    .limit(5)
-                    .collect()
-                )
-                if dupes:
-                    raise ValueError(
-                        f"IvfPqStore batch {batch_id!r} overlaps prior"
-                        f" batches on vec_id (sample:"
-                        f" {[r['vec_id'] for r in dupes]}) — additive"
-                        " stores require doc-disjoint batches"
-                        " (SCALE.md store-family contract)"
-                    )
+        ``assert_disjoint=True`` runs the store's overlap check
+        (``BatchStore._assert_disjoint``) on the incoming
+        vec_ids before writing. Off by default: the check scans
+        history, which the upstream manifest contract makes
+        redundant."""
+        if assert_disjoint:
+            self._assert_disjoint(
+                batch.select(F.col(id_col).cast("long").alias("vec_id")),
+                batch_id,
+                "vec_id",
+            )
         enc = pq_encode_udf(self.books, self.d)
         assigned = assign_centroids(
             batch.select(
@@ -1305,12 +1250,7 @@ class IvfPqStore:
             enc(F.col("embedding")).alias("pq_codes"),
             "centroid_id",
         )
-        assigned = assigned.localCheckpoint(eager=True)
-        n = assigned.count()
-        assigned.write.partitionBy("centroid_id").mode(
-            "overwrite"
-        ).parquet(f"{self.path}/{part_dir}")
-        return n
+        return self._write(assigned, batch_id, partition_by="centroid_id")
 
     def search(
         self,
@@ -1326,15 +1266,7 @@ class IvfPqStore:
         Raises the store-family typed error on an empty store
         (ADVICE_r11 #2) instead of surfacing a raw AnalysisException
         from the parquet read."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"IvfPqStore has no ingested batches:"
-                f" {self.path!r} — call add_batch() first"
-            )
+        stored = self._merged()
         probed = (
             self.centroids.join(F.broadcast(query))
             .select(
@@ -1346,9 +1278,7 @@ class IvfPqStore:
             .collect()
         )
         cells = [r["centroid_id"] for r in probed]
-        pruned = self.spark.read.parquet(self.path).filter(
-            F.col("centroid_id").isin(cells)
-        )
+        pruned = stored.filter(F.col("centroid_id").isin(cells))
         adc = pq_adc_udf(self.books, self.d)
         qn = query.select(F.col("q"))
         short = (
@@ -1447,17 +1377,17 @@ def mrl_topk_indexed(
     )
 
 
-class MrlStore:
-    """Persistent incremental Matryoshka serving index — the 16th
-    store family (VERDICT_r11 #4), closing the serve-growing story
-    for the last materialized index without one: ``write_mrl_index``
-    rebuilds the whole (vec_id, embedding, prefix) table, while this
-    store appends each NEW batch as an idempotent ``batch_id=``
-    partition directory. The prefix projection is a PURE per-row
-    function (``slice(embedding, 1, prefix_len)``) — no trained
-    state to freeze, so ingest is the IvfPqStore shape minus
-    training: one codegen projection over the batch, no history
-    read, no shuffle at all.
+class MrlStore(BatchStore):
+    """Persistent incremental Matryoshka serving index (VERDICT_r11
+    #4), closing the serve-growing story for the last materialized
+    index without one: ``write_mrl_index`` rebuilds the whole
+    (vec_id, embedding, prefix) table, while this store appends each
+    NEW batch as its own idempotent batch partition. The prefix
+    projection is a PURE per-row function
+    (``slice(embedding, 1, prefix_len)``) — no trained state to
+    freeze, so ingest is the IvfPqStore shape minus training: one
+    codegen projection over the batch, no history read, no shuffle
+    at all.
 
     :meth:`search` is the exact :func:`_mrl_probe` over the union of
     all batches — stage 1 reads ONLY (vec_id, prefix) via parquet
@@ -1466,16 +1396,13 @@ class MrlStore:
     ``write_mrl_index`` over the same rows (asserted in tests,
     row-for-row) because the projection is deterministic per row.
 
-    Crash/replay contract: a batch OVERWRITES its own ``batch_id=``
-    directory, so a replayed epoch converges. Batches must be
-    doc-disjoint (vec_id is the serving identity; an overlapping
-    re-ingest under a NEW batch_id duplicates rows — the id-keyed
-    store contract, SCALE.md); ``assert_disjoint=`` is the debug
-    knob, same as IvfPqStore."""
+    Storage, replay and overlap contract: ``store.py``. Batches must
+    be doc-disjoint (vec_id is the serving identity; an overlapping
+    re-ingest under a NEW batch_id duplicates rows);
+    ``assert_disjoint=`` is the debug knob, same as IvfPqStore."""
 
     def __init__(self, spark, path: str, prefix_len: int) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path)
         self.prefix_len = prefix_len
 
     def add_batch(
@@ -1488,39 +1415,12 @@ class MrlStore:
     ) -> int:
         """Project the batch's prefix column and append it as its own
         idempotent partition directory. Returns rows written."""
-        import os
-
-        from .dedup import batch_partition_dir
-
-        part_dir = batch_partition_dir(batch_id)  # validates token
-        if assert_disjoint and os.path.isdir(self.path):
-            prior = [
-                e
-                for e in os.listdir(self.path)
-                if e.startswith("batch_id=") and e != part_dir
-            ]
-            if prior:
-                history_ids = (
-                    self.spark.read.option("basePath", self.path)
-                    .parquet(*[f"{self.path}/{e}" for e in prior])
-                    .select("vec_id")
-                )
-                dupes = (
-                    batch.select(
-                        F.col(id_col).cast("long").alias("vec_id")
-                    )
-                    .join(history_ids, "vec_id", "left_semi")
-                    .limit(5)
-                    .collect()
-                )
-                if dupes:
-                    raise ValueError(
-                        f"MrlStore batch {batch_id!r} overlaps prior"
-                        f" batches on vec_id (sample:"
-                        f" {[r['vec_id'] for r in dupes]}) — id-keyed"
-                        " stores require doc-disjoint batches"
-                        " (SCALE.md store-family contract)"
-                    )
+        if assert_disjoint:
+            self._assert_disjoint(
+                batch.select(F.col(id_col).cast("long").alias("vec_id")),
+                batch_id,
+                "vec_id",
+            )
         projected = batch.select(
             F.col(id_col).cast("long").alias("vec_id"),
             F.col(vec_col).cast("array<double>").alias("embedding"),
@@ -1528,12 +1428,7 @@ class MrlStore:
                 F.col(vec_col).cast("array<double>"), 1, self.prefix_len
             ).alias("prefix"),
         )
-        projected = projected.localCheckpoint(eager=True)
-        n = projected.count()
-        projected.write.mode("overwrite").parquet(
-            f"{self.path}/{part_dir}"
-        )
-        return n
+        return self._write(projected, batch_id)
 
     def search(
         self,
@@ -1545,17 +1440,7 @@ class MrlStore:
         :func:`_mrl_probe`); stage 1 stays prefix-only across all
         batch directories. Raises the store-family typed error on an
         empty store."""
-        import os
-
-        if not os.path.isdir(self.path) or not any(
-            e.startswith("batch_id=") for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"MrlStore has no ingested batches:"
-                f" {self.path!r} — call add_batch() first"
-            )
-        idx = self.spark.read.parquet(self.path)
         return _mrl_probe(
-            idx, query, self.prefix_len, k, shortlist,
+            self._merged(), query, self.prefix_len, k, shortlist,
             "vec_id", "embedding",
         )

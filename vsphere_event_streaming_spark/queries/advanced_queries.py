@@ -1365,7 +1365,7 @@ def q_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed next to the exact count(DISTINCT) with the relative
     error. THE bounded-state distinct structure at 100 TB: registers
     merge across shards/batches by per-bucket MAX (HllStore is the
-    incremental form, the 18th store family).
+    incremental form).
 
     Unlike Spark's approx_count_distinct (engine-internal HLL++ →
     rows-only q_approx_aggs), every piece of THIS estimate is a

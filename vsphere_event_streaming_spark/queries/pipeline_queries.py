@@ -5557,7 +5557,7 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization point); the filter build is one explode+distinct
     over the eval-sized bench set; the probe is explode(h)/doc-shingle
     → broadcast semi-join → two per-doc counts. The incremental form
-    is the BloomStore (15th store family, SET-UNION merge — safe even
+    is the BloomStore (SET-UNION merge — safe even
     under overlapping ingest), so a growing benchmark suite never
     rebuilds the filter."""
     from ..functions.dedup import shingle_hash_arrays

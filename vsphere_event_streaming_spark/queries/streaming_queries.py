@@ -186,9 +186,9 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket width that headroom is ample.
 
     Incremental form (r10): the cells are additive across ingest
-    batches, so the monitor is also the ELEVENTH store family —
-    :class:`~..functions.sketches.RateCellStore` (idempotent
-    ``batch_id=`` cell partitions, ``anomalies()`` over the merged
+    batches, so the monitor is also a store —
+    :class:`~..functions.sketches.RateCellStore` (idempotent batch
+    cell partitions, ``anomalies()`` over the merged
     cells bit-identical to this batch query; parity + replay
     idempotence in ``tests/test_streaming.py``), fed by
     :func:`~..streaming.model_stream.start_incremental_rate_cells`.
@@ -340,7 +340,7 @@ def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Incremental form (r10): distinct activity rows merge by SET
     UNION (idempotent under replay AND overlapping batches), so the
-    tier is also the THIRTEENTH store family —
+    tier is also a store —
     :class:`~..functions.sketches.ActivityStore` (``retention()``
     over the merged rows bit-identical to this batch query; parity in
     ``tests/test_streaming.py``), fed by

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.dedup import LshIndex
+from ..store import batch_partition_dir
 from .store_stream import start_store
 
 #: Schema the document stream must carry (the driver's documents
@@ -39,10 +40,10 @@ def start_incremental_dedup(
     """Run the incremental near-dup index as a streaming query.
 
     Reads a parquet file stream of ``(doc_id, text)`` batches; for each
-    micro-batch, emits candidate pairs (new↔history ∪ new↔new) to
-    ``pairs_dir/batch_id=<prefix><epoch>`` and ingests the batch's
-    bands into the index. Both writes overwrite their own epoch
-    partition; ``index_dir`` and ``pairs_dir`` both belong to the
+    micro-batch, emits candidate pairs (new↔history ∪ new↔new) to the
+    epoch's partition of ``pairs_dir`` and ingests the batch's bands
+    into the index. Both writes overwrite their own epoch partition
+    (layout: ``store.py``); ``index_dir`` and ``pairs_dir`` both belong to the
     checkpoint unit of :func:`~.store_stream.start_store`'s CONTRACT.
     """
     index = LshIndex(spark, index_dir, band_size=band_size)
@@ -56,7 +57,7 @@ def start_incremental_dedup(
         # discovery on the directory name — storing it in the files
         # too would collide with the inferred partition column
         pairs.write.mode("overwrite").parquet(
-            f"{pairs_dir}/batch_id={batch_id}"
+            batch_partition_dir(pairs_dir, batch_id)
         )
 
     return start_store(
@@ -93,7 +94,7 @@ def start_incremental_semantic_dedup(
     Reads a parquet file stream of ``(vec_id, embedding)`` batches;
     each micro-batch gets keep/drop decisions against everything seen
     so far (sign-LSH bucket join + exact cosine re-score, min-id
-    dominance) written to ``decisions_dir/batch_id=<prefix><epoch>``,
+    dominance) written to the epoch's partition of ``decisions_dir``,
     then joins the index. Epoch contract:
     :func:`~.store_stream.start_store`.
     """
@@ -109,7 +110,7 @@ def start_incremental_semantic_dedup(
     def process(batch_df: DataFrame, batch_id: str) -> None:
         decisions = index.add_batch(batch_df, batch_id=batch_id)
         decisions.write.mode("overwrite").parquet(
-            f"{decisions_dir}/batch_id={batch_id}"
+            batch_partition_dir(decisions_dir, batch_id)
         )
 
     return start_store(

@@ -400,11 +400,10 @@ def start_incremental_mrl(
 ) -> StreamingQuery:
     """Stream embedding batches into an
     :class:`~..functions.vectors.MrlStore` — the serve-path ingest
-    for the Matryoshka prefix-column layout (the 16th store family,
-    VERDICT_r11 #4). The prefix projection is a pure per-row
-    function, so each epoch is one codegen ``slice`` over the batch
-    appended as its own partition: no trained state, no history read,
-    no shuffle. Probe ≡ rebuilt ``write_mrl_index`` probe on
+    for the Matryoshka prefix-column layout (VERDICT_r11 #4). The
+    prefix projection is a pure per-row function, so each epoch is
+    one codegen ``slice`` over the batch appended as its own
+    partition: no trained state, no history read, no shuffle. Probe ≡ rebuilt ``write_mrl_index`` probe on
     doc-disjoint ingest and the stage-1 scan stays prefix-only
     (asserted in ``tests/test_streaming.py``). Epoch contract:
     :func:`~.store_stream.start_store`.

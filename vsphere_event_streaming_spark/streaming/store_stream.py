@@ -28,19 +28,18 @@ def start_store(
     with ``batch_id = f"{batch_prefix}{epoch_id}"``, until the files
     present at start are consumed (``availableNow``).
 
-    Every store writes its epoch under an idempotent
-    ``batch_id=<prefix><epoch>`` partition, and Structured Streaming
-    replays a failed epoch with the SAME epoch id, so a retried epoch
-    (crash between two writes, or a restarted query re-running its
-    last uncommitted epoch) overwrites its own partition and converges
-    instead of duplicating.
+    Every store writes its epoch as an idempotent batch partition, and
+    Structured Streaming replays a failed epoch with the SAME epoch
+    id, so a retried epoch (crash between two writes, or a restarted
+    query re-running its last uncommitted epoch) overwrites its own
+    partition and converges instead of duplicating.
 
-    CONTRACT: ``checkpoint_dir`` and the store directory (plus any
-    side-output directory the caller's ``add`` writes) are one unit —
-    epoch ids are stable only per checkpoint. Deleting or swapping the
-    checkpoint while keeping the store restarts epochs at 0, and the
-    idempotent overwrite would then silently REPLACE historical
-    batches' partitions. To rebuild a stream against an existing
+    CONTRACT: ``checkpoint_dir`` and the store directory (whose layout
+    ``store.py`` owns, plus any side-output directory the caller's
+    ``add`` writes) are one unit — epoch ids are stable only per
+    checkpoint. Deleting or swapping the checkpoint while keeping the
+    store restarts epochs at 0, and the idempotent overwrite would
+    then silently REPLACE historical batches' partitions. To rebuild a stream against an existing
     store, pass a fresh ``batch_prefix`` (e.g. ``"r2-"``) so the new
     query's epochs land in their own partition namespace.
 
