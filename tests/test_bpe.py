@@ -396,7 +396,7 @@ def test_bpe_vocab_refuses_markerless_partitions(spark, tmp_path):
     vocab) must raise instead of validating nothing: a DIFFERENT-
     alphabet handle that slipped through would stamp ITS marker on
     the next add_batch and silently merge non-additive counts.
-    Mirror of GramStore._check_format's crash-remnant branch."""
+    Mirror of store.py::BatchStore._check_marker's crash-remnant branch."""
     import os
 
     from vsphere_event_streaming_spark.functions.bpe import (

@@ -35,13 +35,12 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import functions as F
-
 from ..errors import (
     FutureOffsetError,
     InvalidOffsetError,
     OutOfRangeError,
 )
+from .model import replay_from
 from .service import EventLogService
 
 
@@ -191,16 +190,11 @@ class EventLogHTTPServer:
                     if not _math.isfinite(max_seconds) or max_seconds < 0:
                         return self._text(400, "invalid max_seconds")
                 try:
-                    replay = svc.replay(raw)
+                    cursor = svc.watch_start(raw)
                 except InvalidOffsetError:
                     return self._text(400, "invalid offset")
                 except OutOfRangeError as e:  # purged start → 400
                     return self._text(400, f"invalid offset: {e}")
-                del replay  # validation only; reads go through pages
-                try:
-                    requested = None if raw is None else int(raw)
-                except ValueError:
-                    return self._text(400, "invalid offset")
 
                 self.send_response(200)
                 # server.go:145-147
@@ -209,11 +203,6 @@ class EventLogHTTPServer:
                 self.send_header("Transfer-Encoding", "chunked")
                 self.end_headers()
 
-                rng = svc.range()
-                if requested is None or requested == -1:
-                    cursor = (rng["latest"] + 1) if rng else 0
-                else:
-                    cursor = requested
                 # Every stream gets the server's force-disconnect
                 # ceiling (server.go:27); a client max_seconds may only
                 # shorten it, never extend it.
@@ -224,10 +213,7 @@ class EventLogHTTPServer:
                 try:
                     while True:
                         page = (
-                            svc.df.filter(
-                                F.col(svc.offset_col) >= F.lit(cursor)
-                            )
-                            .orderBy(svc.offset_col)
+                            replay_from(svc.df, cursor, svc.offset_col)
                             .limit(svc.page_size)
                             .collect()
                         )

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..errors import OutOfRangeError
+
 #: Reference defaults (cmd/server/server.go:29,47).
 PAGE_SIZE = 50
 MAX_SEGMENT_SIZE = 1000
@@ -44,6 +46,25 @@ def get_start(earliest: int, latest: int, page_size: int = PAGE_SIZE) -> int:
     start = latest - page_size + 1
     if start < earliest:
         start = earliest
+    return start
+
+
+def watch_start(
+    earliest: int | None, latest: int | None, start: int | None
+) -> int:
+    """First offset a watch delivers — the one owner of the start rule.
+
+    Pure, behavior-matched to the reference's stream start
+    (server.go:149-166, :200-203): ``None`` or ``-1`` (memlog's
+    internal 'absent' sentinel) tails from now, latest+1, or 0 on an
+    empty log (``earliest``/``latest`` None); a start below the
+    retained range raises ``OutOfRangeError`` (the purged-start 400);
+    any other start, a future one included, is returned as is.
+    """
+    if start is None or start == -1:
+        return 0 if latest is None else latest + 1
+    if earliest is not None and start < earliest:
+        raise OutOfRangeError(f"invalid offset: {start}")
     return start
 
 

@@ -31,10 +31,17 @@ import re
 from typing import Any
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..errors import FutureOffsetError, InvalidOffsetError, OutOfRangeError
-from .model import PAGE_SIZE, get_start, last_page, log_range, point_lookup
+from .model import (
+    PAGE_SIZE,
+    get_start,
+    last_page,
+    log_range,
+    point_lookup,
+    replay_from,
+    watch_start,
+)
 
 
 class EventLogService:
@@ -103,25 +110,17 @@ class EventLogService:
             return -1
         return get_start(rng["earliest"], rng["latest"], self.page_size)
 
-    # -- GET /api/v1/events?watch=true (batch replay slice) ------------
-    def replay(self, start: int | None = None) -> DataFrame:
-        """Ordered replay DataFrame from ``start`` (default: latest+1 →
-        empty until new data arrives, the reference's 'now' semantics).
-
-        Raises ``OutOfRangeError`` for a purged start offset — the
-        stream-path asymmetry (server.go:200-203).
-        """
-        rng = self.range()
+    # -- GET /api/v1/events?watch=true (server.go:130-209) ------------
+    def watch_start(self, start: int | str | None = None) -> int:
+        """Atoi-strict parse + one ``range()`` + the model's start rule
+        (``model.watch_start``): the cursor a watch opens at."""
         if start is not None:
             start = self._parse_offset(start)
-        if start is None or start == -1:
-            # -1 is the reference's internal 'absent' sentinel: an
-            # explicit -1 is indistinguishable from no offset and tails
-            # from now (server.go:149-166)
-            start = (rng["latest"] + 1) if rng else 0
-        if rng is not None and start < rng["earliest"]:
-            raise OutOfRangeError(f"invalid offset: {start}")
-        return (
-            self.df.filter(F.col(self.offset_col) >= F.lit(int(start)))
-            .orderBy(self.offset_col)
-        )
+        rng = self.range() or {"earliest": None, "latest": None}
+        return watch_start(rng["earliest"], rng["latest"], start)
+
+    def replay(self, start: int | str | None = None) -> DataFrame:
+        """Ordered replay DataFrame from ``watch_start(start)``: empty
+        until new data arrives by default (the reference's 'now'), and
+        ``OutOfRangeError`` for a purged start (server.go:200-203)."""
+        return replay_from(self.df, self.watch_start(start), self.offset_col)

@@ -26,14 +26,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import tune
 from ..state import persist
 from ..tables import load
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load(spark, sf_dir, name)
 
 
 def _dsum(col, scale: int = 2):
@@ -67,12 +62,12 @@ def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     residue, not the fact table.
     """
     cust = (
-        _t(spark, sf_dir, "customer")
+        load(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 9000)
         .select("c_custkey", "c_name")
     )
     big = (
-        _t(spark, sf_dir, "orders")
+        load(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 300000)
         .groupBy("o_custkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
@@ -100,9 +95,9 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     BroadcastNestedLoopJoin. Never valid fact×fact — the engine only
     exposes it behind pre-reduced inputs.
     """
-    region = _t(spark, sf_dir, "region").select("r_name")
+    region = load(spark, sf_dir, "region").select("r_name")
     status = (
-        _t(spark, sf_dir, "orders").select("o_orderstatus").distinct()
+        load(spark, sf_dir, "orders").select("o_orderstatus").distinct()
     )
     return region.crossJoin(F.broadcast(status)).select(
         "r_name",
@@ -140,7 +135,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale: one pass, partial-aggregated per type).
     """
     piv = (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .groupBy("user_id")
         .pivot("event_type", _EVENT_TYPES)
         .count()
@@ -175,7 +170,7 @@ def q_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     high = F.col("value") > 0.9
     return (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -211,7 +206,7 @@ def q_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     only safe listagg form on a distributed engine.
     """
     return (
-        _t(spark, sf_dir, "documents")
+        load(spark, sf_dir, "documents")
         # explicit null-source exclusion: collect_set/countDistinct
         # silently drop NULLs but SQL count(*) over a DISTINCT set
         # would count them — filter so both engines see the same rows
@@ -245,7 +240,7 @@ def q_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sketches). Rounded to 6 dp: interpolation arithmetic may differ
     in the last ulp across engines.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
         F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
@@ -323,7 +318,7 @@ def q_percentile_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the streaming ingest (the auc_cells can't-drift discipline);
     the store's incremental quantiles are bit-identical to this
     query's by cell additivity (pytest)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     return quantiles_from_cells(quantile_cells(ev))
 
 
@@ -349,7 +344,7 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     set's partial aggregate) — one shuffle regardless of k.
     """
     return (
-        _t(spark, sf_dir, "orders")
+        load(spark, sf_dir, "orders")
         .cube("o_orderstatus", "o_orderpriority")
         .agg(
             F.grouping("o_orderstatus").cast("bigint").alias("g_status"),
@@ -394,7 +389,7 @@ def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tie_max = F.struct(F.col("value"), F.col("event_id"))
     return (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         # null values are not valid arg-min/max operands; Spark's
         # struct comparison would sort them FIRST while SQL ORDER BY
         # defaults to NULLS LAST — excluding them aligns both engines
@@ -427,7 +422,7 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no pass over sorted data), so the shuffle carries only
     #buckets groups however large the input.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     return (
         # NaN/NULL/±inf quarantined: Spark folds non-finite values
         # into NULL buckets via the cast while the SQL cast errors —
@@ -484,7 +479,7 @@ def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_full = w.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
-    return _t(spark, sf_dir, "events").select(
+    return load(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.percent_rank().over(w).alias("pr"),
@@ -520,7 +515,7 @@ def q_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     handling conformance check. Per-user partitions keep the sort
     bounded per key.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     frame = (
         "OVER (PARTITION BY user_id ORDER BY ts "
         "RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)"
@@ -558,7 +553,7 @@ def q_regexp_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside whole-stage codegen — regex at 100 TB is fine when it's
     JVM-side; it's the Python-UDF regex loop that isn't.
     """
-    ev = _t(spark, sf_dir, "documents")
+    ev = load(spark, sf_dir, "documents")
     return ev.select(
         "doc_id",
         F.regexp_extract("text", r"([a-z]+)", 1).alias("first_word"),
@@ -589,7 +584,7 @@ def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     §1.2) at scan-heavy scale. Missing paths are NULL, matching SQL
     JSON semantics.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     v = F.parse_json("props")
     return ev.select(
         "event_id",
@@ -617,7 +612,7 @@ def q_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapping (cmd/server/server.go:285-288): bad records degrade to
     NULL rows the pipeline can quarantine, never a crashed query.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.expr("TRY_CAST(event_type AS INT)").alias("bad_cast"),
@@ -652,7 +647,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/dedup.py); levenshtein runs codegen'd JVM-side.
     """
     names = (
-        _t(spark, sf_dir, "part").select("p_name").distinct()
+        load(spark, sf_dir, "part").select("p_name").distinct()
     )
     block = F.split(F.col("p_name"), " ").getItem(0)
     a = names.select(
@@ -699,7 +694,7 @@ def q_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan lazy but scan everything. The average itself goes through
     decimal so it is partial-aggregation-order independent.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     # exact decimal sum then ONE double division: Spark's avg(decimal)
     # rounds to 6 dp (decimal(22,6)) while DuckDB's is full-precision —
     # sum/count is bit-identical in both engines
@@ -749,7 +744,7 @@ def q_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline where reruns must agree. md5 is codegen'd JVM-side; no
     Python in the path.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     rowkey = F.concat_ws(
         "#", F.col("l_orderkey").cast("string"),
         F.col("l_linenumber").cast("string"),
@@ -787,7 +782,7 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline downsamples dominant classes and must reproduce the
     exact sample on re-execution.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     bucket = F.conv(
         F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10
     ).cast("long") % 20
@@ -830,7 +825,7 @@ def q_embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``functions/vectors.py``). Float values pass through double →
     decimal so the sum is order-independent and cross-engine exact.
     """
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     exploded = emb.select(
         "label", F.posexplode("embedding").alias("pos", "v")
     ).select(
@@ -869,7 +864,7 @@ def q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     expand to the standard expand+two-round plan. The mean goes
     through decimal so reruns and engines agree exactly.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     return ev.agg(
         F.lit("events").alias("tbl"),
         F.count(F.lit(1)).alias("n"),
@@ -930,7 +925,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partitioned by user, so every window is per-key bounded and the
     job scales with users, not with the single timeline.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts"))
     flag = F.when(us - F.lag(us).over(w) > _SESSION_GAP_US, 1).otherwise(0)
@@ -971,9 +966,9 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.sql``) — the declarative form compiles to the same single
     Expand + shuffle as the DataFrame cube/rollup.
     """
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
-    _t(spark, sf_dir, "region").createOrReplaceTempView("v_region")
+    load(spark, sf_dir, "customer").createOrReplaceTempView("v_customer")
+    load(spark, sf_dir, "nation").createOrReplaceTempView("v_nation")
+    load(spark, sf_dir, "region").createOrReplaceTempView("v_region")
     return spark.sql(
         """
         SELECT r_name, n_name,
@@ -1021,12 +1016,12 @@ def q_cogroup_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a FULL OUTER JOIN never matches NULL = NULL — with nulls excluded
     # both formulations agree
     ev = (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
         .select("user_id")
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        load(spark, sf_dir, "orders")
         .filter(F.col("o_custkey").isNotNull() & (F.col("o_custkey") <= 200))
         .select(F.col("o_custkey").alias("user_id"))
     )
@@ -1100,7 +1095,7 @@ def q_grouped_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .select("event_type", "value")
         .groupBy("event_type")
         .applyInPandas(
@@ -1140,7 +1135,7 @@ def q_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     (start, length, hash) — position + fingerprint — rather than
     duplicated text; downstream embedding stages read the slice lazily.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     # exclusive upper bound like DuckDB range(): sequence's inclusive
     # end is bound-1
     bound = F.greatest(
@@ -1228,7 +1223,7 @@ def q_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shape a shared long-lived sketch table would use."""
     from ..functions.sketches import _bucket
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         F.explode(
             F.filter(
@@ -1385,7 +1380,7 @@ def q_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     the accuracy harness; production reads estimates alone."""
     from ..functions.sketches import hll_cells, hll_estimates
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     base = ev.filter(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     ).select(
@@ -1434,7 +1429,7 @@ def q_top_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     a TakeOrderedAndProject heap — the full sorted term list never
     materializes. Tie-break on the token keeps top-k stable.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select(
             F.explode(
@@ -1485,7 +1480,7 @@ def q_search_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scores rounded to 6 dp: ln() may differ in the last ulp across
     libm implementations.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     n_docs = float(docs.count())
     tokens = docs.select(
         "doc_id",
@@ -1536,7 +1531,7 @@ def q_udtf_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.udtf_ops import register_udtfs
 
     register_udtfs(spark)
-    _t(spark, sf_dir, "events").createOrReplaceTempView("v_events_udtf")
+    load(spark, sf_dir, "events").createOrReplaceTempView("v_events_udtf")
     return spark.sql(
         """
         SELECT e.event_id, j.key, j.value
@@ -1589,7 +1584,7 @@ def q_pipeline_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..functions.dedup import normalize_text
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     # group by md5 of the normalized text: identical groups, 16-byte
     # shuffle keys instead of whole documents (see exact_dedup_keepers)
     keepers = docs.groupBy(
@@ -1666,7 +1661,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import spread
 
     li = spread(
-        _t(spark, sf_dir, "lineitem").filter(
+        load(spark, sf_dir, "lineitem").filter(
             F.col("l_shipdate")
             <= F.lit("2000-12-01 00:00:00").cast("timestamp")
         )
@@ -1723,12 +1718,12 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     cutoff = F.lit("1998-01-01 00:00:00").cast("timestamp")
     cust = (
-        _t(spark, sf_dir, "customer")
+        load(spark, sf_dir, "customer")
         .filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    orders = load(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    li = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,6)"
     )
@@ -1773,21 +1768,21 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,6)"
     )
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
+    region = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load(spark, sf_dir, "nation")
     nations = nation.join(
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select("n_nationkey", "n_name")
-    supp = _t(spark, sf_dir, "supplier").join(
+    supp = load(spark, sf_dir, "supplier").join(
         F.broadcast(nations),
         F.col("s_nationkey") == F.col("n_nationkey"),
     ).select("s_suppkey", "s_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1999-01-01 00:00:00").cast("timestamp"))
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    li = _t(spark, sf_dir, "lineitem")
+    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    li = load(spark, sf_dir, "lineitem")
     return (
         li.join(
             F.broadcast(supp),
@@ -1824,7 +1819,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-group stats pruning); the aggregate is a 1-group partial+final
     — the minimal-I/O probe of the scan path.
     """
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_discount") >= 0.05)
@@ -1861,11 +1856,11 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date comparison rides as the join residual — no pair blow-up,
     no distinct needed (semi joins dedup by construction).
     """
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01 00:00:00").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         orders.join(
             li,
@@ -1911,7 +1906,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT EXISTS is a left-anti join on the order keys — at scale the
     anti join's right side is a pre-projected single column.
     """
-    cust = _t(spark, sf_dir, "customer")
+    cust = load(spark, sf_dir, "customer")
     # exact sum / count (not avg(decimal), which rounds to 6 dp); see
     # q_subquery_scalar
     row = (
@@ -1933,7 +1928,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     threshold = float(row[0])
     orders = (
-        _t(spark, sf_dir, "orders")
+        load(spark, sf_dir, "orders")
         .filter(F.col("o_totalprice") > 400000)
         .select("o_custkey")
     )
@@ -1968,12 +1963,12 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the join; count(DISTINCT) expands to the standard two-round
     aggregate (dedup shuffle then count) — both rounds partial+final.
     """
-    part = _t(spark, sf_dir, "part").filter(
+    part = load(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & (F.col("p_size").isin(1, 5, 9, 14, 23, 36, 45, 49))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
@@ -2021,8 +2016,8 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         part_pre = p if part_pre is None else (part_pre | p)
         li_pre = q if li_pre is None else (li_pre | q)
         full = (p & q) if full is None else (full | (p & q))
-    part = _t(spark, sf_dir, "part").filter(part_pre)
-    li = _t(spark, sf_dir, "lineitem").filter(li_pre)
+    part = load(spark, sf_dir, "part").filter(part_pre)
+    li = load(spark, sf_dir, "lineitem").filter(li_pre)
     revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,6)"
     )
@@ -2062,19 +2057,19 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts are filtered before the customer join ever sees them. At
     100 TB the keeper set stays kilobytes per million orders.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     keepers = (
         li.groupBy("l_orderkey")
         .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("tq"))
         .filter(F.col("tq") > 250)
         .select("l_orderkey")
     )
-    orders = _t(spark, sf_dir, "orders").join(
+    orders = load(spark, sf_dir, "orders").join(
         F.broadcast(keepers),
         F.col("o_orderkey") == keepers.l_orderkey,
         "left_semi",
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
@@ -2121,9 +2116,9 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     own.
     """
     n1, n2 = "NATION_3", "NATION_7"
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     supp = (
-        _t(spark, sf_dir, "supplier")
+        load(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nation.filter(F.col("n_name").isin(n1, n2))),
             F.col("s_nationkey") == F.col("n_nationkey"),
@@ -2131,18 +2126,18 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust = (
-        _t(spark, sf_dir, "customer")
+        load(spark, sf_dir, "customer")
         .join(
             F.broadcast(nation.filter(F.col("n_name").isin(n1, n2))),
             F.col("c_nationkey") == F.col("n_nationkey"),
         )
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1999-01-01 00:00:00").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,6)"
     )
@@ -2197,29 +2192,29 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_tpch_q14 pattern over a 7-table join); every dimension hop is a
     broadcast, so the only fact shuffle is lineitem⋈orders.
     """
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    nation = load(spark, sf_dir, "nation")
+    region = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     cust_nations = nation.join(
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select(F.col("n_nationkey").alias("cn_key"))
-    cust = _t(spark, sf_dir, "customer").join(
+    cust = load(spark, sf_dir, "customer").join(
         F.broadcast(cust_nations),
         F.col("c_nationkey") == F.col("cn_key"),
         "left_semi",
     ).select("c_custkey")
     supp = (
-        _t(spark, sf_dir, "supplier")
+        load(spark, sf_dir, "supplier")
         .join(
             F.broadcast(nation.select("n_nationkey", "n_name")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1999-01-01 00:00:00").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     vol = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,6)"
     )
@@ -2266,8 +2261,8 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines share); the second aggregate is distribution-sized, not
     customer-sized.
     """
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").filter(
+    cust = load(spark, sf_dir, "customer").select("c_custkey")
+    orders = load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
     )
     per_cust = (
@@ -2307,7 +2302,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equality on double is safe: both sides derive from the same exact
     decimal sum.
     """
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
     )
@@ -2320,7 +2315,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     best_row = revenue.agg(F.max("total_revenue")).first()
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     if best_row[0] is None:  # empty quarter: oracle returns 0 rows
         return (
             revenue.filter(F.lit(False))
@@ -2361,7 +2356,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself applies to correlated scalar subqueries — written
     explicitly so the shape is visible and auditable.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load(spark, sf_dir, "lineitem")
     cuts = li.groupBy(F.col("l_partkey").alias("avg_pk")).agg(
         (
             F.lit(0.2)
@@ -2373,7 +2368,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("qty_cut")
     )
-    part = _t(spark, sf_dir, "part").filter(
+    part = load(spark, sf_dir, "part").filter(
         F.col("p_brand") == "Brand#5"
     ).select("p_partkey")
     return (
@@ -2415,13 +2410,13 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
         "decimal(22,6)"
     )
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-10-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    cust = load(spark, sf_dir, "customer")
+    nation = load(spark, sf_dir, "nation")
     cust_n = cust.join(
         F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
     ).select("c_custkey", "c_name", "c_acctbal", "n_name")
@@ -2464,11 +2459,11 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     promo = F.when(F.col("p_type") == "PROMO", revenue).otherwise(
         F.lit(0).cast("decimal(22,6)")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-06-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-07-01 00:00:00").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = load(spark, sf_dir, "part").select("p_partkey", "p_type")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .agg(
@@ -2529,7 +2524,7 @@ def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     job launch per call and the lone deviation from the no-driver-
     round-trip posture; now the temperature_rates in-plan pattern).
     Scoring shared with q_search_rrf via :func:`bm25_scores`."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return (
         bm25_scores(docs)
         .orderBy(F.col("score").desc(), "doc_id")
@@ -2671,7 +2666,7 @@ def q_word_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Tying the stop-word bound to corpus size keeps the check exercising
     real PMI arithmetic at every sf.
     """
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     n_docs = float(docs.count())
     w = (
         docs.select(
@@ -2746,7 +2741,6 @@ def q_udaf_gmean(spark: SparkSession, sf_dir: str) -> DataFrame:
     query exists to pin the escape hatch's semantics, not to race it."""
     from ..functions.udtf_ops import gmean_udaf
 
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_extendedprice") > 0
     )

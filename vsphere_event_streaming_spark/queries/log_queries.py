@@ -15,13 +15,8 @@ from pyspark.sql import functions as F
 from ..log.model import assign_offsets, last_page, log_range, probe_offsets
 from ..operators.envelope import event_class, to_envelope, type_name
 from ..registry import query
-from ..session import tune
 from ..tables import load
 
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune(spark)
-    return load(spark, sf_dir, "events")
 
 
 def _scalar(df: DataFrame):
@@ -48,13 +43,13 @@ def _scalar(df: DataFrame):
     """,
 )
 def q_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return log_range(_events(spark, sf_dir), "event_id")
+    return log_range(load(spark, sf_dir, "events"), "event_id")
 
 
 # -- A2: count / empty-log detection (server.go:218-221) ---------------
 @query("q_count", oracle="SELECT count(*) AS n FROM events")
 def q_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _events(spark, sf_dir).agg(F.count(F.lit(1)).alias("n"))
+    return load(spark, sf_dir, "events").agg(F.count(F.lit(1)).alias("n"))
 
 
 # -- P4: point lookup (server.go:269-302) ------------------------------
@@ -68,7 +63,7 @@ def q_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..log.model import point_lookup
 
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     lo = _scalar(ev.agg(F.min("event_id")))
     # empty log: comparing to a NULL literal yields 0 rows, matching
     # the oracle's NULL scalar subquery
@@ -87,7 +82,7 @@ def q_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_replay_from(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..log.model import replay_from
 
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     lo = _scalar(ev.agg(F.min("event_id")))
     start = None if lo is None else lo + 500
     return replay_from(ev, start, "event_id")
@@ -105,7 +100,7 @@ def q_ordered_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer's view."""
     from ..log.model import ordered_replay
 
-    return ordered_replay(_events(spark, sf_dir), "event_id")
+    return ordered_replay(load(spark, sf_dir, "events"), "event_id")
 
 
 # -- W2/O2: last page, top-k without a global sort (server.go:211-267) -
@@ -114,7 +109,7 @@ def q_ordered_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT * FROM events ORDER BY event_id DESC LIMIT 50",
 )
 def q_last_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return last_page(_events(spark, sf_dir), 50, "event_id")
+    return last_page(load(spark, sf_dir, "events"), 50, "event_id")
 
 
 # -- O3/T3: bounded retention (README.md:177-184) ----------------------
@@ -128,7 +123,7 @@ def q_last_page(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two-phase: 1-row max first, then a *literal* lower bound so the
     # purge predicate prunes parquet row groups (see _scalar)
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     latest = _scalar(ev.agg(F.max("event_id")))
     cutoff = None if latest is None else int(latest) - 2 * 1000
     return ev.filter(F.col("event_id") > F.lit(cutoff))
@@ -145,7 +140,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_offset_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     return assign_offsets(
         ev, order_by=["ts", "event_id"], seed_col="event_id"
     ).select("event_id", "offset")
@@ -167,7 +162,7 @@ def q_offset_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_range_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     rng = log_range(ev, "event_id")
     probes = rng.select(
         F.explode(
@@ -204,7 +199,7 @@ _ENVELOPE_SQL = """
 
 @query("q_envelope", oracle=_ENVELOPE_SQL)
 def q_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return to_envelope(_events(spark, sf_dir))
+    return to_envelope(load(spark, sf_dir, "events"))
 
 
 # -- P2: type-name derivation (README.md:58) ---------------------------
@@ -218,7 +213,7 @@ def q_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_typename(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _events(spark, sf_dir)
+        load(spark, sf_dir, "events")
         .select("event_type", type_name(F.col("event_type")).alias("ce_type"))
         .distinct()
     )
@@ -237,7 +232,7 @@ def q_typename(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_eventclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _events(spark, sf_dir)
+        load(spark, sf_dir, "events")
         .groupBy(event_class(F.col("event_type")).alias("eventclass"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -274,7 +269,7 @@ def q_time_window_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         return out.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000"))
         )
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     begin = _scalar(ev.agg(F.max("ts") - F.expr("INTERVAL 24 HOURS")))
     return ev.filter(F.col("ts") >= F.lit(begin))
 
@@ -297,7 +292,7 @@ def q_time_window_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_page_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = last_page(_events(spark, sf_dir), 50, "event_id")
+    ev = last_page(load(spark, sf_dir, "events"), 50, "event_id")
     return ev.select(
         F.col("event_id").alias("offset"),
         F.concat(
@@ -326,7 +321,7 @@ def q_page_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """to_json → from_json identity: proves the codec loses nothing."""
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     encoded = ev.select(
         F.col("event_id"),
         F.to_json(

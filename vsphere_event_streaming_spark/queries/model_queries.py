@@ -43,7 +43,6 @@ from ..functions.kmeans import (
     train_kmeans,
 )
 from ..registry import query
-from ..session import tune
 from ..state import corpus_key, persist, trained
 from ..tables import load
 
@@ -67,13 +66,9 @@ KMEANS_ITERS = 4
 AUC_BUCKETS = 128
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load(spark, sf_dir, name)
-
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     w = trained(
         "logreg",
         corpus_key(sf_dir),
@@ -477,7 +472,7 @@ def q_embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
     one codegen fold per row and component. The oracle replays Gram +
     both iterations + deflation + re-orthogonalization +
     projections, all exactly."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
 
     def build():
         g = gram_micro(emb)
@@ -505,7 +500,7 @@ def _whiten_model(spark: SparkSession, sf_dir: str):
     Rayleigh quotients, the row count and the Gram-diagonal trace —
     ONE Gram pass per corpus fingerprint (``state.trained``), shared
     by every query built on the top-m components."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
 
     def build():
         g = gram_micro(emb)
@@ -665,7 +660,7 @@ def q_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_model(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     cm = trained(
         "kmeans",
         corpus_key(sf_dir),
@@ -866,7 +861,7 @@ def q_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import spread
 
     emb, cm = _kmeans_model(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     lm = bigram_lm_scores(docs, LM_ALPHA).select("doc_id", "avg_logp")
     # spread before the argmin (the q_dedup_semantic_cells lesson):
     # the single-row-group test scan would serialize the interpreted
@@ -928,7 +923,7 @@ def _sem_k(n: int) -> int:
 
 def _sem_kmeans_model(spark: SparkSession, sf_dir: str):
     """``emb, cm``: the corpus-scaled SemDeDup cell model."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     cm = trained(
         "sem_kmeans",
         corpus_key(sf_dir),

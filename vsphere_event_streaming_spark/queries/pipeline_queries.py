@@ -38,14 +38,9 @@ from ..functions.vectors import (
     min_id_query_split,
 )
 from ..registry import query
-from ..session import tune
 from ..state import corpus_key, persist, trained
 from ..tables import load
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load(spark, sf_dir, name)
 
 
 # ----------------------------------------------------------------------
@@ -133,7 +128,7 @@ def _duck_cosine(a: str, b: str) -> str:
     """,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return exact_dedup_keepers(_t(spark, sf_dir, "documents"))
+    return exact_dedup_keepers(load(spark, sf_dir, "documents"))
 
 
 # ======================================================================
@@ -172,7 +167,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle document frequency, so this is the ground-truth check, not
     the 100 TB plan — ``q_dedup_lsh_verified`` is the canonical
     near-dup pipeline at scale."""
-    return jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
+    return jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
 
 
 # ======================================================================
@@ -232,7 +227,7 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import containment_pairs
 
     return containment_pairs(
-        _t(spark, sf_dir, "documents"), threshold=CONTAINMENT_T
+        load(spark, sf_dir, "documents"), threshold=CONTAINMENT_T
     ).select(
         "id_small",
         "id_big",
@@ -289,7 +284,7 @@ def q_dedup_containment_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import containment_pairs_pruned
 
     return containment_pairs_pruned(
-        _t(spark, sf_dir, "documents"),
+        load(spark, sf_dir, "documents"),
         threshold=CONTAINMENT_T,
         max_doc_freq=5,
     ).select(
@@ -340,7 +335,7 @@ def q_dedup_near_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import jaccard_pairs_pruned
 
     return jaccard_pairs_pruned(
-        _t(spark, sf_dir, "documents"), threshold=0.5, max_doc_freq=5
+        load(spark, sf_dir, "documents"), threshold=0.5, max_doc_freq=5
     )
 
 
@@ -387,7 +382,7 @@ def q_dedup_near_char(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import jaccard_pairs_char
 
     return jaccard_pairs_char(
-        _t(spark, sf_dir, "documents"), threshold=0.6, n=5
+        load(spark, sf_dir, "documents"), threshold=0.6, n=5
     )
 
 
@@ -409,7 +404,7 @@ def q_dedup_near_char(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-bigram frequency table: transform+explode+count — the
     n-gram language-model statistics pass over the corpus."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     ws = T.words(F.col("text"))
     bigrams = F.transform(
         F.sequence(F.lit(1), F.size(ws) - 1),
@@ -508,7 +503,7 @@ def q_dedup_lsh_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline; this is the plan you run at scale."""
     from ..functions.dedup import lsh_verified_pairs
 
-    return lsh_verified_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
+    return lsh_verified_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
 
 
 @query("q_dedup_minhash", oracle=_minhash_oracle())
@@ -517,7 +512,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the identical modular arithmetic in SQL; the engine-side
     band join shuffles constant-size keys per doc (the 100 TB path —
     the oracle's O(n²) band compare is the *check*, not the plan)."""
-    return lsh_candidate_pairs(_t(spark, sf_dir, "documents"))
+    return lsh_candidate_pairs(load(spark, sf_dir, "documents"))
 
 
 # ======================================================================
@@ -592,7 +587,7 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     n_sig = len(MINHASH_PARAMS)
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     arrs = shingle_hash_arrays(docs)
     sh = arrs.select("id", F.explode("sh_arr").alias("sh"))
     sig = persist(_signatures_from(sh))
@@ -684,7 +679,7 @@ def _simhash_oracle() -> str:
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash per document; identical fingerprints ⇒ near-dup
     candidates (pairing is then a groupBy on the fingerprint)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return simhash_table(docs).select(F.col("id").alias("doc_id"), "simhash")
 
 
@@ -701,7 +696,7 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SimHash dedup path (fingerprint self-join on the 16-bit key)."""
     from ..functions.dedup import simhash_pairs
 
-    return simhash_pairs(_t(spark, sf_dir, "documents"))
+    return simhash_pairs(load(spark, sf_dir, "documents"))
 
 
 @query(
@@ -732,7 +727,7 @@ def q_dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import simhash_pairs_hamming
 
     return simhash_pairs_hamming(
-        _t(spark, sf_dir, "documents"), max_hamming=1
+        load(spark, sf_dir, "documents"), max_hamming=1
     )
 
 
@@ -836,7 +831,7 @@ def q_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tp = persist(
         lsh_verified_pairs(
-            _t(spark, sf_dir, "documents"), threshold=0.5
+            load(spark, sf_dir, "documents"), threshold=0.5
         ).select("id_a", "id_b")
     )
     e1 = tp.select(F.col("id_a").alias("na"), F.col("id_b").alias("nb"))
@@ -898,7 +893,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup: cluster-label blocking (the IVF-cell analog
     at scale) then exact cosine within each block — never a full cross
     join."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     a = emb.select(
         F.col("vec_id").alias("id_a"), "label", F.col("embedding").alias("va")
     )
@@ -937,7 +932,7 @@ _KNN_ORACLE = f"""
 def q_knn_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 against the min-vec_id query vector.
     TakeOrderedAndProject top-k — no global sort."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     qvec, corpus = min_id_query_split(emb)
     return knn_topk(corpus, qvec, k=10)
 
@@ -965,7 +960,7 @@ def _pq_model(spark: SparkSession, sf_dir: str):
     from ..functions.vectors import pq_fit
     from ..tables import spread
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
 
     def build():
         row = emb.select(F.size("embedding").alias("d")).first()
@@ -1069,7 +1064,7 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_udf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched pandas_udf cosine between consecutive vectors —
     the vectorized-Python path (SURVEY §2.10)."""
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     a = emb.select("vec_id", F.col("embedding").alias("va"))
     b = emb.select(
         (F.col("vec_id") - 1).alias("vec_id"), F.col("embedding").alias("vb")
@@ -1099,7 +1094,7 @@ def q_udf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize → explode → count: the UDTF-shaped pattern as pure
     relational ops."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(T.words(F.col("text"))).alias("token"))
         .groupBy("token")
@@ -1119,7 +1114,7 @@ def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         T.token_count(F.col("text")).cast("bigint").alias("ws_tokens"),
@@ -1151,7 +1146,7 @@ def _lang_oracle() -> str:
 
 @query("q_lang_id", oracle=_lang_oracle())
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
@@ -1195,7 +1190,7 @@ def q_langid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same codegen scoring expression as q_lang_id — shared
     T.lang_id, so the gate and its eval can never drift); at 100 TB
     the state is language-squared, never row-proportional."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select(
             F.col("lang").alias("labeled_lang"),
@@ -1251,7 +1246,7 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     One codegen regexp projection per row — no shuffle, no Python;
     patterns stay in the Java∩RE2-compatible subset the regexp tier
     documents, and the oracle replays count-for-count."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     n_words = F.size(T.words(F.col("text"))).cast("long")
     n_sent = F.greatest(
         F.size(F.expr(r"regexp_extract_all(text, '[.!?]+', 0)")),
@@ -1376,7 +1371,7 @@ def q_quality_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     combined; ≤ alphabet-size rows per doc), one per-doc fold over a
     ≤ alphabet-size array — no window, no join beyond the final
     labels-sized left join back to doc ids, no Python."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     ex = docs.select(
         "doc_id",
         F.explode(
@@ -1430,7 +1425,7 @@ def q_quality_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_quality_score", oracle=_quality_oracle())
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     feats = T.quality_features(F.col("text"))
     return docs.select(
         "doc_id",
@@ -1525,7 +1520,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantile_bucket,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     scored = docs.select(
         "doc_id",
         T.quality_score(F.col("text")).alias("q"),
@@ -1552,7 +1547,7 @@ def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", T.fingerprint(F.col("text")).alias("fingerprint")
     )
@@ -1585,7 +1580,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column metadata extraction through the real mapInPandas
     plumbing (deterministic fake decoder — see functions.multimodal)."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     media = attach_payload(docs, "doc_id", "text")
     return extract_metadata(media, fake_decode=True)
 
@@ -1621,7 +1616,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-row-group parquet scans as ONE partition; the Python
     # codec stage needs the cores. r14: synth and decode fused into
     # one Arrow stage (same encode→decode walk, one Python launch)
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     return synth_png_image_meta(docs, "doc_id", "text")
 
 
@@ -1685,7 +1680,7 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import jaccard_pairs
     from ..operators.graph import dedup_groups
 
-    pairs = jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
+    pairs = jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
     return dedup_groups(pairs)
 
 
@@ -1727,7 +1722,7 @@ def q_dedup_group_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import jaccard_pairs
     from ..operators.graph import dedup_groups
 
-    pairs = jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
+    pairs = jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
     gl = dedup_groups(pairs)
     return (
         gl.groupBy("group_id")
@@ -1792,7 +1787,7 @@ def q_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import jaccard_pairs
     from ..operators.graph import dedup_groups
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     pairs = jaccard_pairs(docs, threshold=0.5)
     gl = dedup_groups(pairs)
     return docs.select("doc_id").join(gl, "doc_id", "left").select(
@@ -1850,7 +1845,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — never NaN, identically in both engines."""
     from ..functions.dedup import novelty_per_doc
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     # metric factored to dedup.novelty_per_doc (r10): shared with the
     # ShingleDfStore serve path and the corpus_prep diversity stage
     return novelty_per_doc(docs)
@@ -1894,7 +1889,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle set is eval-sized (AQE broadcasts when it fits)."""
     from ..functions.dedup import contamination_report
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     rep = contamination_report(docs, bench, threshold=0.5)
     return rep.select(
@@ -1935,7 +1930,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     text (email → phone → ipv4, fixed order). Pure codegen regexp —
     the patterns live in the Java-regex ∩ RE2 subset so the oracle
     matches them byte-for-byte."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     counts = T.pii_counts(F.col("text"))
     return docs.select(
         "doc_id",
@@ -1992,7 +1987,7 @@ def q_markup_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows."""
     from ..functions.text import markup_profile
 
-    prof = markup_profile(_t(spark, sf_dir, "documents"))
+    prof = markup_profile(load(spark, sf_dir, "documents"))
     return prof.select(
         F.col("id").alias("doc_id"),
         F.col("n_tags").cast("bigint").alias("n_tags"),
@@ -2032,7 +2027,7 @@ def q_url_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     nasty-corpus fuzz; the driver corpus checks the zero-URL path."""
     from ..functions.text import url_domains
 
-    u = url_domains(_t(spark, sf_dir, "documents"))
+    u = url_domains(load(spark, sf_dir, "documents"))
     return u.select(
         F.col("id").alias("doc_id"),
         F.col("n_urls").cast("bigint").alias("n_urls"),
@@ -2059,7 +2054,7 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection): distinct ratio and top-word frequency share, from one
     explode → (doc, word) count → per-doc aggregate chain — no join,
     no second pass over the text."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return T.repetition_profile(docs).withColumnRenamed("id", "doc_id")
 
 
@@ -2107,7 +2102,7 @@ def q_knn_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment and score must match the SQL replay exactly."""
     from ..functions.vectors import hyperplane_topk
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     qvec, corpus = min_id_query_split(emb)
     return hyperplane_topk(corpus, qvec, k=10, n_bits=6)
 
@@ -2200,7 +2195,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine, dot, hyperplane_sig
     from ..tables import spread
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     s = persist(
         spread(emb).select(
             "vec_id",
@@ -2353,7 +2348,7 @@ def q_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import cosine, dot, hyperplane_sig
     from ..tables import spread
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     s = persist(
         spread(emb).select(
             "vec_id",
@@ -2485,7 +2480,7 @@ def q_pipeline_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import contamination_report, exact_dedup_keepers
     from ..functions.text import pii_counts, repetition_profile
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     contaminated = (
         contamination_report(docs, bench, threshold=0.5)
@@ -2559,7 +2554,7 @@ def q_knn_hyperplane_probed(spark: SparkSession, sf_dir: str) -> DataFrame:
     at a bounded constant candidate cost."""
     from ..functions.vectors import hyperplane_topk_probed
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     qvec, corpus = min_id_query_split(emb)
     return hyperplane_topk_probed(corpus, qvec, k=10, n_bits=6)
 
@@ -2614,7 +2609,7 @@ def q_dataset_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     individual keep decision, not just per-stratum counts."""
     from ..functions.sampling import stratified_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return stratified_sample(
         docs, MIX_RATES, seed=MIX_SEED
     ).select("doc_id", "lang")
@@ -2700,7 +2695,7 @@ def q_dataset_mix_temp(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the corpus_prep mixing stage, VERDICT_r8 #6)."""
     from ..functions.sampling import keep_bucket, temperature_rates
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     rates = temperature_rates(docs)
     return (
         docs.join(F.broadcast(rates), "lang")
@@ -2753,7 +2748,7 @@ def q_corpus_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sampling import corpus_split
 
     return corpus_split(
-        _t(spark, sf_dir, "documents"), SPLIT_FRACTIONS, seed=SPLIT_SEED
+        load(spark, sf_dir, "documents"), SPLIT_FRACTIONS, seed=SPLIT_SEED
     ).select("doc_id", "lang", "split")
 
 
@@ -2844,7 +2839,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sampling import corpus_split
 
     docs = corpus_split(
-        _t(spark, sf_dir, "documents"), SPLIT_FRACTIONS, seed=SPLIT_SEED
+        load(spark, sf_dir, "documents"), SPLIT_FRACTIONS, seed=SPLIT_SEED
     )
     train = docs.filter(F.col("split") == "train")
     evald = docs.filter(F.col("split") != "train")
@@ -2900,7 +2895,7 @@ def q_split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sampling import split_label
 
     pairs = lsh_verified_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5
+        load(spark, sf_dir, "documents"), threshold=0.5
     )
     sa = split_label(F.col("id_a"), SPLIT_FRACTIONS, SPLIT_SEED)
     sb = split_label(F.col("id_b"), SPLIT_FRACTIONS, SPLIT_SEED)
@@ -2960,7 +2955,7 @@ def q_sample_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed, not stored)."""
     from ..functions.sampling import keep_bucket
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     return (
         docs.select(
             "doc_id",
@@ -3026,7 +3021,7 @@ def q_len_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream never shuffles."""
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     n_tok = F.size(T.words(F.col("text"))).cast("bigint")
     t = docs.select(
         "lang",
@@ -3118,7 +3113,7 @@ def q_sample_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.text import words
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     t = docs.select(
         "lang",
         "doc_id",
@@ -3220,7 +3215,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pick is a TakeOrderedAndProject heap (k rows to the driver,
     never a global sort). Zero-token docs can't draw and are
     excluded identically in both engines."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     t = docs.select(
         "doc_id",
         F.size(T.words(F.col("text"))).cast("long").alias("n_tokens"),
@@ -3277,7 +3272,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sampling import pack_sequences
 
     packed = pack_sequences(
-        _t(spark, sf_dir, "documents"), PACK_BUDGET_TOKENS
+        load(spark, sf_dir, "documents"), PACK_BUDGET_TOKENS
     )
     return packed.groupBy("lang", "pack_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -3343,7 +3338,7 @@ def q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sampling import pack_sequences
 
     packed = pack_sequences(
-        _t(spark, sf_dir, "documents"), PACK_BUDGET_TOKENS
+        load(spark, sf_dir, "documents"), PACK_BUDGET_TOKENS
     )
     cells = packed.groupBy("lang", "pack_id").agg(
         F.sum("n_tokens").cast("bigint").alias("pack_tokens")
@@ -3409,7 +3404,7 @@ def q_vector_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays covered by q_knn_sq, which consumes the codes."""
     from ..functions.vectors import sq_codes, sq_range
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     lo, hi = sq_range(emb)
     return emb.select(
         "vec_id",
@@ -3458,7 +3453,7 @@ def q_knn_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable end-to-end where trained PQ is rows-only."""
     from ..functions.vectors import sq_adc_topk, sq_range
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     lo, hi = sq_range(emb)
     qvec, corpus = min_id_query_split(emb)
     return sq_adc_topk(corpus, qvec, lo, hi, k=10)
@@ -3545,7 +3540,7 @@ def q_boilerplate_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-row-group test parquet scans as ONE partition; widen so
     # the interpreted segment lambdas parallelize (1.92 s -> 0.99 s at
     # sf0.1; no-op at real scale)
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     return T.boilerplate_scrub(docs, SEG_WORDS, BOILER_MIN_DF)
 
 
@@ -3618,7 +3613,7 @@ def q_quality_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     join row per document, bounded by vocabulary, not corpus length.
     The vocabulary size V is a driver scalar (the BM25 N/avgdl
     pattern)."""
-    return T.bigram_lm_scores(_t(spark, sf_dir, "documents"), LM_ALPHA)
+    return T.bigram_lm_scores(load(spark, sf_dir, "documents"), LM_ALPHA)
 
 
 # ======================================================================
@@ -3674,7 +3669,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vectors import semantic_dedup
     from ..tables import spread
 
-    return semantic_dedup(spread(_t(spark, sf_dir, "embeddings")))
+    return semantic_dedup(spread(load(spark, sf_dir, "embeddings")))
 
 
 # ======================================================================
@@ -3730,7 +3725,7 @@ def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import repeated_spans
     from ..tables import spread
 
-    return repeated_spans(spread(_t(spark, sf_dir, "documents")))
+    return repeated_spans(spread(load(spark, sf_dir, "documents")))
 
 
 # ======================================================================
@@ -3800,7 +3795,7 @@ def q_importance_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     three corpus scalars (target tokens, raw tokens, vocabulary) are
     driver values — the BM25 N/avgdl pattern."""
     return T.importance_weights(
-        _t(spark, sf_dir, "documents"), DSIR_TARGET_SOURCE, DSIR_ALPHA
+        load(spark, sf_dir, "documents"), DSIR_TARGET_SOURCE, DSIR_ALPHA
     )
 
 
@@ -3855,7 +3850,7 @@ def q_pipeline_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     per scoring model and never shuffled whole."""
     from ..functions.sampling import stratified_sample
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     lm = T.bigram_lm_scores(docs, LM_ALPHA).select("doc_id", "avg_logp")
     iw = T.importance_weights(docs, DSIR_TARGET_SOURCE, DSIR_ALPHA)
     selected = (
@@ -3938,7 +3933,7 @@ def q_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_cell_png_phash
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     return synth_cell_png_phash(docs, "doc_id", "text").select(
         F.col("media_id").alias("doc_id"), "phash"
     )
@@ -3971,7 +3966,7 @@ def q_media_phash_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_cell_jpeg_phash
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     return synth_cell_jpeg_phash(docs, "doc_id", "text").select(
         F.col("media_id").alias("doc_id"), "phash"
     )
@@ -4065,7 +4060,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_cell_avi_frame_hashes
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     return synth_cell_avi_frame_hashes(
         docs, "doc_id", "text", every_ms=VIDEO_SAMPLE_MS
     ).select(F.col("media_id").alias("doc_id"), "frame_idx", "phash")
@@ -4119,7 +4114,7 @@ def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_wav_audio_fp
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     return synth_wav_audio_fp(docs, "doc_id", "text").select(
         F.col("media_id").alias("doc_id"), "afp"
     )
@@ -4190,7 +4185,7 @@ def q_text_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import spread
 
     emb = T.hash_embed(
-        spread(_t(spark, sf_dir, "documents")), HASH_EMBED_DIM
+        spread(load(spark, sf_dir, "documents")), HASH_EMBED_DIM
     )
     return emb.select(
         "doc_id",
@@ -4272,7 +4267,7 @@ def q_chunk_pool_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic until the single cosine."""
     from ..functions.vectors import cosine, dot
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     bound = F.greatest(
         F.length("text") - POOL_CHUNK_OVERLAP, F.lit(1)
     )
@@ -4370,7 +4365,7 @@ def q_text_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # results collect-identical at both SFs)
     emb = persist(
         T.hash_embed(
-            spread(_t(spark, sf_dir, "documents")), HASH_EMBED_DIM
+            spread(load(spark, sf_dir, "documents")), HASH_EMBED_DIM
         ).withColumnRenamed("doc_id", "vec_id")
     )
     qvec, corpus = min_id_query_split(emb)
@@ -4495,7 +4490,7 @@ def q_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import spread
     from .advanced_queries import bm25_scores
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
 
     # one tokenize pass, both token forms, persisted for all consumers
     shared = persist(
@@ -4609,7 +4604,7 @@ def q_search_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import spread
     from .advanced_queries import bm25_scores
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     bmtop = (
         bm25_scores(docs)
         .orderBy(F.col("score").desc(), "doc_id")
@@ -4697,7 +4692,7 @@ def q_training_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan-audited machinery that scales W1 to 100 TB."""
     from ..log.model import assign_offsets
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
         T.md5_hash(
@@ -4781,7 +4776,7 @@ def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..log.model import assign_offsets
 
     hi, mid, lo = CURRICULUM_STAGES
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     q = T.quality_score(F.col("text"))
     staged = docs.select(
         "doc_id",
@@ -4851,7 +4846,7 @@ def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     a broadcast join back to per-doc occurrence counts."""
     from ..functions.bpe import bpe_token_counts
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(docs, sf_dir)
     return bpe_token_counts(docs, merges)
 
@@ -4880,7 +4875,7 @@ def q_bpe_tokens_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary join."""
     from ..functions.bpe import WORD_RE_FULL, bpe_token_counts
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(docs, sf_dir, word_re=WORD_RE_FULL)
     return bpe_token_counts(docs, merges, word_re=WORD_RE_FULL)
 
@@ -4930,7 +4925,7 @@ def q_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_cell_png_phash
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     ph = persist(synth_cell_png_phash(docs, "doc_id", "text"))
     return hamming_pairs(
         ph, "media_id", "phash", MEDIA_MAX_HAMMING, n_bits=MEDIA_HASH_BITS
@@ -4995,7 +4990,7 @@ def q_dedup_media_robust(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_cell_png_phash
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     ph = persist(synth_cell_png_phash(docs, "doc_id", "text"))
     return hamming_pairs_robust(
         ph,
@@ -5042,7 +5037,7 @@ def q_dedup_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_wav_audio_fp
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     fp = persist(synth_wav_audio_fp(docs, "doc_id", "text"))
     return hamming_pairs(
         fp, "media_id", "afp", AUDIO_MAX_HAMMING, n_bits=AUDIO_HASH_BITS
@@ -5099,7 +5094,7 @@ def q_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.bpe import bpe_token_counts
     from ..functions.sampling import pack_sequences
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(docs, sf_dir)
     counted = docs.join(
         bpe_token_counts(docs, merges).select("doc_id", "bpe_tokens"),
@@ -5174,7 +5169,7 @@ def q_pack_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.bpe import bpe_token_counts
     from ..functions.sampling import pack_chunked
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(docs, sf_dir)
     counted = docs.join(
         bpe_token_counts(docs, merges).select("doc_id", "bpe_tokens"),
@@ -5231,7 +5226,7 @@ def q_dedup_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.multimodal import synth_cell_avi_clip_hashes
     from ..tables import spread
 
-    docs = spread(_t(spark, sf_dir, "documents"))
+    docs = spread(load(spark, sf_dir, "documents"))
     clips = persist(
         synth_cell_avi_clip_hashes(
             docs, "doc_id", "text", every_ms=VIDEO_SAMPLE_MS
@@ -5275,7 +5270,7 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     flips the value hash."""
     from ..functions.bpe import WORD_RE_FULL, bpe_token_counts
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(docs, sf_dir, word_re=WORD_RE_FULL)
     counts = bpe_token_counts(docs, merges, word_re=WORD_RE_FULL)
     return (
@@ -5366,7 +5361,7 @@ def q_bpe_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         word_vocab,
     )
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(docs, sf_dir, word_re=WORD_RE_FULL)
     vtok = word_vocab(docs, word_re=WORD_RE_FULL).select(
         "word",
@@ -5455,7 +5450,7 @@ def q_corpus_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_prep example (which publishes the card of its SELECTED
     corpus) so the released numbers and the declared query can never
     drift."""
-    return corpus_card(_t(spark, sf_dir, "documents"))
+    return corpus_card(load(spark, sf_dir, "documents"))
 
 
 def corpus_card(docs: DataFrame) -> DataFrame:
@@ -5563,7 +5558,7 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import shingle_hash_arrays
     from ..functions.sketches import bloom_bits, bloom_membership
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     arrs = shingle_hash_arrays(docs)
     # r14: persist the two tiny build-side tables. bench_sh feeds the
     # filter build AND the exact semi-join; bits is broadcast once per
@@ -5683,7 +5678,7 @@ def q_knn_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     affords."""
     from ..functions.vectors import dot
 
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = load(spark, sf_dir, "embeddings")
     qvec, corpus = min_id_query_split(emb)
     pv = F.slice(F.col("embedding"), 1, MRL_PREFIX)
     pq = F.slice(F.col("q"), 1, MRL_PREFIX)
@@ -5755,7 +5750,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     pairs = lsh_verified_pairs(
-        _t(spark, sf_dir, "documents"), threshold=SWEEP_FLOOR
+        load(spark, sf_dir, "documents"), threshold=SWEEP_FLOOR
     )
     b = (
         pairs.select(
@@ -5850,7 +5845,7 @@ def q_corpus_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤num_partitions-row prefix table, no Python."""
     from ..log.model import assign_offsets
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         F.explode(
             F.filter(
@@ -5952,7 +5947,7 @@ def q_corpus_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream shuffles once, keyed by token — the Zipf/CMS shape), a
     tiny cell join, and the intentional tiny-frame cumulative window.
     No distinct-over-prefix, no growing state."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     from pyspark.sql import Window
 
     tok = docs.select(
@@ -6052,7 +6047,7 @@ def q_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-bounded table. The same cells are batch-mergeable, so the
     drift gauge has the TermStatsStore-style incremental form if a
     monitor needs it."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         (F.col("doc_id") % 2).alias("s"),
         F.explode(

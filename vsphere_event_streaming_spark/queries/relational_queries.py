@@ -18,13 +18,8 @@ from pyspark.sql import functions as F
 
 from ..operators.joins import asof_join, broadcast_dim_join, range_join
 from ..registry import query
-from ..session import tune
 from ..tables import load
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load(spark, sf_dir, name)
 
 
 def _dsum(col, scale: int = 2):
@@ -48,8 +43,8 @@ def _dsum(col, scale: int = 2):
     """,
 )
 def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part")
+    li = load(spark, sf_dir, "lineitem")
+    part = load(spark, sf_dir, "part")
     return (
         broadcast_dim_join(li, part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
@@ -72,8 +67,8 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_smj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
+    li = load(spark, sf_dir, "lineitem")
+    orders = load(spark, sf_dir, "orders")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderstatus", "l_returnflag")
@@ -95,8 +90,8 @@ def q_join_smj(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").filter(
+    orders = load(spark, sf_dir, "orders")
+    cust = load(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     )
     return broadcast_dim_join(
@@ -115,8 +110,8 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000)
+    cust = load(spark, sf_dir, "customer")
+    orders = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 200000)
     return cust.join(
         orders, cust.c_custkey == orders.o_custkey, "left_semi"
     ).select("c_custkey", "c_name")
@@ -133,8 +128,8 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    cust = load(spark, sf_dir, "customer")
+    orders = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return cust.join(
         orders, cust.c_custkey == orders.o_custkey, "left_anti"
     ).select("c_custkey", "c_name")
@@ -153,8 +148,8 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    orders = load(spark, sf_dir, "orders")
+    li = load(spark, sf_dir, "lineitem")
     joined = range_join(
         orders,
         li,
@@ -196,7 +191,7 @@ def q_join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate per (window's type, hit's type)."""
     from ..operators.joins import binned_range_join
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     points = ev.select(
         F.col("event_id").alias("b_id"),
         F.col("ts").alias("b_ts"),
@@ -238,8 +233,8 @@ def q_join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
+    ev = load(spark, sf_dir, "events")
+    orders = load(spark, sf_dir, "orders")
     out = asof_join(
         ev,
         orders,
@@ -282,8 +277,8 @@ def q_join_asof_tol(spark: SparkSession, sf_dir: str) -> DataFrame:
     the data-freshness alarm a production dim join monitors. Same
     key-partitioned shuffle as q_join_asof; the tolerance is one more
     residual predicate, free at any scale."""
-    ev = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
+    ev = load(spark, sf_dir, "events")
+    orders = load(spark, sf_dir, "orders")
     out = asof_join(
         ev,
         orders,
@@ -321,8 +316,8 @@ def q_join_asof_fwd(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis). Same key-partitioned shuffle as the backward form with
     the time condition and rank order flipped.
     """
-    ev = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
+    ev = load(spark, sf_dir, "events")
+    orders = load(spark, sf_dir, "orders")
     out = asof_join(
         ev,
         orders,
@@ -370,8 +365,8 @@ def q_join_asof_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     the key, so both engines rank identically. Unmatched events keep
     NULLs under the left join — the reported dist_us doubles as the
     staleness column a tolerance would gate on."""
-    ev = _t(spark, sf_dir, "events")
-    orders = _t(spark, sf_dir, "orders")
+    ev = load(spark, sf_dir, "events")
+    orders = load(spark, sf_dir, "orders")
     out = asof_join(
         ev,
         orders,
@@ -412,7 +407,7 @@ def q_join_asof_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -433,7 +428,7 @@ def q_group_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("users"))
     )
@@ -453,7 +448,7 @@ def q_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     which cannot hash ndarray cells — accepts the frame.
     """
     agged = (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(
             F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
@@ -484,9 +479,9 @@ def q_approx_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    cust = load(spark, sf_dir, "customer")
+    nation = load(spark, sf_dir, "nation")
+    region = load(spark, sf_dir, "region")
     full = broadcast_dim_join(
         broadcast_dim_join(cust, nation, cust.c_nationkey == nation.n_nationkey),
         region,
@@ -509,7 +504,7 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_chain_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "events")
+        load(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -542,7 +537,7 @@ def q_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_acctbal").desc_nulls_last(),
         F.col("c_custkey").asc_nulls_last(),
     )
-    return _t(spark, sf_dir, "customer").select(
+    return load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_mktsegment",
         F.row_number().over(w).cast("bigint").alias("rn"),
@@ -569,7 +564,7 @@ def q_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").asc_nulls_last(), F.col("event_id").asc_nulls_last()
     )
     us = F.unix_micros(F.col("ts"))
-    return _t(spark, sf_dir, "events").select(
+    return load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         (us - F.lag(us).over(w)).alias("gap_us"),
@@ -598,7 +593,7 @@ def q_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return _t(spark, sf_dir, "events").select(
+    return load(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.count(F.lit(1)).over(w).alias("running_n"),
@@ -623,7 +618,7 @@ def q_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id")
     errors = ev.filter(F.col("event_type") == "error").select("user_id")
     return clicks.unionByName(errors).distinct()
@@ -648,7 +643,7 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare two empty sets."""
     from ..log.model import retention_filter
 
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     seg = ev.count() // 10
     retained = retention_filter(ev, seg, "event_id")
     return ev.select("event_id").exceptAll(retained.select("event_id")).distinct()
@@ -663,7 +658,7 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     a = ev.filter(F.col("event_type") == "click").select("user_id")
     b = ev.filter(F.col("event_type") == "purchase").select("user_id")
     return a.intersect(b)
@@ -695,7 +690,7 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.skew import salted_agg
 
-    ev = _t(spark, sf_dir, "events").withColumn(
+    ev = load(spark, sf_dir, "events").withColumn(
         "value_dec", F.col("value").cast("decimal(18,4)")
     )
     out = salted_agg(
@@ -737,8 +732,8 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.skew import salted_join
 
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id")
-    cust = _t(spark, sf_dir, "customer").select(
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id")
+    cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
     )

@@ -12,13 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import tune
 from ..tables import load
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load(spark, sf_dir, name)
 
 
 # -- string family (type-name build, message formatting; README.md:58,:73)
@@ -38,7 +33,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "part").select(
+    return load(spark, sf_dir, "part").select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
         F.lower("p_brand").alias("brand_lower"),
@@ -72,7 +67,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_time_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.col("o_orderdate")
-    return _t(spark, sf_dir, "orders").select(
+    return load(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.year(d).cast("bigint").alias("yr"),
         F.month(d).cast("bigint").alias("mo"),
@@ -103,7 +98,7 @@ def q_time_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("o_orderkey")
     p = F.col("o_totalprice")
-    return _t(spark, sf_dir, "orders").select(
+    return load(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.abs(p - 100000).alias("dist_from_100k"),
         F.floor(p).alias("price_floor"),
@@ -131,7 +126,7 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Failed string→int casts map to NULL (the reference's HTTP-400
     path for non-numeric ids) via try_cast, never a query abort."""
-    return _t(spark, sf_dir, "events").select(
+    return load(spark, sf_dir, "events").select(
         "event_id",
         F.col("event_id").cast("string").alias("id_str"),
         F.col("event_id").cast("string").try_cast("bigint").alias("id_roundtrip"),
@@ -156,7 +151,7 @@ def q_casts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     et = F.col("event_type")
-    return _t(spark, sf_dir, "events").select(
+    return load(spark, sf_dir, "events").select(
         "event_id",
         F.coalesce(F.nullif(et, F.lit("error")), F.lit("(masked)")).alias(
             "masked_type"
@@ -198,7 +193,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             head, F.lit(0.0).cast("double"), lambda a, x: a + x.cast("double")
         ),
     )
-    return _t(spark, sf_dir, "embeddings").select(
+    return load(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.size(emb).cast("bigint").alias("dim"),
         F.try_element_at(emb, F.lit(1)).cast("double").alias("first_val"),
@@ -221,7 +216,7 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build a map column, then read it back via map functions; the
     oracle checks the extracted values directly."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     m = F.create_map(
         F.lit("type"),
         F.col("event_type"),
@@ -251,7 +246,7 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "events").select(
+    return load(spark, sf_dir, "events").select(
         "event_id",
         F.get_json_object("props", "$.k").alias("k_str"),
         F.get_json_object("props", "$.k").try_cast("bigint").alias("k_num"),
@@ -279,7 +274,7 @@ def q_bitwise_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise scalar family: and/or/xor/shifts/popcount/complement —
     the arithmetic under hash bucketing, simhash and salted keys. All
     codegen; one projection over the scan."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load(spark, sf_dir, "events")
     eid = F.col("event_id")
     return ev.select(
         "event_id",

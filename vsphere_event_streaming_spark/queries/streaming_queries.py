@@ -17,15 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..session import tune
 from ..tables import load
 
 _HOUR_US = 3_600_000_000
 
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tune(spark)
-    return load(spark, sf_dir, "events")
 
 
 # -- T6a: tumbling window aggregate ------------------------------------
@@ -41,7 +36,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "6 hours").alias("w"))
         .agg(
@@ -76,7 +71,7 @@ def q_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """12h windows sliding every 6h — each event lands in 2 windows;
     the oracle replays the window assignment with epoch arithmetic."""
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "12 hours", "6 hours").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -121,7 +116,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """session_window(gap=1h) per user — Spark's session end is
     last-event + gap; the oracle is the classic gaps-and-islands
     formulation of the same semantics."""
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
@@ -196,7 +191,7 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`anomalies_from_cells` so the three can never drift."""
     from ..functions.sketches import anomalies_from_cells, rate_cells
 
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     return anomalies_from_cells(rate_cells(ev))
 
 
@@ -262,7 +257,7 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast or ride one co-partitioned exchange). No window over
     raw events, no Python."""
     s1, s2, s3 = FUNNEL_STAGES
-    ev_u = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
+    ev_u = load(spark, sf_dir, "events").filter(F.col("user_id").isNotNull())
     ev = ev_u.filter(F.col("ts").isNotNull())
     us = F.unix_micros(F.col("ts"))
     fu = ev_u.select("user_id").distinct()
@@ -349,7 +344,7 @@ def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`retention_from_days` so the three can never drift."""
     from ..functions.sketches import activity_days, retention_from_days
 
-    ev = _events(spark, sf_dir)
+    ev = load(spark, sf_dir, "events")
     return retention_from_days(activity_days(ev))
 
 
@@ -397,7 +392,7 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     once."""
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir).filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -484,7 +479,7 @@ def q_events_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concat_ws SKIPS null segments while the oracle's || nulls the
     # whole path — excluding null types keeps the two semantics
     # identical (and a null type is not a path step anyway)
-    ev = _events(spark, sf_dir).filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull()
         & F.col("user_id").isNotNull()
         & F.col("event_type").isNotNull()
@@ -544,7 +539,7 @@ def q_events_power_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts (shuffle keyed by user), then count-of-counts over the
     ≤distinct-counts cell table. No window, no join, no Python."""
     pu = (
-        _events(spark, sf_dir)
+        load(spark, sf_dir, "events")
         .filter(F.col("user_id").isNotNull())
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -592,7 +587,7 @@ def q_events_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer posture holds at any realistic log."""
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir).filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     us = F.unix_micros(F.col("ts"))
@@ -659,7 +654,7 @@ def q_events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.sketches import activity_days, stickiness_from_days
 
     return stickiness_from_days(
-        activity_days(_events(spark, sf_dir))
+        activity_days(load(spark, sf_dir, "events"))
     )
 
 
@@ -701,7 +696,7 @@ def q_events_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles once keyed by (type, hour)."""
     from pyspark.sql import Window
 
-    ev = _events(spark, sf_dir).filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("event_type").isNotNull()
     )
     us = F.unix_micros(F.col("ts"))
@@ -762,7 +757,7 @@ def q_events_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the type-vocabulary, never by event volume; the
     per-type counts ride a broadcast-sized ≤types-row table. No
     window, no Python, no cartesian."""
-    ev = _events(spark, sf_dir).filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
     )
     ut = ev.select("user_id", "event_type").distinct()
@@ -846,7 +841,7 @@ def q_events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: events collapse to ≤ types × days count cells in
     ONE map-side-combined aggregate, then a second ≤types-row moment
     aggregate over the CELLS. No window, no join, no Python."""
-    ev = _events(spark, sf_dir).filter(
+    ev = load(spark, sf_dir, "events").filter(
         F.col("ts").isNotNull() & F.col("event_type").isNotNull()
     )
     us = F.unix_micros(F.col("ts"))

@@ -65,29 +65,25 @@ def envelope_batch(batch: DataFrame, source: str) -> DataFrame:
     )
 
 
-def _sink_state(spark: SparkSession, log_dir: str) -> tuple[int, int] | None:
-    """(max_offset, max_key) of the sink, or None if empty/absent.
+def read_sink(spark: SparkSession, log_dir: str) -> DataFrame | None:
+    """The sink as a log DataFrame, or None when it does not exist yet.
 
-    Only a genuinely missing sink path maps to None (first run ever).
-    Any OTHER read failure propagates: treating a transient error as
-    'empty sink' would silently re-seed offsets over existing data —
-    duplicate offsets and an un-deduplicated replay overlap are worse
-    than a crashed batch, which checkpoint recovery simply retries.
+    The one reader of the sink's own state (offset seeding here, the
+    watch start in ``watch``). Only a genuinely missing sink path maps
+    to None (first run ever). Any OTHER read failure propagates:
+    treating a transient error as 'empty sink' would silently re-seed
+    offsets over existing data, or turn a tail-from-now watch into a
+    full-history replay that skips the purged-start check — worse than
+    a crashed batch, which checkpoint recovery simply retries.
     """
     from pyspark.errors import AnalysisException
 
     try:
-        existing = spark.read.schema(LOG_SCHEMA_DDL).parquet(log_dir)
-        row = existing.agg(
-            F.max("offset").alias("mo"), F.max("key").alias("mk")
-        ).first()
+        return spark.read.schema(LOG_SCHEMA_DDL).parquet(log_dir)
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" in str(exc):
             return None
         raise
-    if row is None or row["mo"] is None:
-        return None
-    return int(row["mo"]), int(row["mk"])
 
 
 def append_log_batch(
@@ -140,31 +136,32 @@ def append_log_batch(
                 f"max_record_size={max_record_size} bytes"
             )
     if "max_offset" not in state:
-        persisted = _sink_state(spark, log_dir)
-        if persisted is not None:
-            state["max_offset"], state["max_key"] = persisted
+        sink = read_sink(spark, log_dir)
+        if sink is not None:
+            row = sink.agg(
+                F.max("offset").alias("mo"), F.max("key").alias("mk")
+            ).first()
+            if row["mo"] is not None:
+                state.update(max_offset=int(row["mo"]), max_key=int(row["mk"]))
 
-    if "max_offset" not in state:
-        # first batch ever: seed offsets from the first event key
-        stats = records.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("key").alias("lo"),
-            F.max("key").alias("hi"),
-        ).first()
-        if not stats["n"]:
-            return
-        start, hi = int(stats["lo"]), int(stats["hi"])
-        fresh = records
-    else:
+    fresh = records
+    if "max_key" in state:
         # replay-overlap dedup: keys are monotonic (T5), drop re-reads
         fresh = records.filter(F.col("key") > F.lit(state["max_key"]))
-        stats = fresh.agg(
-            F.count(F.lit(1)).alias("n"), F.max("key").alias("hi")
-        ).first()
-        if not stats["n"]:
-            return
-        start, hi = state["max_offset"] + 1, int(stats["hi"])
-    n = int(stats["n"])
+    stats = fresh.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("key").alias("lo"),
+        F.max("key").alias("hi"),
+    ).first()
+    if not stats["n"]:
+        return
+    # continue the sink's offsets; the first batch ever seeds them from
+    # the first event key
+    if "max_offset" in state:
+        start = state["max_offset"] + 1
+    else:
+        start = int(stats["lo"])
+    n, hi = int(stats["n"]), int(stats["hi"])
 
     seeded = assign_offsets(
         fresh, order_by=["key"], start=start, offset_col="offset"

@@ -17,8 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..errors import OutOfRangeError
-from .ingest import LOG_SCHEMA_DDL
+from ..log.model import log_range, watch_start
+from .ingest import LOG_SCHEMA_DDL, read_sink
 
 
 def watch(
@@ -28,37 +28,17 @@ def watch(
 ) -> DataFrame:
     """Streaming DataFrame of log records with offset >= start.
 
-    ``start_offset=None`` → tail from "now": latest+1 at call time
-    (reference server.go:161-166). Validation of a purged start
-    mirrors the 400 path.
+    The start is ``log.model.watch_start`` over the sink's range at
+    call time: ``None``/``-1`` tails from "now" (latest+1), and a
+    purged start raises ``OutOfRangeError`` — the HTTP 400 path.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        existing = spark.read.schema(LOG_SCHEMA_DDL).parquet(log_dir)
-        row = existing.agg(
-            F.min("offset").alias("earliest"), F.max("offset").alias("latest")
-        ).first()
-        earliest = row["earliest"]
-        latest = row["latest"]
-    except AnalysisException as exc:
-        # ONLY a missing sink means 'empty log'; any other failure
-        # propagates — otherwise a transient read error would turn a
-        # tail-from-now into a full-history replay and skip the
-        # purged-start validation below
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-        earliest = latest = None
-
-    if start_offset is None or start_offset == -1:
-        # -1 is the reference's 'absent' sentinel → tail from now
-        # (server.go:149-166)
-        start_offset = (latest + 1) if latest is not None else 0
-    elif earliest is not None and start_offset < earliest:
-        raise OutOfRangeError(f"invalid offset: {start_offset}")
-
+    earliest = latest = None
+    sink = read_sink(spark, log_dir)
+    if sink is not None:
+        earliest, latest = log_range(sink).first()
+    start = watch_start(earliest, latest, start_offset)
     stream = spark.readStream.schema(LOG_SCHEMA_DDL).parquet(log_dir)
-    return stream.filter(F.col("offset") >= F.lit(int(start_offset)))
+    return stream.filter(F.col("offset") >= F.lit(int(start)))
 
 
 def consume_ndjson(lines: DataFrame, value_col: str = "value") -> DataFrame:
