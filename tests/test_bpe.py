@@ -9,15 +9,19 @@ any one of them surfaces as a disagreement.
 
 from __future__ import annotations
 
+import os
 import re
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from vsphere_event_streaming_spark.functions import bpe
 from vsphere_event_streaming_spark.functions.bpe import (
     DEFAULT_MERGES,
     MARKER,
+    WORD_RE,
+    WORD_RE_FULL,
     apply_bpe,
     bpe_token_counts,
     learn_bpe,
@@ -190,6 +194,83 @@ def test_learn_bpe_stops_when_pairs_exhaust(spark):
     out = {r.doc_id: r.bpe_tokens for r in
            bpe_token_counts(docs, merges).collect()}
     assert out == {1: 3, 2: 1}
+
+
+#: The digit/apostrophe corpus of the full-alphabet tests.
+DIGIT_TEXTS = [
+    "don't stop gpt4 in 2024 don't stop",
+    "it's gpt4 again it's 2024 again and again",
+    "plain words only here",
+]
+
+#: Tie-dense counts over non-ASCII and emoji words. "ｚ" (U+FF5A) sorts
+#: above every UTF-16 surrogate but below "😀" (U+1F600) in code-point
+#: order, which is Spark's UTF-8 binary order: a UTF-16 comparison
+#: would flip the tie between ("ｚ", "😀") and ("😀", "ｚ").
+TIE_DENSE = Counter({
+    "😀ｚ": 2, "ｚ😀": 2, "éa": 2, "aé": 2, "ßß": 2, "👍🏽": 2,
+    "ab": 2, "ba": 2, "abab": 1, "ñandú": 1, "über": 1, "naïve": 1,
+})
+
+
+def _corpus_case(spark, texts=None, word_re=WORD_RE, k=DEFAULT_MERGES):
+    if texts is None:
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        texts = [r.text for r in docs.select("text").collect()]
+    else:
+        docs = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+    return word_vocab(docs, word_re=word_re), ref_vocab(texts, word_re), k
+
+
+def _counts_case(spark, counts, k):
+    frame = spark.createDataFrame(list(counts.items()), "word string, cnt long")
+    return frame, counts, k
+
+
+PARITY_CASES = {
+    "sf0.001": lambda s: _corpus_case(s),
+    "sf0.001-no-merges": lambda s: _corpus_case(s, k=0),
+    "full-alphabet-digits": lambda s: _corpus_case(
+        s, DIGIT_TEXTS, WORD_RE_FULL, 6
+    ),
+    "pairs-exhaust": lambda s: _corpus_case(s, ["ab ab ab", "ab"], k=10),
+    "empty-vocab": lambda s: _counts_case(s, Counter(), DEFAULT_MERGES),
+    "tie-dense-unicode": lambda s: _counts_case(s, TIE_DENSE, 20),
+}
+
+
+@pytest.mark.parametrize("path", ["driver", "spark-loop"])
+@pytest.mark.parametrize("case", list(PARITY_CASES))
+def test_both_learner_paths_match_reference(spark, monkeypatch, case, path):
+    """learn_bpe trains a vocabulary within TRAIN_VOCAB_WORDS on the
+    driver and a larger one with the Spark loop; both must equal the
+    reference. A cap of -1 puts every vocabulary, even an empty one,
+    over it."""
+    if path == "spark-loop":
+        monkeypatch.setattr(bpe, "TRAIN_VOCAB_WORDS", -1)
+    vocab, ref, k = PARITY_CASES[case](spark)
+    assert learn_bpe(vocab, k) == ref_learn(ref, k)
+
+
+def test_bounded_vocab_trains_in_at_most_two_jobs(spark):
+    """The spine's sf0.01 vocabulary is within the cap: one collect
+    (at most 2 jobs) replaces the loop's one aggregation job and one
+    argmax job per merge (26 jobs for its 12 merges)."""
+    sf0_01 = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    docs = spark.read.parquet(f"{sf0_01}/documents.parquet")
+    vocab = word_vocab(docs)
+    sc = spark.sparkContext
+    sc.setJobGroup("bounded-bpe-train", "bounded-bpe-train")
+    try:
+        merges = learn_bpe(vocab)
+        jobs = sc.statusTracker().getJobIdsForGroup("bounded-bpe-train")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(merges) == DEFAULT_MERGES
+    assert 1 <= len(jobs) <= 2, jobs
 
 
 def test_no_word_docs_keep_zero_counts(spark):

@@ -50,6 +50,31 @@ def test_http_point_error_classes_are_400(log_server, bad):
     assert e.value.code == 400
 
 
+def test_negative_point_id_is_decided_before_any_job(spark, log_server):
+    """A negative id is below every log start whatever the range is,
+    so ``get_event`` raises before ``range()`` runs a Spark job; the
+    HTTP body is unchanged."""
+    from vsphere_event_streaming_spark.errors import OutOfRangeError
+
+    rows = [(i, str(i)) for i in range(10, 130)]
+    svc = EventLogService(
+        spark.createDataFrame(rows, "offset long, value string")
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("negative-point-id", "negative-point-id")
+    try:
+        with pytest.raises(OutOfRangeError, match="^invalid offset: -3$"):
+            svc.get_event("-3")
+        assert sc.statusTracker().getJobIdsForGroup("negative-point-id") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    with pytest.raises(urllib.error.HTTPError) as e:
+        _get(log_server + "/api/v1/events/-3")
+    assert e.value.code == 400
+    assert e.value.read() == b"invalid offset: invalid offset: -3\n"
+
+
 def test_http_page_is_last_50(log_server):
     status, body = _get(log_server + "/api/v1/events")
     page = json.loads(body)

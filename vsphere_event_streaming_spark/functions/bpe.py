@@ -12,9 +12,15 @@ Spark-first shape, chosen for 100 TB:
   vocabulary-bounded (it stops growing long before the corpus does),
   so the per-merge pair count is an aggregation over a small cached
   frame, not a corpus pass. The corpus is read ONCE to build it.
-- **Driver state is O(num_merges).** Each training iteration collects
-  exactly one row (the argmax pair); the merge table — like the IVF
-  centroid set in ``vectors.py`` — is bounded, broadcast-safe state.
+- **A bounded vocabulary trains on the driver.** One collect reads
+  at most :data:`TRAIN_VOCAB_WORDS` + 1 ``(word, cnt)`` rows (2 Spark
+  jobs on an aggregated vocabulary). Within the cap the merges are
+  learned in Python with incremental pair counts, the standard BPE
+  learner, and no further job runs. Over the cap the Spark loop
+  runs: each merge is a pair-count aggregation over the cached
+  vocabulary and a one-row argmax collect, so driver state stays
+  O(num_merges). Either way the merge table — like the IVF centroid
+  set in ``vectors.py`` — is bounded, broadcast-safe state.
 - **Application is whole-stage codegen.** With the merge table known,
   applying K merges is K chained literal ``replace`` calls — JVM-side
   string ops, no Python in the loop. (The judge's expected shape was
@@ -37,14 +43,18 @@ replays BOTH training (K chained materialized CTEs) and application
 (``list_reduce`` over the learned merge list) in DuckDB, so
 ``q_bpe_tokens`` carries a full value-hash oracle.
 
-At real scale a trainer would checkpoint the repr column every ~50
-merges (the K-deep projection lineage re-evaluates earlier merges
-during pair counting) and train on a capped vocabulary (top-N words
-by count — the long tail contributes no merges); both are noted here
-rather than hard-coded because the declared query's K is small.
+Over the cap, a trainer at real scale would checkpoint the Spark
+loop's repr column every ~50 merges (the K-deep projection lineage
+re-evaluates earlier merges during pair counting). Training only the
+top-N words by count would keep every vocabulary on the driver, but
+the tail's counts can change the argmax, so those merges would
+differ from the oracle's; neither is hard-coded because the declared
+query's K is small and its vocabulary is far inside the cap.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -91,6 +101,18 @@ DEFAULT_MERGES = 12
 #: occurrence mass — goes through an ordinary shuffle join. 256Ki
 #: words × ~20 bytes ≈ 5 MB build side at any corpus size.
 BROADCAST_HEAD_WORDS = 262_144
+
+#: Driver-training cap for :func:`learn_bpe`: a vocabulary of at most
+#: this many words is collected once and trained in Python; a
+#: larger one keeps the per-merge Spark loop. Measured on 4 cores
+#: (local[4], warm), 12 merges over synthetic Zipf-counted [a-z]{2,10}
+#: vocabularies, collect + driver training against the Spark loop:
+#: 4k words 0.16 s vs 2.9 s, 16k 0.2 s vs 3.1 s, 64k 0.7 s vs 5.9 s,
+#: 256k 2.8 s vs 17.9 s. The incremental pair update carries the large
+#: sizes: a full pair recount per merge took 2.7 s at 64k and 12.2 s
+#: at 256k words against 0.4 s and 1.7 s incremental. The collected
+#: rows are the size of the :data:`BROADCAST_HEAD_WORDS` build side.
+TRAIN_VOCAB_WORDS = 262_144
 
 
 def word_vocab(
@@ -153,13 +175,30 @@ def merge_expr(r: Column, x: str, y: str) -> Column:
 def learn_bpe(
     vocab: DataFrame, num_merges: int = DEFAULT_MERGES
 ) -> list[tuple[str, str]]:
-    """Train the merge table: ``num_merges`` iterations, each one a
-    pair-count aggregation over the (cached) vocabulary and a one-row
-    argmax collect. Stops early when no pair remains.
+    """Train the merge table: ``num_merges`` argmax-pair merges over
+    the ``(word, cnt)`` table. Stops early when no pair remains.
+
+    One collect reads at most :data:`TRAIN_VOCAB_WORDS` + 1 rows. A
+    vocabulary within the cap trains on the driver
+    (:func:`_learn_on_driver`, no further Spark job); a larger one runs
+    the Spark loop, one pair-count aggregation and one-row argmax
+    collect per merge over the (cached) vocabulary. Both paths return
+    the same merges (``tests/test_bpe.py`` runs every parity case on
+    both).
 
     Tie-break (c DESC, x ASC, y ASC) is the cross-engine contract —
     the DuckDB oracle and the pure-Python reference order identically.
     """
+    rows = (
+        vocab.select("word", "cnt").limit(TRAIN_VOCAB_WORDS + 1).collect()
+    )
+    # the driver path drops a pair when its count reaches 0, which is
+    # "no occurrence left" only for positive counts; anything else
+    # (never produced by word_vocab) keeps Spark's sum/orderBy meaning
+    if len(rows) <= TRAIN_VOCAB_WORDS and all(
+        isinstance(c, int) and c > 0 for _, c in rows
+    ):
+        return _learn_on_driver(rows, num_merges)
     base = vocab.withColumn("r", spaced_repr(F.col("word")))
     base.persist()
     try:
@@ -182,6 +221,45 @@ def learn_bpe(
         # the frame WE persisted — not the caller's vocab (releasing a
         # caller's cache, or leaking ours, were both one variable away)
         base.unpersist()
+
+
+def _learn_on_driver(rows, num_merges: int) -> list[tuple[str, str]]:
+    """The Spark loop's merges, learned in Python from collected
+    ``(word, cnt)`` rows with incremental pair counts (Sennrich et al.
+    2016): a merge recounts only the words whose repr contains
+    ``"x y"`` — exactly the words the literal replace changes. The
+    reprs, the (c DESC, x ASC, y ASC) argmax (code-point order is
+    Spark's UTF-8 binary order) and the left-to-right non-overlapping
+    replace are :func:`spaced_repr`, :func:`learn_bpe` and
+    :func:`merge_expr` verbatim; a null word, like Spark's null repr,
+    has no pairs."""
+    cnts = [c for _, c in rows]
+    reprs = [" ".join(MARKER + ch for ch in w or "") for w, _ in rows]
+    pairs: Counter = Counter()
+    for r, c in zip(reprs, cnts):
+        for p in _adjacent(r):
+            pairs[p] += c
+    merges: list[tuple[str, str]] = []
+    for _ in range(num_merges):
+        if not pairs:
+            break
+        x, y = min(pairs, key=lambda p: (-pairs[p], p))
+        merges.append((x, y))
+        pat, rep = f"{x} {y}", x + y[1:]
+        for i, r in enumerate(reprs):
+            if pat in r:
+                reprs[i] = new = r.replace(pat, rep)
+                for p in _adjacent(r):
+                    pairs[p] -= cnts[i]
+                for p in _adjacent(new):
+                    pairs[p] += cnts[i]
+        pairs = +pairs  # drops the pairs with no occurrence left
+    return merges
+
+
+def _adjacent(r: str):
+    toks = r.split(" ")
+    return zip(toks, toks[1:])
 
 
 def apply_bpe(word: Column, merges: list[tuple[str, str]]) -> Column:

@@ -84,12 +84,13 @@ class EventLogService:
     # -- GET /api/v1/events/:id (server.go:269-302) --------------------
     def get_event(self, offset: int | str) -> Any:
         off = self._parse_offset(offset)
-        rng = self.range()
         # negative offsets are below any log start (memlog offsets are
         # non-negative) → ErrOutOfRange even on an empty log, matching
-        # memlog's classification; both map to HTTP 400 upstream
+        # memlog's classification; both map to HTTP 400 upstream. The
+        # parsed value decides it, so no range() job runs first.
         if off < 0:
             raise OutOfRangeError(f"invalid offset: {off}")
+        rng = self.range()
         if rng is None or off > rng["latest"]:
             raise FutureOffsetError(f"future offset: {off}")
         if off < rng["earliest"]:

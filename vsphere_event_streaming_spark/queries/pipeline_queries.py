@@ -4840,10 +4840,13 @@ def q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     application end-to-end, not just the arithmetic.
 
     Scale shape: training touches the corpus once (word-frequency
-    build); each merge iteration aggregates the vocabulary-bounded
-    frame and collects ONE row; application is chained literal
-    replaces over distinct words (whole-stage codegen, no Python) and
-    a broadcast join back to per-doc occurrence counts."""
+    build). A vocabulary within ``bpe.TRAIN_VOCAB_WORDS`` is collected
+    once and trained on the driver with incremental pair counts (2
+    Spark jobs); a larger one keeps the Spark loop, one aggregation of
+    the vocabulary and one one-row collect per merge. Application is
+    chained literal replaces over distinct words (whole-stage codegen,
+    no Python) and a broadcast join back to per-doc occurrence
+    counts."""
     from ..functions.bpe import bpe_token_counts
 
     docs = load(spark, sf_dir, "documents")
@@ -4870,9 +4873,9 @@ def q_bpe_tokens_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned by tests/test_bpe.py::
     test_full_alphabet_differs_on_digit_corpus.
 
-    Scale shape identical to q_bpe_tokens: one corpus pass,
-    O(num_merges) driver state, codegen application, broadcast
-    vocabulary join."""
+    Scale shape identical to q_bpe_tokens: one corpus pass, driver
+    training within ``bpe.TRAIN_VOCAB_WORDS`` words (the Spark loop
+    over it), codegen application, broadcast vocabulary join."""
     from ..functions.bpe import WORD_RE_FULL, bpe_token_counts
 
     docs = load(spark, sf_dir, "documents")
