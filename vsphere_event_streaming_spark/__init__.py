@@ -20,4 +20,9 @@ for 100 TB scale: declarative DataFrame plans, broadcast joins for dims,
 no driver-side collects in data paths, AQE-friendly shuffles.
 """
 
+import logging
+
 __version__ = "0.1.0"
+
+# library loggers stay silent until the application configures logging
+logging.getLogger(__name__).addHandler(logging.NullHandler())
