@@ -1,18 +1,21 @@
-"""The ingest sink's two append paths (S2): a page-sized batch is
-appended from the driver, a batch over ``DRIVER_BATCH_ROWS`` by the
-distributed ``assign_offsets`` path. Both must leave the same sink."""
+"""The ingest sink's page-sized append (S2): one bounded collect, the
+checks and the numbering on the driver, one write per batch."""
 
 from __future__ import annotations
 
 import datetime as dt
 import glob
+import json
 import logging
 import os
 
 import pyarrow.parquet as pq
 import pytest
 
-from vsphere_event_streaming_spark.errors import RecordTooLargeError
+from vsphere_event_streaming_spark.errors import (
+    BatchTooLargeError,
+    RecordTooLargeError,
+)
 from vsphere_event_streaming_spark.sources.poll_source import (
     SCHEMA_DDL,
     _generate_event,
@@ -27,26 +30,43 @@ from vsphere_event_streaming_spark.streaming.ingest import (
 SRC = "test://vc"
 NULL_KEY = (None, dt.datetime(2024, 1, 1), "click", "u", "keyless")
 
+# The footer every sink file carries, the same one ``assign_offsets``
+# wrote before the driver-side append: a sink written across that
+# change holds one schema.
+FOOTER = (
+    (
+        ("offset", "INT64", "None", "required"),
+        ("key", "INT64", "None", "optional"),
+        ("value", "BYTE_ARRAY", "String", "optional"),
+    ),
+    b'{"type":"struct","fields":['
+    b'{"name":"offset","type":"long","nullable":false,"metadata":{}},'
+    b'{"name":"key","type":"long","nullable":true,"metadata":{}},'
+    b'{"name":"value","type":"string","nullable":true,"metadata":{}}]}',
+)
+
 # case -> ([(batch keys, starts a new run?)], segment_size,
-#          (first offset, rows) of the resulting sink)
+#          the sink's keys, in offset order from its first offset)
 CASES = {
     # first batch ever: offsets seeded from the batch's min key
-    "first-batch": ([(range(500, 550), False)], None, (500, 50)),
+    "first-batch": ([(range(500, 550), False)], None, range(500, 550)),
+    # a later batch continues the offsets, whatever its keys
     "continuing": (
-        [(range(0, 50), False), (range(50, 100), False)], None, (0, 100)
+        [(range(0, 50), False), (range(70, 120), False)], None,
+        [*range(0, 50), *range(70, 120)],
     ),
     # a new run re-seeds from the sink and drops keys 30..59
     "restart-overlap": (
-        [(range(0, 60), False), (range(30, 100), True)], None, (0, 100)
+        [(range(0, 60), False), (range(30, 100), True)], None, range(0, 100)
     ),
     "all-overlap": (
-        [(range(0, 50), False), (range(10, 40), True)], None, (0, 50)
+        [(range(0, 50), False), (range(10, 40), True)], None, range(0, 50)
     ),
     "null-keys": (
-        [(range(0, 20), False), (range(20, 40), False)], None, (0, 40)
+        [(range(0, 20), False), (range(20, 40), False)], None, range(0, 40)
     ),
     "segment-crossing": (
-        [(range(0, 30), False), (range(30, 80), False)], 50, (0, 80)
+        [(range(0, 30), False), (range(30, 80), False)], 50, range(0, 80)
     ),
 }
 
@@ -66,27 +86,6 @@ def _files(log_dir):
         f: os.stat(f).st_mtime_ns
         for f in glob.glob(f"{log_dir}/**", recursive=True)
     }
-
-
-def _run_case(spark, log_dir, case):
-    """Run a case's batches; returns the files the last batch added."""
-    batches, segment_size, _ = CASES[case]
-    state: dict = {}
-    before: dict = {}
-    for i, (keys, restart) in enumerate(batches):
-        if restart:
-            state = {}
-        before = _files(log_dir)
-        append_log_batch(
-            _batch(spark, keys, with_nulls=case == "null-keys"), i, log_dir,
-            SRC, state, segment_size, 524288,
-        )
-    after = _files(log_dir)
-    if case == "all-overlap":
-        assert after == before  # nothing written, no directory touched
-    return sorted(
-        f for f in after if f not in before and f.endswith(".parquet")
-    )
 
 
 def _sink(log_dir):
@@ -111,48 +110,66 @@ def _sink(log_dir):
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
-def test_driver_and_distributed_paths_write_the_same_sink(
-    spark, tmp_path, monkeypatch, case
-):
-    driver_dir = f"{tmp_path}/driver"
-    added = _run_case(spark, driver_dir, case)
-    monkeypatch.setattr(ingest, "DRIVER_BATCH_ROWS", -1)
-    dist_dir = f"{tmp_path}/distributed"
-    _run_case(spark, dist_dir, case)
+def test_page_sized_batches_write_dense_offsets(spark, tmp_path, case):
+    batches, segment_size, keys = CASES[case]
+    log_dir = f"{tmp_path}/log"
+    state: dict = {}
+    before: dict = {}
+    for i, (batch_keys, restart) in enumerate(batches):
+        if restart:
+            state = {}
+        before = _files(log_dir)
+        append_log_batch(
+            _batch(spark, batch_keys, with_nulls=case == "null-keys"), i,
+            log_dir, SRC, state, segment_size, 524288,
+        )
+    after = _files(log_dir)
+    if case == "all-overlap":
+        assert after == before  # nothing written, no directory touched
 
-    rows, schemas = _sink(driver_dir)
-    assert (rows, schemas) == _sink(dist_dir)
-    assert len(schemas) == 1
-    assert next(iter(schemas))[0][0] == ("offset", "INT64", "None", "required")
-
-    offsets = sorted(r[0] for r in rows)
-    keys = [r[1] for r in sorted(rows)]
-    assert offsets == list(range(offsets[0], offsets[0] + len(rows)))
-    assert len(set(keys)) == len(keys)
-    assert (offsets[0], len(rows)) == CASES[case][2]
+    rows, schemas = _sink(log_dir)
+    first = keys[0]  # every case's first batch seeds from its first key
+    assert [(r[0], r[1]) for r in rows] == [
+        (first + i, k) for i, k in enumerate(keys)
+    ]
+    assert all(json.loads(r[2])["id"] == str(r[1]) for r in rows)
+    assert schemas == {FOOTER}
     if case == "segment-crossing":
-        # the driver path writes one file into each segment it touches
+        assert [r[3] for r in rows] == [r[0] // 50 for r in rows]
+        # the last batch wrote one file into each segment it touched
+        added = sorted(f for f in after if f not in before
+                       and f.endswith(".parquet"))
         assert [os.path.basename(os.path.dirname(f)) for f in added] == [
             "segment=0", "segment=1",
         ]
-        assert sorted({r[3] for r in rows}) == [0, 1]
 
 
-@pytest.mark.parametrize("cap", [None, -1], ids=["driver", "distributed"])
 def test_record_size_ceiling_counts_utf8_bytes(
-    spark, tmp_path, monkeypatch, caplog, cap
+    spark, tmp_path, monkeypatch, caplog
 ):
     """A record within the ceiling in characters but over it in UTF-8
-    bytes fails the batch on both paths and writes nothing."""
-    if cap is not None:
-        monkeypatch.setattr(ingest, "DRIVER_BATCH_ROWS", cap)
+    bytes fails the batch and writes nothing, and its value never
+    reaches the driver."""
     row = _generate_event(7)[:-1] + ("é" * 200,)  # 2 bytes a character
-    batch = spark.createDataFrame([row], SCHEMA_DDL)
-    value = envelope_batch(batch, SRC).first()["value"]
-    ceiling = len(value)
-    assert len(value.encode("utf-8")) > ceiling
+    batch = spark.createDataFrame([_generate_event(6), row], SCHEMA_DDL)
+    values = {
+        r["key"]: r["value"] for r in envelope_batch(batch, SRC).collect()
+    }
+    ceiling = len(values[7])
+    assert len(values[7].encode("utf-8")) > ceiling
+    assert len(values[6].encode("utf-8")) <= ceiling
     log_dir = f"{tmp_path}/log_bytes"
 
+    collected = []
+    frame = type(batch)
+    collect = frame.collect
+
+    def spy(df):
+        rows = collect(df)
+        collected.extend(rows)
+        return rows
+
+    monkeypatch.setattr(frame, "collect", spy)
     with caplog.at_level(logging.WARNING, logger=ingest.__name__):
         with pytest.raises(RecordTooLargeError, match="key 7 exceeds"):
             append_log_batch(
@@ -163,6 +180,21 @@ def test_record_size_ceiling_counts_utf8_bytes(
         r.levelno == logging.WARNING and "key 7" in r.getMessage()
         for r in caplog.records
     )
+    returned = {r["key"]: r["value"] for r in collected}
+    assert returned == {6: values[6], 7: None}
+
+
+def test_batch_over_the_cap_writes_nothing(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(ingest, "DRIVER_BATCH_ROWS", 10)
+    log_dir = f"{tmp_path}/log_cap"
+    state: dict = {}
+    with pytest.raises(BatchTooLargeError, match="DRIVER_BATCH_ROWS=10"):
+        append_log_batch(_batch(spark, range(0, 11)), 0, log_dir, SRC, state)
+    assert not os.path.exists(log_dir)
+    assert state == {}
+    append_log_batch(_batch(spark, range(0, 10)), 1, log_dir, SRC, state)
+    rows, _ = _sink(log_dir)
+    assert [r[0] for r in rows] == list(range(10))
 
 
 def _jobs(spark, group, fn):
@@ -212,6 +244,4 @@ def test_debug_line_counts_replay_overlap(spark, tmp_path, caplog):
         append_log_batch(_batch(spark, range(30, 100)), 1, log_dir, SRC, {})
     [line] = [r.getMessage() for r in caplog.records
               if r.name == ingest.__name__]
-    assert line == (
-        "batch 1: path=driver collected=70 overlap_dropped=30 start=60"
-    )
+    assert line == "batch 1: rows=70 overlap_dropped=30 start=60"

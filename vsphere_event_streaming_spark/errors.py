@@ -29,3 +29,9 @@ class RecordTooLargeError(LogError):
     ErrRecordDataSizeExceeded surface (the reference configures it via
     LOG_MAX_RECORD_SIZE_BYTES, server.go:46, and a write error aborts
     the collector loop, main.go:140-143)."""
+
+
+class BatchTooLargeError(LogError):
+    """An ingest micro-batch holds more records than the sink appends
+    at once (``streaming.ingest.DRIVER_BATCH_ROWS``). The reference's
+    collector appends one ≤50-event page per poll (main.go:127-143)."""

@@ -20,16 +20,12 @@ rule:
 
 A batch appends only after its checks pass, and a replayed batch
 appends nothing twice (the foreachBatch contract of Structured
-Streaming). Two paths keep that contract, chosen by the row count of
-one bounded collect:
-
-- a batch of at most ``DRIVER_BATCH_ROWS`` rows — every poll page — is
-  checked, deduplicated, sorted and numbered on the driver and
-  appended with one write of an Arrow-built DataFrame: 2 Spark jobs
-  (the collect and the write) and one file per touched directory;
-- a larger batch (a backfill) keeps the distributed path:
-  ``assign_offsets``' two-phase rank, so the driver never holds more
-  than ``DRIVER_BATCH_ROWS`` + 1 records.
+Streaming). A micro-batch is one poll page (≤ 50 events), so the sink
+works on the driver: one collect of at most ``DRIVER_BATCH_ROWS`` + 1
+records, the checks, the dedup, the sort and the numbering in Python,
+and one write of an Arrow-built DataFrame: 2 Spark jobs and one file
+per touched directory. A batch over ``DRIVER_BATCH_ROWS`` rows raises
+``BatchTooLargeError`` before anything is appended.
 
 The sink is an append-only parquet directory = the engine's memlog.
 A 100 TB deployment would partition it by offset range / date and
@@ -40,32 +36,29 @@ from __future__ import annotations
 
 import logging
 import os
-from typing import NoReturn
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..log.model import assign_offsets
+from ..errors import BatchTooLargeError, RecordTooLargeError
 
 log = logging.getLogger(__name__)
 
 LOG_SCHEMA_DDL = "offset bigint, key bigint, value string"
 
-#: Largest batch appended from the driver; a larger one takes the
-#: distributed path. Measured on 4 cores (local[4], warm continuing
-#: batches of ~400-byte envelopes, segment_size=1000, median of 3):
-#: the driver path took 0.16 s at 50 rows, 0.17 s at 500, 0.16 s at
-#: 1,000, 0.21 s at 2,000 and 0.30 s at 4,000; the distributed path
-#: 0.48–0.52 s at every size. The driver path wins throughout, so the
-#: cap is set by memory instead: the reference's memlog holds 2 ×
-#: LOG_MAX_SEGMENT_SIZE = 2,000 records, and so at most does the driver
-#: here — DRIVER_BATCH_ROWS × max_record_size bytes.
+#: Largest batch the sink appends. A poll page holds at most 50 events;
+#: the cap is the reference's own in-memory ring, 2 ×
+#: LOG_MAX_SEGMENT_SIZE = 2,000 records, so the driver never holds more
+#: records than memlog does. Measured on 4 cores (local[4], warm
+#: continuing batches of ~400-byte envelopes, segment_size=1000, median
+#: of 3), an append took 0.16 s at 50 rows, 0.16 s at 1,000 and 0.21 s
+#: at 2,000.
 DRIVER_BATCH_ROWS = 2000
 
-# ``offset`` is declared non-null so the driver path's parquet footer
-# says ``required int64 offset``, as the distributed path's does.
-_DRIVER_SCHEMA = pa.schema([
+# ``offset`` is declared non-null so the parquet footer says
+# ``required int64 offset``, as in sinks written by ``assign_offsets``.
+_SINK_SCHEMA = pa.schema([
     pa.field("offset", pa.int64(), nullable=False),
     pa.field("key", pa.int64()),
     pa.field("value", pa.string()),
@@ -137,17 +130,19 @@ def append_log_batch(
     append.
 
     One collect of at most ``DRIVER_BATCH_ROWS`` + 1 enveloped records
-    picks the path: up to ``DRIVER_BATCH_ROWS`` rows are numbered on the
-    driver and written once, a larger batch goes through
-    ``assign_offsets``. Both paths append the same rows with the same
-    parquet schema.
+    brings the batch to the driver, where it is numbered and written
+    once; a batch over ``DRIVER_BATCH_ROWS`` rows raises
+    ``BatchTooLargeError`` and appends nothing.
 
     ``max_record_size`` enforces memlog's record-size ceiling
     (LOG_MAX_RECORD_SIZE_BYTES, default 524288 — server.go:46) on the
     UTF-8 bytes of each enveloped record: an oversized record raises
     ``RecordTooLargeError`` and fails the batch, matching the reference
     where a write error aborts the collector loop (main.go:140-143).
-    The check runs before anything is appended — a failed batch writes
+    The bytes are counted on the executors and an oversized value never
+    reaches the driver, so the driver holds at most
+    (``DRIVER_BATCH_ROWS`` + 1) × ``max_record_size`` bytes of values.
+    The checks run before anything is appended — a failed batch writes
     nothing.
 
     ``state`` carries (max_offset, max_key) across batches of one run,
@@ -158,37 +153,67 @@ def append_log_batch(
     (and after a crash the next run re-seeds from the sink, which is
     what makes the offsets exactly-once).
     """
+    spark = batch.sparkSession
+    if state is None:
+        state = {}
     # keyless records are rejected up front: the reference's vSphere
     # event Key is non-null by protocol (main.go:113); a NULL key would
     # crash first-batch seeding and silently bypass the replay dedup
     records = envelope_batch(
         batch.filter(F.col("key").isNotNull()), source
     )
-    if state is None:
-        state = {}
+    if max_record_size is not None:
+        # an oversized value stays on the executors: the driver gets its
+        # byte count and a NULL in its place
+        size = F.octet_length("value")
+        records = records.select(
+            "key",
+            F.when(size <= max_record_size, F.col("value")).alias("value"),
+            size.alias("size"),
+        )
     # coalesce(1): one task reads partitions in turn and stops after
     # DRIVER_BATCH_ROWS + 1 rows, so the collect is one job
     rows = records.coalesce(1).limit(DRIVER_BATCH_ROWS + 1).collect()
     if len(rows) > DRIVER_BATCH_ROWS:
-        _append_distributed(
-            records, batch_id, log_dir, state, segment_size,
-            max_record_size,
+        raise BatchTooLargeError(
+            f"batch {batch_id} holds more than DRIVER_BATCH_ROWS="
+            f"{DRIVER_BATCH_ROWS} records; the sink appends poll pages"
         )
-        return
     if max_record_size is not None:
         for r in rows:
-            if len(r["value"].encode("utf-8")) > max_record_size:
-                _record_too_large(batch_id, r["key"], max_record_size)
-    _seed_state(batch.sparkSession, log_dir, state)
+            if r["size"] > max_record_size:
+                log.warning(
+                    "batch %s: record for key %s exceeds max_record_size=%d "
+                    "bytes; nothing appended", batch_id, r["key"],
+                    max_record_size,
+                )
+                raise RecordTooLargeError(
+                    f"record for key {r['key']} exceeds "
+                    f"max_record_size={max_record_size} bytes"
+                )
+    if "max_offset" not in state:
+        sink = read_sink(spark, log_dir)
+        if sink is not None:
+            row = sink.agg(
+                F.max("offset").alias("mo"), F.max("key").alias("mk")
+            ).first()
+            if row["mo"] is not None:
+                state.update(max_offset=int(row["mo"]), max_key=int(row["mk"]))
+
     # replay-overlap dedup: keys are monotonic (T5), drop re-reads
     max_key = state.get("max_key")
     fresh = sorted(
         (r for r in rows if max_key is None or r["key"] > max_key),
         key=lambda r: r["key"],
     )
-    start = _start_offset(state, fresh[0]["key"] if fresh else None)
+    # continue the sink's offsets; the first batch ever seeds them from
+    # the first event key
+    if "max_offset" in state:
+        start = state["max_offset"] + 1
+    else:
+        start = fresh[0]["key"] if fresh else None
     log.debug(
-        "batch %s: path=driver collected=%d overlap_dropped=%d start=%s",
+        "batch %s: rows=%d overlap_dropped=%d start=%s",
         batch_id, len(rows), len(rows) - len(fresh), start,
     )
     if not fresh:
@@ -199,113 +224,23 @@ def append_log_batch(
         pa.array([r["key"] for r in fresh], pa.int64()),
         pa.array([r["value"] for r in fresh], pa.string()),
     ]
-    schema = _DRIVER_SCHEMA
+    schema = _SINK_SCHEMA
     if segment_size is not None:
+        # memlog-segment layout (README.md:177-184): partition the sink
+        # by offset segment so (a) offset-bounded reads prune whole
+        # directories and (b) retention purge = drop the oldest segment
+        # dirs — no rewrite, exactly the reference's 2-segment ring at
+        # file-system granularity
         columns.append(pa.array([o // segment_size for o in offsets], pa.int64()))
         schema = schema.append(pa.field("segment", pa.int64()))
     table = pa.Table.from_arrays(columns, schema=schema)
-    _write(batch.sparkSession.createDataFrame(table).coalesce(1), log_dir,
-           segment_size)
-    state["max_offset"] = offsets[-1]
-    state["max_key"] = fresh[-1]["key"]
-
-
-def _append_distributed(
-    records: DataFrame,
-    batch_id: int,
-    log_dir: str,
-    state: dict,
-    segment_size: int | None,
-    max_record_size: int | None,
-) -> None:
-    """The append for a batch over ``DRIVER_BATCH_ROWS`` rows: every
-    step is a Spark job over the batch, and the driver holds only the
-    one oversized record's key and the batch's count/min/max."""
-    if max_record_size is not None:
-        bad = (
-            records.filter(F.octet_length("value") > max_record_size)
-            .limit(1)
-            .collect()
-        )
-        if bad:
-            _record_too_large(batch_id, bad[0]["key"], max_record_size)
-    _seed_state(records.sparkSession, log_dir, state)
-    fresh = F.lit(True)
-    if "max_key" in state:
-        # replay-overlap dedup: keys are monotonic (T5), drop re-reads
-        fresh = F.col("key") > F.lit(state["max_key"])
-    stats = records.agg(
-        F.count(F.lit(1)).alias("rows"),
-        F.count(F.when(fresh, 1)).alias("n"),
-        F.min(F.when(fresh, F.col("key"))).alias("lo"),
-        F.max(F.when(fresh, F.col("key"))).alias("hi"),
-    ).first()
-    n = int(stats["n"])
-    start = _start_offset(state, stats["lo"])
-    log.debug(
-        "batch %s: path=distributed collected=%d overlap_dropped=%d start=%s",
-        batch_id, DRIVER_BATCH_ROWS + 1, stats["rows"] - n, start,
-    )
-    if not n:
-        return
-    seeded = assign_offsets(
-        records.filter(fresh), order_by=["key"], start=start,
-        offset_col="offset",
-    )
-    out = seeded.select("offset", "key", "value")
-    if segment_size is not None:
-        out = out.withColumn(
-            "segment", (F.col("offset") / segment_size).cast("bigint")
-        )
-    _write(out, log_dir, segment_size)
-    state["max_offset"] = start + n - 1
-    state["max_key"] = int(stats["hi"])
-
-
-def _record_too_large(batch_id: int, key, max_record_size: int) -> NoReturn:
-    from ..errors import RecordTooLargeError
-
-    log.warning(
-        "batch %s: record for key %s exceeds max_record_size=%d bytes; "
-        "nothing appended", batch_id, key, max_record_size,
-    )
-    raise RecordTooLargeError(
-        f"record for key {key} exceeds "
-        f"max_record_size={max_record_size} bytes"
-    )
-
-
-def _seed_state(spark: SparkSession, log_dir: str, state: dict) -> None:
-    """Seed the run's (max_offset, max_key) from the sink, once."""
-    if "max_offset" in state:
-        return
-    sink = read_sink(spark, log_dir)
-    if sink is not None:
-        row = sink.agg(
-            F.max("offset").alias("mo"), F.max("key").alias("mk")
-        ).first()
-        if row["mo"] is not None:
-            state.update(max_offset=int(row["mo"]), max_key=int(row["mk"]))
-
-
-def _start_offset(state: dict, first_key) -> int | None:
-    """Continue the sink's offsets; the first batch ever seeds them from
-    its first event key."""
-    if "max_offset" in state:
-        return state["max_offset"] + 1
-    return None if first_key is None else int(first_key)
-
-
-def _write(out: DataFrame, log_dir: str, segment_size: int | None) -> None:
-    """Append to the sink. With ``segment_size`` the sink is partitioned
-    by offset segment — memlog's segment layout (README.md:177-184) —
-    so offset-bounded reads prune whole directories and retention purge
-    drops the oldest segment dirs: no rewrite, the reference's
-    2-segment ring at file-system granularity."""
-    writer = out.write.mode("append")
+    # coalesce(1): one file per touched directory
+    writer = spark.createDataFrame(table).coalesce(1).write.mode("append")
     if segment_size is not None:
         writer = writer.partitionBy("segment")
     writer.parquet(log_dir)
+    state["max_offset"] = offsets[-1]
+    state["max_key"] = fresh[-1]["key"]
 
 
 def start_ingest(
