@@ -379,3 +379,30 @@ def test_http_watch_slow_consumer_disconnected_at_ceiling(spark):
         assert status == 200
     finally:
         srv.stop()
+
+
+def test_http_500_is_logged(spark, monkeypatch, caplog):
+    """A service error gets status 500 and one ERROR record with its
+    traceback from the server's logger."""
+    import logging
+
+    from vsphere_event_streaming_spark.log import http_server
+
+    svc = EventLogService(spark.createDataFrame([], "offset long, value string"))
+
+    def broken():
+        raise RuntimeError("range failed")
+
+    monkeypatch.setattr(svc, "range", broken)
+    srv = serve(svc)
+    try:
+        with caplog.at_level(logging.ERROR, logger=http_server.__name__):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                _get(srv.address + "/api/v1/range")
+    finally:
+        srv.stop()
+    assert e.value.code == 500
+    [record] = [r for r in caplog.records if r.name == http_server.__name__]
+    assert record.levelno == logging.ERROR
+    assert record.getMessage() == "GET /api/v1/range failed"
+    assert record.exc_info[1].args == ("range failed",)

@@ -1,5 +1,6 @@
 """The ingest sink's page-sized append (S2): one bounded collect, the
-checks and the numbering on the driver, one write per batch."""
+checks and the numbering on the driver, one parquet write and rename
+per touched directory."""
 
 from __future__ import annotations
 
@@ -11,11 +12,13 @@ import os
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import SparkSession
 
 from vsphere_event_streaming_spark.errors import (
     BatchTooLargeError,
     RecordTooLargeError,
 )
+from vsphere_event_streaming_spark.log import EventLogService
 from vsphere_event_streaming_spark.sources.poll_source import (
     SCHEMA_DDL,
     _generate_event,
@@ -25,6 +28,8 @@ from vsphere_event_streaming_spark.streaming import ingest
 from vsphere_event_streaming_spark.streaming.ingest import (
     append_log_batch,
     envelope_batch,
+    read_sink,
+    start_ingest,
 )
 
 SRC = "test://vc"
@@ -209,9 +214,10 @@ def _jobs(spark, group, fn):
 
 
 def test_page_sized_batch_job_and_file_budget(spark, tmp_path):
-    """A continuing 50-row page runs the collect and the write (2 jobs)
-    and adds one parquet file; a restart re-seed adds the sink's
-    max(offset, key) aggregation (at most 2 more jobs)."""
+    """A continuing 50-row page runs one Spark job (the collect), adds
+    one parquet file and leaves no ``_temporary`` directory; a restart
+    re-seed adds the sink's max(offset, key) aggregation (at most 2
+    more jobs)."""
     log_dir = f"{tmp_path}/log_budget"
     state: dict = {}
 
@@ -228,11 +234,12 @@ def test_page_sized_batch_job_and_file_budget(spark, tmp_path):
                        append(range(50, 100), state, 1))
     added = [f for f in _files(log_dir) if f not in before
              and f.endswith(".parquet")]
-    assert len(continuing) <= 2, continuing
+    assert len(continuing) <= 1, continuing
     assert len(added) == 1, added
+    assert not any("_temporary" in f for f in _files(log_dir))
 
     reseed = _jobs(spark, "ingest-reseed", append(range(80, 130), {}, 2))
-    assert len(reseed) <= 4, reseed
+    assert len(reseed) <= 3, reseed
     rows, _ = _sink(log_dir)
     assert [r[0] for r in sorted(rows)] == list(range(130))
 
@@ -245,3 +252,161 @@ def test_debug_line_counts_replay_overlap(spark, tmp_path, caplog):
     [line] = [r.getMessage() for r in caplog.records
               if r.name == ingest.__name__]
     assert line == "batch 1: rows=70 overlap_dropped=30 start=60"
+
+
+def test_read_sink_checks_the_directory_before_spark(
+    spark, tmp_path, monkeypatch
+):
+    """A missing sink is None without a Spark read; an existing but
+    corrupt sink still raises."""
+    corrupt = tmp_path / "corrupt"
+    corrupt.mkdir()
+    (corrupt / "part-0.parquet").write_bytes(b"not parquet")
+    read = SparkSession.read
+
+    def no_read(session):
+        raise AssertionError("spark.read called for a missing sink")
+
+    monkeypatch.setattr(SparkSession, "read", property(no_read))
+    assert read_sink(spark, f"{tmp_path}/missing") is None
+    assert read_sink(spark, f"file://{tmp_path}/missing") is None
+    monkeypatch.setattr(SparkSession, "read", read)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        read_sink(spark, str(corrupt)).count()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        append_log_batch(_batch(spark, range(0, 5)), 0, str(corrupt), SRC, {})
+    assert os.listdir(corrupt) == ["part-0.parquet"]
+
+
+def test_sink_must_be_local(spark, tmp_path, monkeypatch):
+    """A non-local sink raises ValueError before a stream starts or
+    anything is written; a ``file:`` URI is the local directory."""
+    from vsphere_event_streaming_spark.sources.poll_source import (
+        read_poll_stream,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    active = len(spark.streams.active)
+    for uri in ("hdfs://namenode:8020/log", "s3a://bucket/log"):
+        with pytest.raises(ValueError, match="local directory"):
+            append_log_batch(_batch(spark, range(0, 5)), 0, uri, SRC, {})
+        with pytest.raises(ValueError, match="local directory"):
+            start_ingest(
+                spark, read_poll_stream(spark, page_size=5, max_key=5), uri,
+                f"{tmp_path}/ckpt",
+            )
+    assert len(spark.streams.active) == active
+    assert os.listdir(tmp_path) == []
+
+    state: dict = {}
+    for i, keys in enumerate([range(0, 5), range(5, 10)]):
+        append_log_batch(
+            _batch(spark, keys), i, f"file://{tmp_path}/log", SRC, state, 50
+        )
+    assert os.listdir(tmp_path) == ["log"]  # no directory named "file:"
+    rows, _ = _sink(f"{tmp_path}/log")
+    assert [r[0] for r in rows] == list(range(10))
+
+
+def test_failed_write_leaves_nothing_visible(spark, tmp_path, monkeypatch):
+    """A write that fails after leaving a partial file behind exposes
+    nothing and keeps the run's state; appending the same batch again
+    gives dense offsets."""
+    log_dir = f"{tmp_path}/log"
+    state: dict = {}
+    append_log_batch(_batch(spark, range(0, 30)), 0, log_dir, SRC, state, 50)
+    before, kept = _files(log_dir), dict(state)
+    write = pq.write_table
+    calls = []
+
+    def failing(table, where, **kw):
+        calls.append(where)
+        if len(calls) == 2:  # the second segment of a crossing batch
+            with open(where, "wb") as fh:
+                fh.write(b"PAR1 partial")
+            raise OSError("disk full")
+        return write(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", failing)
+    crossing = _batch(spark, range(30, 80))
+    with pytest.raises(OSError, match="disk full"):
+        append_log_batch(crossing, 1, log_dir, SRC, state, 50)
+    assert len(calls) == 2
+    assert all(os.path.basename(f).startswith(".") for f in calls)
+    assert _files(log_dir).keys() - before.keys() <= {f"{log_dir}/segment=1"}
+    assert not [f for _, _, fs in os.walk(log_dir) for f in fs
+                if f.startswith(".")]
+    assert state == kept
+
+    monkeypatch.setattr(pq, "write_table", write)
+    append_log_batch(crossing, 1, log_dir, SRC, state, 50)
+    rows, schemas = _sink(log_dir)
+    assert [(r[0], r[1]) for r in rows] == [(k, k) for k in range(80)]
+    assert schemas == {FOOTER}
+    assert state == {"max_offset": 79, "max_key": 79}
+
+
+def test_hidden_leftovers_are_ignored(spark, tmp_path):
+    """Hidden temp files a crash left behind, one partial and one
+    complete, are read by none of Spark, the sink's re-seed, the log
+    service and ``pyarrow.dataset``."""
+    import pyarrow as pa
+
+    log_dir = f"{tmp_path}/log"
+    append_log_batch(_batch(spark, range(0, 40)), 0, log_dir, SRC, {}, 50)
+    stray = pa.table({"offset": [10**6], "key": [10**6], "value": ["x"]})
+    for segment in ("segment=0", "segment=1"):
+        os.makedirs(f"{log_dir}/{segment}", exist_ok=True)
+        pq.write_table(
+            stray, f"{log_dir}/{segment}/.part-complete.c000.snappy.parquet"
+        )
+        with open(f"{log_dir}/{segment}/.part-partial.c000.snappy.parquet",
+                  "wb") as fh:
+            fh.write(b"PAR1 partial")
+
+    assert spark.read.parquet(log_dir).count() == 40
+    assert EventLogService(spark.read.parquet(log_dir)).range() == {
+        "earliest": 0, "latest": 39,
+    }
+    append_log_batch(_batch(spark, range(30, 60)), 1, log_dir, SRC, {}, 50)
+    rows, schemas = _sink(log_dir)
+    assert [(r[0], r[1]) for r in rows] == [(k, k) for k in range(60)]
+    assert schemas == {FOOTER}
+
+
+def test_spark_and_driver_files_read_as_one_schema(spark, tmp_path):
+    """A sink holding a file from Spark's parquet writer and files from
+    the driver's write reads as one schema without a schema hint."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    log_dir = f"{tmp_path}/log"
+    first = list(_generate_page(0, 30))
+    spark_rows = [
+        (k, k, v, k // 50)
+        for k, v in (
+            (r["key"], r["value"])
+            for r in envelope_batch(
+                spark.createDataFrame(first, SCHEMA_DDL), SRC
+            ).collect()
+        )
+    ]
+    schema = StructType(
+        [*ingest._SINK_ROW.fields, StructField("segment", LongType())]
+    )
+    spark.createDataFrame(spark_rows, schema).coalesce(1).write.mode(
+        "append"
+    ).partitionBy("segment").parquet(log_dir)
+    state: dict = {}
+    for i, keys in enumerate([range(30, 80), range(80, 90)], start=1):
+        append_log_batch(_batch(spark, keys), i, log_dir, SRC, state, 50)
+
+    rows, schemas = _sink(log_dir)
+    assert len(glob.glob(f"{log_dir}/**/*.parquet", recursive=True)) == 4
+    assert schemas == {FOOTER}
+    assert [(r[0], r[1]) for r in rows] == [(k, k) for k in range(90)]
+    for merge in ("false", "true"):
+        df = spark.read.option("mergeSchema", merge).parquet(log_dir)
+        assert df.schema.simpleString() == (
+            "struct<offset:bigint,key:bigint,value:string,segment:int>"
+        )
+        assert sorted(r["offset"] for r in df.collect()) == list(range(90))

@@ -31,6 +31,7 @@ how the reference scales (one server per collector).
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -42,6 +43,8 @@ from ..errors import (
 )
 from .model import replay_from
 from .service import EventLogService
+
+log = logging.getLogger(__name__)
 
 
 class _Server(ThreadingHTTPServer):
@@ -141,7 +144,8 @@ class EventLogHTTPServer:
                     self._text(404, "not found")
                 except BrokenPipeError:  # client went away mid-write
                     pass
-                except Exception:  # pragma: no cover - 500 guard
+                except Exception:
+                    log.exception("GET %s failed", self.path)
                     try:
                         self.send_response(500)
                         self.end_headers()
