@@ -3,7 +3,7 @@
 Where ``corpus_prep.py`` is the batch pipeline (turn a dump into
 training shards), this example is the MONITOR a crawl runs while the
 corpus is still growing: document batches arrive as a parquet file
-stream, ONE ``foreachBatch`` pass feeds four incremental store
+stream, ONE ``start_store`` pass feeds four incremental store
 families per epoch — each an idempotent ``batch_id=`` cell partition,
 each readable at any time, each bit-identical to its batch operator
 over everything ingested (the per-family parity proofs live in
@@ -22,7 +22,7 @@ over everything ingested (the per-family parity proofs live in
                            second min-lattice family: overlapping
                            pair ingest converges)
 
-The event log streams in the same way (r10): a second foreachBatch
+The event log streams in the same way (r10): a second ``start_store``
 pass feeds three more families per epoch —
 
  - ``RateCellStore``     — per-(type, bucket) rate cells; the anomaly
@@ -114,7 +114,10 @@ from vsphere_event_streaming_spark.functions.vectors import (  # noqa: E402
 )
 from vsphere_event_streaming_spark.streaming.model_stream import (  # noqa: E402
     start_incremental_auc_cells,
-    start_incremental_mrl,
+)
+from vsphere_event_streaming_spark.streaming.store_stream import (  # noqa: E402
+    EMB_STREAM_SCHEMA,
+    start_store,
 )
 from vsphere_event_streaming_spark.tables import load  # noqa: E402
 
@@ -159,8 +162,7 @@ def monitor_corpus(spark, sf_dir: str, work_dir: str) -> dict:
     groups = GroupStore(spark, f"{work_dir}/groups")
 
     # --- ONE pass per epoch feeds all five document stores -----------
-    def process(batch_df, epoch_id: int) -> None:
-        bid = f"m{epoch_id}"
+    def process(batch_df, bid: str) -> None:
         exact.add_batch(batch_df, bid)
         shingle.add_batch(batch_df, bid)
         terms.add_batch(batch_df, bid)
@@ -179,16 +181,14 @@ def monitor_corpus(spark, sf_dir: str, work_dir: str) -> dict:
         groups.add_batch(verified, bid)
         release_cached()
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string, lang string")
-        .option("maxFilesPerTrigger", 1)  # one epoch per batch dir
-        .parquet(in_dir + "/part*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", f"{work_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
+    q = start_store(
+        spark,
+        process,
+        in_dir + "/part*",
+        f"{work_dir}/ckpt",
+        "doc_id long, text string, lang string",
+        batch_prefix="m",
+        max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(300)
 
@@ -206,8 +206,7 @@ def monitor_corpus(spark, sf_dir: str, work_dir: str) -> dict:
     activity = ActivityStore(spark, f"{work_dir}/activity")
     hll = HllStore(spark, f"{work_dir}/hll", "user_id", ["d"])
 
-    def process_events(batch_df, epoch_id: int) -> None:
-        bid = f"e{epoch_id}"
+    def process_events(batch_df, bid: str) -> None:
         rate.add_batch(batch_df, bid)
         cms.add_batch(batch_df, bid)
         activity.add_batch(batch_df, bid)
@@ -228,19 +227,14 @@ def monitor_corpus(spark, sf_dir: str, work_dir: str) -> dict:
             bid,
         )
 
-    ev_stream = (
-        spark.readStream.schema(
-            "event_id long, event_type string, ts timestamp,"
-            " user_id long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir + "/part*")
-    )
-    qe = (
-        ev_stream.writeStream.foreachBatch(process_events)
-        .option("checkpointLocation", f"{work_dir}/ckpt_events")
-        .trigger(availableNow=True)
-        .start()
+    qe = start_store(
+        spark,
+        process_events,
+        ev_dir + "/part*",
+        f"{work_dir}/ckpt_events",
+        "event_id long, event_type string, ts timestamp, user_id long",
+        batch_prefix="e",
+        max_files_per_trigger=1,
     )
     qe.awaitTermination(300)
 
@@ -269,16 +263,16 @@ def monitor_corpus(spark, sf_dir: str, work_dir: str) -> dict:
     # (MrlStore, r12): a pure per-row prefix projection per epoch —
     # the index a retrieval service reads is never rebuilt, it just
     # gains partitions as the corpus grows
-    qm = start_incremental_mrl(
+    mrl_store = MrlStore(spark, f"{work_dir}/mrl", 32)
+    qm = start_store(
         spark,
+        mrl_store.add_batch,
         emb_dir + "/part*",
-        f"{work_dir}/mrl",
         f"{work_dir}/ckpt_mrl",
-        prefix_len=32,
+        EMB_STREAM_SCHEMA,
         max_files_per_trigger=1,
     )
     qm.awaitTermination(300)
-    mrl_store = MrlStore(spark, f"{work_dir}/mrl", 32)
 
     # --- read the stores (no history recomputation) ------------------
     n_docs = docs.count()

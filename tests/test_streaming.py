@@ -22,20 +22,23 @@ from vsphere_event_streaming_spark.streaming.ingest import (
 )
 from vsphere_event_streaming_spark.streaming.watch import watch
 from vsphere_event_streaming_spark.streaming.windows import (
-    compact_log,
+    purge_segments,
     streaming_dedup,
     tumbling_counts,
 )
 
 
-def _run_ingest(spark, tmp, n_events, page_size=50, start_key=0, timeout=180):
+def _run_ingest(spark, tmp, n_events, page_size=50, start_key=0, timeout=180,
+                segment_size=None):
     """Run the ingest stream until the sink holds n_events rows."""
     log_dir = f"{tmp}/log"
     stream = read_poll_stream(
         spark, page_size=page_size, start_key=start_key,
         max_key=start_key + n_events,
     )
-    q = start_ingest(spark, stream, log_dir, f"{tmp}/ckpt")
+    q = start_ingest(
+        spark, stream, log_dir, f"{tmp}/ckpt", segment_size=segment_size
+    )
     try:
         deadline = time.time() + timeout
         while time.time() < deadline:
@@ -294,8 +297,8 @@ def test_watch_restart_resumes_from_checkpoint(spark, tmp_path):
 
 def test_watch_purged_start_raises(spark, tmp_path):
     tmp = str(tmp_path)
-    log_dir = _run_ingest(spark, tmp, 100)
-    compact_log(spark, log_dir, max_segment_size=10)  # keep offsets 80..99
+    log_dir = _run_ingest(spark, tmp, 100, segment_size=10)
+    purge_segments(spark, log_dir, keep_segments=2)  # keep offsets 80..99
     log = spark.read.schema(LOG_SCHEMA_DDL).parquet(log_dir)
     row = log.agg(F.min("offset").alias("lo"), F.max("offset").alias("hi")).first()
     assert (row["lo"], row["hi"]) == (80, 99)
@@ -861,10 +864,6 @@ def test_purge_segments_is_directory_drop(spark, tmp_path):
     the same OutOfRangeError as the unpartitioned path."""
     import os
 
-    from vsphere_event_streaming_spark.streaming.windows import (
-        purge_segments,
-    )
-
     tmp = str(tmp_path)
     log_dir = f"{tmp}/log_ring"
     stream = read_poll_stream(spark, page_size=50, max_key=200)
@@ -894,16 +893,20 @@ def test_purge_segments_is_directory_drop(spark, tmp_path):
         svc.replay(10)
 
 
-def test_start_store_epoch_ids_resume_and_prefix(spark, tmp_path):
+def test_start_store_epoch_ids_resume_and_prefix(spark, tmp_path, caplog):
     """start_store's epoch contract: one ``<prefix><epoch>`` id per
     file at ``max_files_per_trigger=1``; a rerun on the same checkpoint
     sees only the new file, and a fresh checkpoint with a fresh
-    ``batch_prefix`` restarts at epoch 0 in its own namespace."""
+    ``batch_prefix`` restarts at epoch 0 in its own namespace. Each
+    epoch logs one DEBUG line with its batch id and ``add`` time."""
+    import logging
     import os
+    import re
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from vsphere_event_streaming_spark.streaming import store_stream
     from vsphere_event_streaming_spark.streaming.store_stream import (
         start_store,
     )
@@ -926,13 +929,21 @@ def test_start_store_epoch_ids_resume_and_prefix(spark, tmp_path):
         os.utime(path, (t0 + k, t0 + k))
 
     def run(ckpt, **kw):
-        q = start_store(
-            spark, add, in_dir, f"{tmp}/{ckpt}", "k long",
-            max_files_per_trigger=1, **kw,
-        )
-        assert q.awaitTermination(60)
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger=store_stream.__name__):
+            q = start_store(
+                spark, add, in_dir, f"{tmp}/{ckpt}", "k long",
+                max_files_per_trigger=1, **kw,
+            )
+            assert q.awaitTermination(60)
         got = list(calls)
         calls.clear()
+        lines = [r.getMessage() for r in caplog.records
+                 if r.name == store_stream.__name__]
+        assert [
+            re.fullmatch(r"epoch (\S+): add \d+\.\d{3}s", m).group(1)
+            for m in lines
+        ] == [b for b, _ in got], lines
         return got
 
     put(0)
@@ -1068,8 +1079,9 @@ def test_incremental_bpe_vocab_stream(spark, tmp_path):
         learn_bpe,
         word_vocab,
     )
-    from vsphere_event_streaming_spark.streaming.bpe_stream import (
-        start_incremental_bpe_vocab,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        DOC_STREAM_SCHEMA,
+        start_store,
     )
 
     docs = spark.read.parquet(
@@ -1080,15 +1092,16 @@ def test_incremental_bpe_vocab_stream(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_bpe_vocab(
+    streamed = BpeVocab(spark, f"{tmp_path}/vocab")
+    q = start_store(
         spark,
+        streamed.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/vocab",
         f"{tmp_path}/ckpt",
+        DOC_STREAM_SCHEMA,
         max_files_per_trigger=1,
     )
     q.awaitTermination(120)
-    streamed = BpeVocab(spark, f"{tmp_path}/vocab")
     assert streamed.train(DEFAULT_MERGES) == learn_bpe(
         word_vocab(docs), DEFAULT_MERGES
     )
@@ -1159,8 +1172,9 @@ def test_incremental_gram_stream(spark, tmp_path):
         gram_micro,
         power_iteration,
     )
-    from vsphere_event_streaming_spark.streaming.model_stream import (
-        start_incremental_gram,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        EMB_STREAM_SCHEMA,
+        start_store,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1169,15 +1183,16 @@ def test_incremental_gram_stream(spark, tmp_path):
         emb.filter(F.col("vec_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_gram(
+    store = GramStore(spark, f"{tmp_path}/gram")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/gram",
         f"{tmp_path}/ckpt",
+        EMB_STREAM_SCHEMA,
         max_files_per_trigger=1,
     )
     q.awaitTermination(120)
-    store = GramStore(spark, f"{tmp_path}/gram")
     assert store.gram() == gram_micro(emb)
     g = gram_micro(emb)
     d = 1 + max(i for i, _ in g)
@@ -1491,8 +1506,8 @@ def test_incremental_quantile_cell_stream(spark, tmp_path):
         quantile_cells,
         quantiles_from_cells,
     )
-    from vsphere_event_streaming_spark.streaming.model_stream import (
-        start_incremental_quantile_cells,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -1505,16 +1520,16 @@ def test_incremental_quantile_cell_stream(spark, tmp_path):
         ev.filter(F.col("event_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_quantile_cells(
+    store = QuantileCellStore(spark, f"{tmp_path}/qcells")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/qcells",
         f"{tmp_path}/qckpt",
-        schema=schema,
+        schema,
         max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(120)
-    store = QuantileCellStore(spark, f"{tmp_path}/qcells")
 
     want_cells = {
         (r["event_type"], r["qb"]): r["cnt"]
@@ -1568,8 +1583,8 @@ def test_incremental_rate_cell_stream(spark, tmp_path):
         anomalies_from_cells,
         rate_cells,
     )
-    from vsphere_event_streaming_spark.streaming.model_stream import (
-        start_incremental_rate_cells,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -1582,16 +1597,16 @@ def test_incremental_rate_cell_stream(spark, tmp_path):
         ev.filter(F.col("event_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_rate_cells(
+    store = RateCellStore(spark, f"{tmp_path}/rcells")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/rcells",
         f"{tmp_path}/rckpt",
-        schema=schema,
+        schema,
         max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(120)
-    store = RateCellStore(spark, f"{tmp_path}/rcells")
 
     want_cells = {
         (r["event_type"], r["window_start_us"]): r["cnt"]
@@ -1649,8 +1664,8 @@ def test_incremental_cms_cell_stream(spark, tmp_path):
         cms_build,
         cms_estimate,
     )
-    from vsphere_event_streaming_spark.streaming.model_stream import (
-        start_incremental_cms_cells,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -1663,17 +1678,16 @@ def test_incremental_cms_cell_stream(spark, tmp_path):
         ev.filter(F.col("event_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_cms_cells(
+    store = CmsStore(spark, f"{tmp_path}/ccells", key_col="event_type")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/ccells",
         f"{tmp_path}/cckpt",
-        schema=schema,
-        key_col="event_type",
+        schema,
         max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(120)
-    store = CmsStore(spark, f"{tmp_path}/ccells", key_col="event_type")
 
     want = cms_build(ev, "event_type")
     got = store.sketch()
@@ -1721,8 +1735,8 @@ def test_incremental_activity_stream(spark, tmp_path):
         activity_days,
         retention_from_days,
     )
-    from vsphere_event_streaming_spark.streaming.model_stream import (
-        start_incremental_activity,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -1739,16 +1753,16 @@ def test_incremental_activity_stream(spark, tmp_path):
             (F.col("event_id") % 3 == b)
             | (F.col("event_id") % 3 == (b + 1) % 3)
         ).write.mode("overwrite").parquet(f"{in_dir}/part{b}")
-    q = start_incremental_activity(
+    store = ActivityStore(spark, f"{tmp_path}/acts")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/acts",
         f"{tmp_path}/ackpt",
-        schema=schema,
+        schema,
         max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(120)
-    store = ActivityStore(spark, f"{tmp_path}/acts")
 
     want_days = {
         (r["user_id"], r["d"]) for r in activity_days(ev).collect()
@@ -1797,8 +1811,9 @@ def test_incremental_shingle_df_stream(spark, tmp_path):
     from vsphere_event_streaming_spark.queries.pipeline_queries import (
         q_ngram_novelty,
     )
-    from vsphere_event_streaming_spark.streaming.dedup_stream import (
-        start_incremental_shingle_df,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        DOC_STREAM_SCHEMA,
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -1810,15 +1825,16 @@ def test_incremental_shingle_df_stream(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_shingle_df(
+    store = ShingleDfStore(spark, f"{tmp_path}/sdf")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/sdf",
         f"{tmp_path}/sdf_ckpt",
+        DOC_STREAM_SCHEMA,
         max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(180)
-    store = ShingleDfStore(spark, f"{tmp_path}/sdf")
 
     want_df = {
         r["sh"]: r["df"] for r in shingle_df_cells(docs).collect()
@@ -1876,8 +1892,9 @@ def test_incremental_term_stats_stream(spark, tmp_path):
     from vsphere_event_streaming_spark.queries.advanced_queries import (
         bm25_scores,
     )
-    from vsphere_event_streaming_spark.streaming.dedup_stream import (
-        start_incremental_term_stats,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        DOC_STREAM_SCHEMA,
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -1889,15 +1906,16 @@ def test_incremental_term_stats_stream(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_term_stats(
+    store = TermStatsStore(spark, f"{tmp_path}/ts")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/ts",
         f"{tmp_path}/ts_ckpt",
+        DOC_STREAM_SCHEMA,
         max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(180)
-    store = TermStatsStore(spark, f"{tmp_path}/ts")
 
     # merged stats equal the batch in-plan aggregates exactly
     toks = F.split(F.lower(F.col("text")), "[^a-z]+")
@@ -1964,8 +1982,9 @@ def test_incremental_exact_keepers_stream(spark, tmp_path):
         ExactDedupStore,
         exact_dedup_keepers,
     )
-    from vsphere_event_streaming_spark.streaming.dedup_stream import (
-        start_incremental_exact_keepers,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        DOC_STREAM_SCHEMA,
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -1986,15 +2005,16 @@ def test_incremental_exact_keepers_stream(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_exact_keepers(
+    store = ExactDedupStore(spark, f"{tmp_path}/ek")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/ek",
         f"{tmp_path}/ek_ckpt",
+        DOC_STREAM_SCHEMA,
         max_files_per_trigger=1,  # one epoch per batch dir
     )
     q.awaitTermination(180)
-    store = ExactDedupStore(spark, f"{tmp_path}/ek")
 
     def key(rows):
         return sorted((r["keeper_id"], r["copies"]) for r in rows)
@@ -2044,8 +2064,9 @@ def test_incremental_ivfpq_store_and_stream(spark, tmp_path):
         pq_fit,
         write_ivfpq_index,
     )
-    from vsphere_event_streaming_spark.streaming.model_stream import (
-        start_incremental_ivfpq,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        EMB_STREAM_SCHEMA,
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import spread
 
@@ -2069,8 +2090,10 @@ def test_incremental_ivfpq_store_and_stream(spark, tmp_path):
     b1 = corpus.filter(F.col("vec_id") <= cut)
     b2 = corpus.filter(F.col("vec_id") > cut)
     store = IvfPqStore(spark, f"{tmp_path}/store", centroids, books, 64)
-    n1 = store.add_batch(b1, "b1")
-    n2 = store.add_batch(b2, "b2")
+    store.add_batch(b1, "b1")
+    store.add_batch(b2, "b2")
+    n1 = spark.read.parquet(f"{tmp_path}/store/batch_id=b1").count()
+    n2 = spark.read.parquet(f"{tmp_path}/store/batch_id=b2").count()
     assert n1 + n2 == corpus.count()
     got_df = store.search(qvec, k=10, nprobe=3)
     got = [(r["vec_id"], r["score"]) for r in got_df.collect()]
@@ -2100,20 +2123,18 @@ def test_incremental_ivfpq_store_and_stream(spark, tmp_path):
     in_dir = f"{tmp_path}/in"
     b1.write.mode("overwrite").parquet(f"{in_dir}/part0")
     b2.write.mode("overwrite").parquet(f"{in_dir}/part1")
-    q = start_incremental_ivfpq(
-        spark,
-        in_dir + "/part*",
-        f"{tmp_path}/streamed",
-        f"{tmp_path}/ckpt",
-        centroids,
-        books,
-        64,
-        max_files_per_trigger=1,
-    )
-    q.awaitTermination(120)
     streamed = IvfPqStore(
         spark, f"{tmp_path}/streamed", centroids, books, 64
     )
+    q = start_store(
+        spark,
+        streamed.add_batch,
+        in_dir + "/part*",
+        f"{tmp_path}/ckpt",
+        EMB_STREAM_SCHEMA,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(120)
     assert [
         (r["vec_id"], r["score"])
         for r in streamed.search(qvec, k=10, nprobe=3).collect()
@@ -2333,8 +2354,9 @@ def test_incremental_mrl_store_and_stream(spark, tmp_path):
         MRL_PREFIX,
         MRL_SHORTLIST,
     )
-    from vsphere_event_streaming_spark.streaming.model_stream import (
-        start_incremental_mrl,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        EMB_STREAM_SCHEMA,
+        start_store,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2360,8 +2382,10 @@ def test_incremental_mrl_store_and_stream(spark, tmp_path):
     cut = corpus.approxQuantile("vec_id", [0.5], 0.0)[0]
     b1 = corpus.filter(F.col("vec_id") <= cut)
     b2 = corpus.filter(F.col("vec_id") > cut)
-    n1 = store.add_batch(b1, "b1")
-    n2 = store.add_batch(b2, "b2")
+    store.add_batch(b1, "b1")
+    store.add_batch(b2, "b2")
+    n1 = spark.read.parquet(f"{tmp_path}/store/batch_id=b1").count()
+    n2 = spark.read.parquet(f"{tmp_path}/store/batch_id=b2").count()
     assert n1 + n2 == corpus.count()
     got = [
         (r["vec_id"], r["score"])
@@ -2413,16 +2437,16 @@ def test_incremental_mrl_store_and_stream(spark, tmp_path):
     in_dir = f"{tmp_path}/in"
     b1.write.mode("overwrite").parquet(f"{in_dir}/part0")
     b2.write.mode("overwrite").parquet(f"{in_dir}/part1")
-    q = start_incremental_mrl(
+    streamed = MrlStore(spark, f"{tmp_path}/streamed", MRL_PREFIX)
+    q = start_store(
         spark,
+        streamed.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/streamed",
         f"{tmp_path}/ckpt",
-        MRL_PREFIX,
+        EMB_STREAM_SCHEMA,
         max_files_per_trigger=1,
     )
     q.awaitTermination(120)
-    streamed = MrlStore(spark, f"{tmp_path}/streamed", MRL_PREFIX)
     assert [
         (r["vec_id"], r["score"])
         for r in streamed.search(
@@ -2491,8 +2515,10 @@ def test_vector_store_ingest_survives_null_and_wrong_dim(spark, tmp_path):
         ("mrl", lambda p: MrlStore(spark, p, MRL_PREFIX)),
     ):
         store = make(f"{tmp_path}/{name}")
-        n_good = store.add_batch(corpus, "b1")
-        n_nasty = store.add_batch(nasty, "b2")
+        store.add_batch(corpus, "b1")
+        store.add_batch(nasty, "b2")
+        n_good = spark.read.parquet(f"{tmp_path}/{name}/batch_id=b1").count()
+        n_nasty = spark.read.parquet(f"{tmp_path}/{name}/batch_id=b2").count()
         assert n_nasty == 3, f"{name}: nasty rows dropped at ingest"
         assert (
             spark.read.parquet(f"{tmp_path}/{name}").count()
@@ -2528,8 +2554,9 @@ def test_incremental_group_store_and_stream(spark, tmp_path):
     )
     from vsphere_event_streaming_spark.state import release_cached
     from vsphere_event_streaming_spark.operators.graph import dedup_groups
-    from vsphere_event_streaming_spark.streaming.dedup_stream import (
-        start_incremental_groups,
+    from vsphere_event_streaming_spark.streaming.store_stream import (
+        PAIR_STREAM_SCHEMA,
+        start_store,
     )
     from vsphere_event_streaming_spark.tables import load
 
@@ -2550,15 +2577,16 @@ def test_incremental_group_store_and_stream(spark, tmp_path):
         pairs.filter((F.col("id_a") + F.col("id_b")) % 3 == b).write.mode(
             "overwrite"
         ).parquet(f"{in_dir}/part{b}")
-    q = start_incremental_groups(
+    store = GroupStore(spark, f"{tmp_path}/gp")
+    q = start_store(
         spark,
+        store.add_batch,
         in_dir + "/part*",
-        f"{tmp_path}/gp",
         f"{tmp_path}/gp_ckpt",
+        PAIR_STREAM_SCHEMA,
         max_files_per_trigger=1,
     )
     q.awaitTermination(180)
-    store = GroupStore(spark, f"{tmp_path}/gp")
     got = sorted(
         (r["doc_id"], r["group_id"]) for r in store.labels().collect()
     )

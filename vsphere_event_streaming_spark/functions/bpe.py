@@ -550,11 +550,10 @@ class BpeVocab(BatchStore):
 
     def add_batch(
         self, docs: DataFrame, batch_id: str, text_col: str = "text"
-    ) -> int:
+    ) -> None:
         """Count the batch's words under the store's pinned alphabet
-        and persist them as an idempotent partition directory.
-        Returns distinct words written."""
-        return self._write(word_vocab(docs, text_col, self.word_re), batch_id)
+        and persist them as an idempotent partition directory."""
+        self._write(word_vocab(docs, text_col, self.word_re), batch_id)
 
     def vocab(self) -> DataFrame:
         """The merged word-frequency table over every ingested batch —

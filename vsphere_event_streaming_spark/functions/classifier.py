@@ -460,10 +460,10 @@ class GramStore(BatchStore):
 
     def add_batch(
         self, emb: DataFrame, batch_id: str, vec_col: str = "embedding"
-    ) -> int:
+    ) -> None:
         """Aggregate the batch's Gram cells and persist them as an
-        idempotent partition directory. Returns cells written (≤ d²)."""
-        return self._write(gram_cells(emb, vec_col), batch_id)
+        idempotent partition directory."""
+        self._write(gram_cells(emb, vec_col), batch_id)
 
     def gram(self) -> dict[tuple[int, int], int]:
         """The merged Gram over every ingested batch — exactly the
@@ -1127,10 +1127,10 @@ class AucCellStore(BatchStore):
         super().__init__(spark, path)
         self.n_buckets = n_buckets
 
-    def add_batch(self, scored: DataFrame, batch_id: str) -> int:
+    def add_batch(self, scored: DataFrame, batch_id: str) -> None:
         """Collapse the scored batch to cells and persist them as an
-        idempotent partition directory. Returns cells written."""
-        return self._write(auc_cells(scored, self.n_buckets), batch_id)
+        idempotent partition directory."""
+        self._write(auc_cells(scored, self.n_buckets), batch_id)
 
     def cells(self) -> DataFrame:
         """The merged cells over every ingested batch — exactly the

@@ -1517,16 +1517,16 @@ class ShingleDfStore(BatchStore):
     corpus itself, so the docs frame passed in must be the union of
     the ingested batches."""
 
-    def add_batch(self, docs: DataFrame, batch_id: str) -> int:
+    def add_batch(self, docs: DataFrame, batch_id: str) -> None:
         """Collapse the batch to (sh, df) cells and persist them as
-        an idempotent partition directory. Returns cells written."""
+        an idempotent partition directory."""
         # the write's eager localCheckpoint is the LAST consumer of
         # the shingle frame shingle_hash_arrays persists, so release
         # it here instead of leaking one cached frame per ingested
         # batch; scoped, because a blanket release_cached() would
         # clobber intermediates a concurrent dedup pipeline still needs
         with scoped():
-            return self._write(shingle_df_cells(docs), batch_id)
+            self._write(shingle_df_cells(docs), batch_id)
 
     def df_table(self) -> DataFrame:
         """The merged (sh, df) table over every ingested batch —
@@ -1566,11 +1566,10 @@ class ExactDedupStore(BatchStore):
     def add_batch(
         self, docs: DataFrame, batch_id: str, text_col: str = "text",
         id_col: str = "doc_id",
-    ) -> int:
+    ) -> None:
         """Collapse the batch to per-hash keeper cells and persist
-        them as an idempotent partition directory. Returns distinct
-        texts written."""
-        return self._write(
+        them as an idempotent partition directory."""
+        self._write(
             docs.groupBy(
                 F.md5(normalize_text(F.col(text_col))).alias("nh")
             ).agg(
@@ -1646,12 +1645,11 @@ class GroupStore(BatchStore):
         batch_id: str,
         id_a: str = "id_a",
         id_b: str = "id_b",
-    ) -> int:
+    ) -> None:
         """Merge one batch of verified near-dup pairs into the stored
         labels. ``pairs`` may reference any doc ids — new docs,
         historical docs, or both (the LshIndex emits new↔history
-        pairs; that is the point). Returns affected label rows
-        written."""
+        pairs; that is the point)."""
         from ..operators.graph import connected_components
 
         # reject a bad token before the CC rounds run their jobs
@@ -1686,7 +1684,7 @@ class GroupStore(BatchStore):
             F.col("vertex").alias("doc_id"),
             F.col("component").alias("group_id"),
         )
-        return self._write(affected, batch_id)
+        self._write(affected, batch_id)
 
     def labels(self) -> DataFrame:
         """The merged ``(doc_id, group_id)`` label table over every

@@ -216,10 +216,10 @@ class QuantileCellStore(BatchStore):
         self.width = width
         self.n_buckets = n_buckets
 
-    def add_batch(self, df: DataFrame, batch_id: str) -> int:
+    def add_batch(self, df: DataFrame, batch_id: str) -> None:
         """Collapse the batch to cells and persist them as an
-        idempotent partition directory. Returns cells written."""
-        return self._write(
+        idempotent partition directory."""
+        self._write(
             quantile_cells(
                 df, self.value_col, self.group_col, self.width,
                 self.n_buckets,
@@ -368,10 +368,10 @@ class RateCellStore(BatchStore):
         self.ts_col = ts_col
         self.window = window
 
-    def add_batch(self, df: DataFrame, batch_id: str) -> int:
+    def add_batch(self, df: DataFrame, batch_id: str) -> None:
         """Collapse the batch to rate cells and persist them as an
-        idempotent partition directory. Returns cells written."""
-        return self._write(
+        idempotent partition directory."""
+        self._write(
             rate_cells(df, self.type_col, self.ts_col, self.window),
             batch_id,
         )
@@ -415,10 +415,10 @@ class CmsStore(BatchStore):
         self.depth = depth
         self.width = width
 
-    def add_batch(self, df: DataFrame, batch_id: str) -> int:
+    def add_batch(self, df: DataFrame, batch_id: str) -> None:
         """Collapse the batch to CMS cells and persist them as an
-        idempotent partition directory. Returns cells written."""
-        return self._write(
+        idempotent partition directory."""
+        self._write(
             cms_cells(df, self.key_col, self.depth, self.width), batch_id
         )
 
@@ -544,11 +544,10 @@ class ActivityStore(BatchStore):
         self.user_col = user_col
         self.ts_col = ts_col
 
-    def add_batch(self, df: DataFrame, batch_id: str) -> int:
+    def add_batch(self, df: DataFrame, batch_id: str) -> None:
         """Collapse the batch to distinct activity rows and persist
-        them as an idempotent partition directory. Returns rows
-        written."""
-        return self._write(
+        them as an idempotent partition directory."""
+        self._write(
             activity_days(df, self.user_col, self.ts_col), batch_id
         )
 
@@ -697,11 +696,10 @@ class BloomStore(BatchStore):
 
     def add_batch(
         self, df: DataFrame, batch_id: str, key_col: str = "key"
-    ) -> int:
+    ) -> None:
         """Collapse the batch to its distinct set-bit positions and
-        persist them as an idempotent partition directory. Returns
-        cells written."""
-        return self._write(bloom_bits(df, key_col, self.m, self.h), batch_id)
+        persist them as an idempotent partition directory."""
+        self._write(bloom_bits(df, key_col, self.m, self.h), batch_id)
 
     def bits(self) -> DataFrame:
         """The merged filter over every ingested batch — exactly the
@@ -845,10 +843,10 @@ class HllStore(BatchStore):
         self.key_col = key_col
         self.group_cols = list(group_cols or [])
 
-    def add_batch(self, df: DataFrame, batch_id: str) -> int:
+    def add_batch(self, df: DataFrame, batch_id: str) -> None:
         """Collapse the batch to register cells and persist them as
-        an idempotent partition directory. Returns cells written."""
-        return self._write(
+        an idempotent partition directory."""
+        self._write(
             hll_cells(df, self.key_col, self.group_cols), batch_id
         )
 

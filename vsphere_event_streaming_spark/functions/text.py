@@ -627,10 +627,9 @@ class TermStatsStore(BatchStore):
 
     def add_batch(
         self, docs, batch_id: str, text_col: str = "text"
-    ) -> int:
+    ) -> None:
         """Collapse the batch to additive term/corpus cells and
-        persist them as an idempotent partition directory. Returns
-        distinct terms written."""
+        persist them as an idempotent partition directory."""
         toks = F.split(F.lower(F.col(text_col)), "[^a-z]+")
         lens = docs.select(
             F.col("doc_id"), F.size(toks).alias("dl")
@@ -659,8 +658,7 @@ class TermStatsStore(BatchStore):
                 F.col("token_sum"), F.lit(0).cast("long")
             ).alias("token_sum"),
         )
-        # minus the one corpus row
-        return self._write(term_cells.unionByName(corpus_cell), batch_id) - 1
+        self._write(term_cells.unionByName(corpus_cell), batch_id)
 
     def df_table(self):
         """Merged ``(term, df)`` over every ingested batch — exactly

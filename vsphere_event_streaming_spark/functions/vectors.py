@@ -1132,9 +1132,9 @@ class IvfIndex(BatchStore):
         batch_id: str,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-    ) -> int:
+    ) -> None:
         """Assign a batch to the frozen centroids and append it as its
-        own idempotent partition directory. Returns rows written."""
+        own idempotent partition directory."""
         assigned = assign_centroids(
             batch.select(
                 F.col(id_col).cast("long").alias("vec_id"),
@@ -1144,7 +1144,7 @@ class IvfIndex(BatchStore):
             "vec_id",
             "embedding",
         ).select("vec_id", "embedding", "centroid_id")
-        return self._write(assigned, batch_id, partition_by="centroid_id")
+        self._write(assigned, batch_id, partition_by="centroid_id")
 
     def search(
         self, query: DataFrame, k: int = 10, nprobe: int = 3
@@ -1219,10 +1219,9 @@ class IvfPqStore(BatchStore):
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         assert_disjoint: bool = False,
-    ) -> int:
+    ) -> None:
         """Assign + PQ-encode a batch against the frozen model and
-        append it as its own idempotent partition directory. Returns
-        rows written.
+        append it as its own idempotent partition directory.
 
         ``assert_disjoint=True`` runs the store's overlap check
         (``BatchStore._assert_disjoint``) on the incoming
@@ -1250,7 +1249,7 @@ class IvfPqStore(BatchStore):
             enc(F.col("embedding")).alias("pq_codes"),
             "centroid_id",
         )
-        return self._write(assigned, batch_id, partition_by="centroid_id")
+        self._write(assigned, batch_id, partition_by="centroid_id")
 
     def search(
         self,
@@ -1412,9 +1411,9 @@ class MrlStore(BatchStore):
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         assert_disjoint: bool = False,
-    ) -> int:
+    ) -> None:
         """Project the batch's prefix column and append it as its own
-        idempotent partition directory. Returns rows written."""
+        idempotent partition directory."""
         if assert_disjoint:
             self._assert_disjoint(
                 batch.select(F.col(id_col).cast("long").alias("vec_id")),
@@ -1428,7 +1427,7 @@ class MrlStore(BatchStore):
                 F.col(vec_col).cast("array<double>"), 1, self.prefix_len
             ).alias("prefix"),
         )
-        return self._write(projected, batch_id)
+        self._write(projected, batch_id)
 
     def search(
         self,

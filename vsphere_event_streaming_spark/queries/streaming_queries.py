@@ -186,7 +186,7 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell partitions, ``anomalies()`` over the merged
     cells bit-identical to this batch query; parity + replay
     idempotence in ``tests/test_streaming.py``), fed by
-    :func:`~..streaming.model_stream.start_incremental_rate_cells`.
+    :func:`~..streaming.store_stream.start_store`.
     The query, the store, and the ingest share :func:`rate_cells` /
     :func:`anomalies_from_cells` so the three can never drift."""
     from ..functions.sketches import anomalies_from_cells, rate_cells
@@ -339,7 +339,7 @@ def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     :class:`~..functions.sketches.ActivityStore` (``retention()``
     over the merged rows bit-identical to this batch query; parity in
     ``tests/test_streaming.py``), fed by
-    :func:`~..streaming.model_stream.start_incremental_activity`.
+    :func:`~..streaming.store_stream.start_store`.
     Query, store, and ingest share :func:`activity_days` /
     :func:`retention_from_days` so the three can never drift."""
     from ..functions.sketches import activity_days, retention_from_days

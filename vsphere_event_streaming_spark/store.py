@@ -23,10 +23,10 @@ anything else before any Spark job runs, so a hostile or garbled id
 cannot escape the store's directory.
 
 **Idempotent overwrite.** :meth:`BatchStore._write` materializes the
-batch's cells (eager ``localCheckpoint``), counts them, and OVERWRITES
-the batch's own partition. Replaying a batch under the same id (a
-retried epoch, a crash between two writes) converges instead of
-duplicating, and other batches' partitions are never touched. The two
+batch's cells (eager ``localCheckpoint``) and OVERWRITES the batch's
+own partition. Replaying a batch under the same id (a retried epoch,
+a crash between two writes) converges instead of duplicating, and
+other batches' partitions are never touched. The two
 LSH indexes compute their candidates/decisions against the history
 BEFORE they write, so a retry never collides with its own half-written
 partition; they overwrite their already-persisted rows directly.
@@ -145,15 +145,13 @@ class BatchStore:
         cells: DataFrame,
         batch_id: str,
         partition_by: str | None = None,
-    ) -> int:
+    ) -> None:
         """Materialize ``cells`` and overwrite the batch's partition
-        with them. Returns the rows written."""
+        with them."""
         part = batch_partition_dir(self.path, batch_id)
         self._check_marker(create=False)
         cells = cells.localCheckpoint(eager=True)
-        n = cells.count()
         self._overwrite(cells, part, partition_by)
-        return n
 
     def _overwrite(
         self, frame: DataFrame, part: str, partition_by: str | None = None

@@ -7,6 +7,14 @@ overwrite makes retries idempotent). Every starter here runs through
 :func:`~.store_stream.start_store`, whose epoch contract makes an epoch
 retry unable to double-ingest bands or duplicate candidate pairs.
 
+The starters here do more per epoch than one store write: the two
+dedup indexes write a side-output partition (candidate pairs,
+keep/drop decisions) and the Bloom stream hashes shingles first. A
+store fed the stream as-is (``ShingleDfStore``, ``TermStatsStore``,
+``ExactDedupStore``, ``GroupStore``, ``BpeVocab``) needs no starter:
+pass its ``add_batch`` to :func:`~.store_stream.start_store` with
+``DOC_STREAM_SCHEMA`` (``PAIR_STREAM_SCHEMA`` for ``GroupStore``).
+
 At 100 TB this is the crawl-ingest topology: a file/queue stream of
 document batches, each micro-batch banding against the full history at
 constant bytes/doc, candidates point-joined downstream for exact
@@ -20,11 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.dedup import LshIndex
 from ..store import batch_partition_dir
-from .store_stream import start_store
-
-#: Schema the document stream must carry (the driver's documents
-#: parquet layout, minus derived columns).
-DOC_STREAM_SCHEMA = "doc_id long, text string"
+from .store_stream import DOC_STREAM_SCHEMA, start_store
 
 
 def start_incremental_dedup(
@@ -126,86 +130,6 @@ def read_semantic_decisions(
     return spark.read.parquet(decisions_dir)
 
 
-def start_incremental_shingle_df(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream ``(doc_id, text)`` batches into a
-    :class:`~..functions.dedup.ShingleDfStore` — the L41 novelty
-    tier's monitoring topology (r9): each epoch collapses to additive
-    ``(sh, df)`` cells; the per-doc novelty of everything ingested
-    reads off the merged df table at any time
-    (``store.novelty(union)``), bit-identical to the batch
-    q_ngram_novelty machinery (cell additivity across doc-disjoint
-    batches; parity asserted in ``tests/test_streaming.py``). Epoch
-    contract: :func:`~.store_stream.start_store`."""
-    from ..functions.dedup import ShingleDfStore
-
-    store = ShingleDfStore(spark, store_dir)
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-def start_incremental_term_stats(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream ``(doc_id, text)`` batches into a
-    :class:`~..functions.text.TermStatsStore` — the hybrid-retrieval
-    serve topology (r10, VERDICT_r9 #7): each epoch collapses to the
-    additive BM25 corpus cells ``(term df) + (n_docs, token_sum)``;
-    BM25 over the ingested corpus reads off the merged cells at any
-    time (``store.bm25(union)``), bit-identical to the batch
-    ``bm25_scores`` (cell additivity across doc-disjoint batches;
-    parity asserted in ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    from ..functions.text import TermStatsStore
-
-    store = TermStatsStore(spark, store_dir)
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-def start_incremental_exact_keepers(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream ``(doc_id, text)`` batches into an
-    :class:`~..functions.dedup.ExactDedupStore` — L1's ingest
-    topology (r10): each epoch collapses to (min, sum)-mergeable
-    ``(nh, keeper_id, copies)`` cells; the exact-dedup keeper table
-    of everything ingested reads off the merged cells at any time
-    (``store.keepers()``), bit-identical to the batch
-    ``exact_dedup_keepers`` (parity asserted in
-    ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    from ..functions.dedup import ExactDedupStore
-
-    store = ExactDedupStore(spark, store_dir)
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
 def start_incremental_bloom(
     spark: SparkSession,
     input_dir: str,
@@ -242,41 +166,5 @@ def start_incremental_bloom(
 
     return start_store(
         spark, process, input_dir, checkpoint_dir, DOC_STREAM_SCHEMA,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-#: Schema a verified-pair stream must carry (the `lsh_verified_pairs`
-#: / `verify_candidate_pairs` output layout).
-PAIR_STREAM_SCHEMA = "id_a long, id_b long, jaccard double"
-
-
-def start_incremental_groups(
-    spark: SparkSession,
-    input_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream VERIFIED near-dup pair batches into a
-    :class:`~..functions.dedup.GroupStore` — the group-label half of
-    the canonical incremental dedup topology (r13, 17th family):
-    :func:`start_incremental_dedup` bands each doc batch against
-    history and emits candidates, the caller's
-    :func:`~..functions.dedup.verify_candidate_pairs` re-scores them
-    exactly, and each epoch of surviving pairs lands here — merged
-    into the stored connected-component labels, so
-    ``store.labels()`` is the keep-one-per-group table of everything
-    ingested at any time, bit-identical to batch ``dedup_groups``
-    over the union (pytest). MIN-LATTICE merge: overlapping or
-    replayed pair batches converge (re-unioning merged pairs is a
-    no-op). Epoch contract: :func:`~.store_stream.start_store`."""
-    from ..functions.dedup import GroupStore
-
-    store = GroupStore(spark, store_dir)
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, PAIR_STREAM_SCHEMA,
         batch_prefix, max_files_per_trigger,
     )

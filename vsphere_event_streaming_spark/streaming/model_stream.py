@@ -12,12 +12,20 @@ Two topologies, matching how real pipelines split train and serve:
   state store, watermark-free). Batch/stream score parity is exact by
   construction (same expression tree); asserted in
   ``tests/test_streaming.py``.
-- **Train path** (:func:`start_incremental_gram`): the quantized Gram
-  cells are ADDITIVE BIGINTs, so the PCA store ingests per-epoch cell
-  batches through :func:`~.store_stream.start_store`, like every
-  other store family, and cannot double-count. Retraining over the
-  streamed store is bit-identical to from-scratch over everything
-  ingested (``GramStore.train``).
+- **Train path** (``GramStore.add_batch`` through
+  :func:`~.store_stream.start_store`): the quantized Gram cells are
+  ADDITIVE BIGINTs, so the PCA store ingests per-epoch cell batches
+  like every other store family and cannot double-count. Retraining
+  over the streamed store is bit-identical to from-scratch over
+  everything ingested (``GramStore.train``).
+
+A store fed the embedding or event stream as-is (``GramStore``,
+``IvfPqStore``, ``MrlStore``, and the sketch stores
+``QuantileCellStore``, ``RateCellStore``, ``CmsStore``,
+``ActivityStore``) needs no starter: pass its ``add_batch`` to
+:func:`~.store_stream.start_store` with the stream's schema. Only
+:func:`start_incremental_auc_cells` keeps one, because it scores each
+epoch before the store write.
 
 At 100 TB: the serve path is the quality-filter stage of an ingest
 topology (score-and-gate each crawl batch as it lands); the train
@@ -31,11 +39,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.classifier import GramStore, logreg_score
-from .store_stream import start_store
-
-#: Schema of streamed embedding batches (the driver corpus's layout).
-EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>, label int"
+from ..functions.classifier import logreg_score
+from .store_stream import EMB_STREAM_SCHEMA, start_store
 
 
 def streaming_scores(
@@ -73,25 +78,6 @@ def start_streaming_scoring(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def start_incremental_gram(
-    spark: SparkSession,
-    input_dir: str,
-    gram_dir: str,
-    checkpoint_dir: str,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream ``(vec_id, embedding, label)`` parquet batches into a
-    :class:`GramStore` (additive cells). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    store = GramStore(spark, gram_dir)
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,
-        batch_prefix, max_files_per_trigger,
     )
 
 
@@ -184,133 +170,6 @@ def streaming_cluster_assignments(
     )
 
 
-def start_incremental_quantile_cells(
-    spark: SparkSession,
-    input_dir: str,
-    cells_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    value_col: str = "value",
-    group_col: str = "event_type",
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream value batches into a
-    :class:`~..functions.sketches.QuantileCellStore` — the L39
-    monitoring topology, the quantile twin of
-    :func:`start_incremental_auc_cells`: each epoch collapses to
-    ≤QB_BUCKETS additive (group, bucket, count) cells; the running
-    per-group quantiles read off the merged cells at any time
-    (``store.quantiles()``), bit-identical to the batch
-    q_percentile_binned over everything ingested (cell additivity;
-    parity asserted in ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    from ..functions.sketches import QuantileCellStore
-
-    store = QuantileCellStore(
-        spark, cells_dir, value_col=value_col, group_col=group_col
-    )
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, schema,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-def start_incremental_rate_cells(
-    spark: SparkSession,
-    input_dir: str,
-    cells_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream event batches into a
-    :class:`~..functions.sketches.RateCellStore` — the T6d monitoring
-    topology, the rate twin of
-    :func:`start_incremental_quantile_cells`: each epoch collapses to
-    one additive BIGINT per (type, tumbling bucket) touched; the
-    running anomaly table reads off the merged cells at any time
-    (``store.anomalies()``), bit-identical to the batch
-    q_events_anomaly over everything ingested (cell additivity;
-    parity asserted in ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    from ..functions.sketches import RateCellStore
-
-    store = RateCellStore(
-        spark, cells_dir, type_col=type_col, ts_col=ts_col
-    )
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, schema,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-def start_incremental_cms_cells(
-    spark: SparkSession,
-    input_dir: str,
-    cells_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    key_col: str,
-    depth: int = 4,
-    width: int = 1024,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream keyed batches into a
-    :class:`~..functions.sketches.CmsStore` — the L27 monitoring
-    topology: each epoch collapses to ≤d×w additive (row, bucket, c)
-    cells; the running sketch and point estimates read off the merged
-    cells at any time (``store.sketch()`` / ``store.estimate()``),
-    bit-identical to a from-scratch cms_build over everything
-    ingested (the textbook CMS cell-wise-sum merge; parity asserted
-    in ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    from ..functions.sketches import CmsStore
-
-    store = CmsStore(spark, cells_dir, key_col, depth, width)
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, schema,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-def start_incremental_activity(
-    spark: SparkSession,
-    input_dir: str,
-    rows_dir: str,
-    checkpoint_dir: str,
-    schema: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream event batches into an
-    :class:`~..functions.sketches.ActivityStore` — the T6f retention
-    topology, the first SET-UNION member of the store tier: each
-    epoch collapses to its distinct (user, day) rows; the running
-    cohort-retention table reads off the merged distinct rows at any
-    time (``store.retention()``), bit-identical to the batch
-    q_events_retention over everything ingested (parity asserted in
-    ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    from ..functions.sketches import ActivityStore
-
-    store = ActivityStore(spark, rows_dir, user_col=user_col, ts_col=ts_col)
-
-    return start_store(
-        spark, store.add_batch, input_dir, checkpoint_dir, schema,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
 def start_incremental_auc_cells(
     spark: SparkSession,
     input_dir: str,
@@ -346,77 +205,6 @@ def start_incremental_auc_cells(
             logreg_score(F.col("embedding"), w_micro).alias("p"),
         )
         store.add_batch(scored, batch_id=batch_id)
-
-    return start_store(
-        spark, process, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-def start_incremental_ivfpq(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    centroids: DataFrame,
-    books: list[list[list[float]]],
-    d: int,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream embedding batches into an
-    :class:`~..functions.vectors.IvfPqStore` — the serve-path ingest
-    for the flagship ANN layout (VERDICT_r10 #3): under FROZEN coarse
-    cells + FROZEN codebooks each epoch is assigned (one broadcast
-    join) and PQ-encoded (one Arrow pass) into its own partition, so
-    the growing serving index never re-reads history. Probe ≡
-    rebuilt-index probe on doc-disjoint ingest (asserted in
-    ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`."""
-    from ..functions.vectors import IvfPqStore
-
-    store = IvfPqStore(spark, index_dir, centroids, books, d)
-
-    def process(batch_df: DataFrame, batch_id: str) -> None:
-        store.add_batch(
-            batch_df.select("vec_id", "embedding"),
-            batch_id=batch_id,
-        )
-
-    return start_store(
-        spark, process, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,
-        batch_prefix, max_files_per_trigger,
-    )
-
-
-def start_incremental_mrl(
-    spark: SparkSession,
-    input_dir: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    prefix_len: int,
-    batch_prefix: str = "b",
-    max_files_per_trigger: int | None = None,
-) -> StreamingQuery:
-    """Stream embedding batches into an
-    :class:`~..functions.vectors.MrlStore` — the serve-path ingest
-    for the Matryoshka prefix-column layout (VERDICT_r11 #4). The
-    prefix projection is a pure per-row function, so each epoch is
-    one codegen ``slice`` over the batch appended as its own
-    partition: no trained state, no history read, no shuffle. Probe ≡ rebuilt ``write_mrl_index`` probe on
-    doc-disjoint ingest and the stage-1 scan stays prefix-only
-    (asserted in ``tests/test_streaming.py``). Epoch contract:
-    :func:`~.store_stream.start_store`.
-    """
-    from ..functions.vectors import MrlStore
-
-    store = MrlStore(spark, index_dir, prefix_len)
-
-    def process(batch_df: DataFrame, batch_id: str) -> None:
-        store.add_batch(
-            batch_df.select("vec_id", "embedding"),
-            batch_id=batch_id,
-        )
 
     return start_store(
         spark, process, input_dir, checkpoint_dir, EMB_STREAM_SCHEMA,

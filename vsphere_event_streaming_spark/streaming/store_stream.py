@@ -1,17 +1,42 @@
 """One streaming entry point for the whole incremental store tier.
 
-Every ``start_incremental_*`` starter builds its store and hands its
-per-epoch ``add`` to :func:`start_store`, which owns the parquet file
-stream, the per-epoch callback, the checkpoint and the
-epoch-to-``batch_id`` naming.
+A caller builds its store (``store.py``) and hands the store's
+``add_batch`` — or its own per-epoch ``add`` — to :func:`start_store`,
+which owns the parquet file stream, the per-epoch callback, the
+checkpoint and the epoch-to-``batch_id`` naming::
+
+    store = GramStore(spark, gram_dir)
+    q = start_store(
+        spark, store.add_batch, input_dir, checkpoint_dir,
+        EMB_STREAM_SCHEMA, max_files_per_trigger=1,
+    )
+    q.awaitTermination()
+    store.train()
+
+The stream schemas below are the layouts the streamed stores read.
 """
 
 from __future__ import annotations
 
+import logging
+import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
+
+log = logging.getLogger(__name__)
+
+#: A document stream (the driver's documents parquet layout, minus
+#: derived columns).
+DOC_STREAM_SCHEMA = "doc_id long, text string"
+
+#: An embedding stream (the driver corpus's embeddings layout).
+EMB_STREAM_SCHEMA = "vec_id long, embedding array<float>, label int"
+
+#: A verified-pair stream (the `lsh_verified_pairs` /
+#: `verify_candidate_pairs` output layout).
+PAIR_STREAM_SCHEMA = "id_a long, id_b long, jaccard double"
 
 
 def start_store(
@@ -26,7 +51,8 @@ def start_store(
     """Stream the parquet files under ``input_dir`` (read with
     ``schema``) into ``add(batch_df, batch_id)``, one call per epoch
     with ``batch_id = f"{batch_prefix}{epoch_id}"``, until the files
-    present at start are consumed (``availableNow``).
+    present at start are consumed (``availableNow``). Each epoch logs
+    one DEBUG line: its batch id and the seconds spent in ``add``.
 
     Every store writes its epoch as an idempotent batch partition, and
     Structured Streaming replays a failed epoch with the SAME epoch
@@ -46,16 +72,21 @@ def start_store(
     ``max_files_per_trigger=1`` gives one epoch per input file, which
     forces the per-batch store-growth path instead of one big epoch.
     """
+
+    def epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        batch_id = f"{batch_prefix}{epoch_id}"
+        t0 = time.perf_counter()
+        add(batch_df, batch_id)
+        log.debug(
+            "epoch %s: add %.3fs", batch_id, time.perf_counter() - t0
+        )
+
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return (
         reader.parquet(input_dir)
-        .writeStream.foreachBatch(
-            lambda batch_df, epoch_id: add(
-                batch_df, f"{batch_prefix}{epoch_id}"
-            )
-        )
+        .writeStream.foreachBatch(epoch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()

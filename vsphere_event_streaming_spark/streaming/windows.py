@@ -48,39 +48,6 @@ def streaming_dedup(
     return stream.withWatermark(ts_col, watermark).dropDuplicates([key_col])
 
 
-def compact_log(
-    spark,
-    log_dir: str,
-    max_segment_size: int = 1000,
-) -> int:
-    """T3: retention job — rewrite the sink keeping the newest
-    2×segment records (the reference's active+history purge,
-    README.md:177-184). Returns retained row count.
-
-    At 100 TB the sink is partitioned by offset range and this drops
-    whole partitions (metadata-only); the rewrite below is the
-    unpartitioned small-sink form.
-    """
-    from ..log.model import retention_filter
-    from .ingest import LOG_SCHEMA_DDL
-
-    df = spark.read.schema(LOG_SCHEMA_DDL).parquet(log_dir)
-    kept = retention_filter(df, max_segment_size)
-    # two-phase rewrite: stage then swap, so readers never see a
-    # half-truncated log
-    staged = kept.cache()
-    n = staged.count()
-    tmp = log_dir.rstrip("/") + ".compact"
-    staged.write.mode("overwrite").parquet(tmp)
-    staged.unpersist()
-
-    import shutil
-
-    shutil.rmtree(log_dir)
-    shutil.move(tmp, log_dir)
-    return n
-
-
 def purge_segments(
     spark, log_dir: str, keep_segments: int = 2
 ) -> list[int]:
@@ -89,8 +56,7 @@ def purge_segments(
     the older one when the active fills (README.md:177-184). On the
     segment-partitioned sink (``start_ingest(segment_size=...)``),
     purge = drop the oldest ``segment=N`` directories — metadata-only,
-    no rewrite, unlike :func:`compact_log`'s filter-and-rewrite on the
-    unpartitioned layout.
+    no rewrite.
 
     Returns the purged segment numbers (ascending). At 100 TB this is
     the only retention form that works: deleting directories is O(1)
